@@ -21,8 +21,15 @@ import hashlib
 import json
 import os
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from databricks_etl_pipelines_spark.operators import local_probe
 
 
 def _kr_fold(s: str) -> int:
@@ -33,6 +40,29 @@ def _kr_fold(s: str) -> int:
     for c in hashlib.md5(s.encode("utf-8")).hexdigest():
         acc = (acc * 257 + ord(c)) % 2147483647
     return acc
+
+
+def _strict_log(spark: SparkSession, x: float) -> float:
+    """Driver-side twin of Spark's ``log``, which is
+    ``java.lang.StrictMath.log``: called through the Py4J gateway, one
+    call per distinct query term. ``math.log`` and ``np.log`` differ from
+    StrictMath by 1 ulp on some (N, df) pairs, which can flip a
+    ``stable_round`` boundary, so the driver-path idf must use this to
+    stay bit-identical to the Spark path (the same parity rule as
+    :func:`_kr_fold`)."""
+    return float(spark._jvm.java.lang.StrictMath.log(float(x)))
+
+
+def _underfill_error(
+    matched: int, ordered: tuple[str, ...], k: int
+) -> ValueError:
+    return ValueError(
+        f"probe_bm25: only {matched} documents match any of "
+        f"{ordered} but k={k} — the indexed top-k would "
+        "diverge from the full-scan ranking (which pads with "
+        "zero-score docs). Use the full-scan query, lower k, "
+        "or pass strict=False to accept fewer rows."
+    )
 
 
 class TornIndexError(RuntimeError):
@@ -252,13 +282,18 @@ class InvertedTextIndex:
 
         Return contract: with ``strict=True`` the result is an EAGERLY
         materialized ≤ k-row local relation — values are frozen at call
-        time (the posting cache is released after the top-k collect),
-        the pruning plan is no longer inspectable on the returned
-        DataFrame (inspect with ``strict=False``), and row order is
-        positional only — re-sort by (score_bm25 DESC, doc_id)
-        downstream if ordering matters after any shuffle. With
-        ``strict=False`` the result stays lazy with the pruned-scan
-        plan attached."""
+        time, the pruning plan is no longer inspectable on the returned
+        DataFrame, and row order is positional only — re-sort by
+        (score_bm25 DESC, doc_id) downstream if ordering matters after
+        any shuffle. A small probe, whose ``wb=`` bucket directories
+        hold less than ``local_probe.LOCAL_PROBE_MAX_BYTES``, is read and
+        scored on the driver and runs no Spark job; its schema, rows and
+        doubles equal the Spark path's (idf via StrictMath, see
+        :func:`_strict_log`). A larger one runs the Spark path and
+        releases its posting cache after the top-k collect. Inspect the
+        pruning with ``strict=False``, or on an index above the
+        threshold: with ``strict=False`` the result stays lazy with the
+        pruned-scan plan attached."""
         from databricks_etl_pipelines_spark.functions.numeric import (
             stable_round,
         )
@@ -275,8 +310,17 @@ class InvertedTextIndex:
         buckets = sorted(
             {_kr_fold(t) % meta["n_buckets"] for t in ordered}
         )
+        postings_root = os.path.join(self.root, self.POSTINGS)
+        if strict:
+            files = local_probe.probed_files(postings_root, "wb", buckets)
+            if files is not None:
+                local = self._probe_local(
+                    spark, files, ordered, n_docs, sum_dl, k, k1, b
+                )
+                if local is not None:
+                    return local
         postings = (
-            spark.read.parquet(os.path.join(self.root, self.POSTINGS))
+            spark.read.parquet(postings_root)
             .filter(F.col("wb").isin(buckets))
             .filter(F.col("word").isin(*ordered))
         )
@@ -335,13 +379,7 @@ class InvertedTextIndex:
             matched = piv.count()
             if matched < k:
                 piv.unpersist()
-                raise ValueError(
-                    f"probe_bm25: only {matched} documents match any of "
-                    f"{ordered} but k={k} — the indexed top-k would "
-                    "diverge from the full-scan ranking (which pads with "
-                    "zero-score docs). Use the full-scan query, lower k, "
-                    "or pass strict=False to accept fewer rows."
-                )
+                raise _underfill_error(matched, ordered, k)
         score = term_score(ordered[0])
         for t in ordered[1:]:
             score = score + term_score(t)
@@ -366,3 +404,82 @@ class InvertedTextIndex:
                 piv.unpersist()
             return spark.createDataFrame(rows, ranked.schema)
         return ranked
+
+    @staticmethod
+    def _probe_local(
+        spark: SparkSession,
+        files: list[str],
+        ordered: tuple[str, ...],
+        n_docs: int,
+        sum_dl: int,
+        k: int,
+        k1: float,
+        b: float,
+    ) -> DataFrame | None:
+        """The strict probe on the driver: the Spark path's groupBy,
+        idf, fold and ``stable_round`` replayed in numpy op for op, so
+        the rows, their order, the schema and every double are the
+        same. None when a NULL, or files of differing schemas, need the
+        Spark path's semantics."""
+        table = local_probe.read_files(
+            files, ["word", "doc_id", "tf", "n_tokens"]
+        )
+        if table is None:
+            return None
+        table = table.filter(
+            pc.is_in(table["word"], value_set=pa.array(ordered))
+        )
+        if local_probe.has_nulls(table):
+            return None
+        postings = table.to_pandas()
+        # one row per (doc_id, n_tokens) group, a max(tf) column per term
+        tf = (
+            postings.groupby(["doc_id", "n_tokens", "word"])["tf"]
+            .max()
+            .unstack("word", fill_value=0)
+            .reindex(columns=list(ordered), fill_value=0)
+            .astype("int64")
+        )
+        if len(tf) < k:
+            raise _underfill_error(len(tf), ordered, k)
+        df = postings["word"].value_counts()
+        n_tokens = tf.index.get_level_values("n_tokens").to_numpy()
+        avgdl = float(sum_dl) / float(n_docs)
+
+        def term_score(t: str) -> np.ndarray:
+            # a term absent from the WHOLE corpus contributes exact +0.0
+            idf = 0.0
+            if t in df.index:
+                d = float(df[t])
+                idf = _strict_log(
+                    spark, 1.0 + ((float(n_docs) - d) + 0.5) / (d + 0.5)
+                )
+            tf_t = tf[t].to_numpy()
+            return idf * (
+                (tf_t * (k1 + 1.0))
+                / (tf_t + k1 * ((1.0 - b) + b * (n_tokens / avgdl)))
+            )
+
+        score = term_score(ordered[0])
+        for t in ordered[1:]:
+            score = score + term_score(t)
+        score = np.floor(score * 10**6 + 0.5) / 10**6  # stable_round(…, 6)
+        doc_ids = tf.index.get_level_values("doc_id").to_numpy()
+        order = local_probe.top_k_order(score, doc_ids, k)
+        doc_type = table.schema.field("doc_id").type
+        ntok_type = table.schema.field("n_tokens").type
+        schema = StructType(
+            [
+                StructField("doc_id", from_arrow_type(doc_type)),
+                StructField("n_tokens", from_arrow_type(ntok_type)),
+                *[StructField(f"tf_{t}", LongType(), False) for t in ordered],
+                StructField("score_bm25", DoubleType()),
+            ]
+        )
+        columns = {
+            "doc_id": pa.array(doc_ids[order], doc_type),
+            "n_tokens": pa.array(n_tokens[order], ntok_type),
+            **{f"tf_{t}": pa.array(tf[t].to_numpy()[order]) for t in ordered},
+            "score_bm25": pa.array(score[order]),
+        }
+        return spark.createDataFrame(pa.table(columns), schema)

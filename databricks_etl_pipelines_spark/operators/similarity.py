@@ -26,10 +26,14 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import DoubleType, StructField, StructType
 
+from databricks_etl_pipelines_spark.operators import local_probe
 from databricks_etl_pipelines_spark.session import invocation_pin
 
 from databricks_etl_pipelines_spark.functions.vectors import (
@@ -1320,6 +1324,55 @@ def _py_sq_l2(a: Sequence[float], b: Sequence[float]) -> float:
     return acc
 
 
+def _cosine_topk_local(
+    spark: SparkSession,
+    files: list[str],
+    qv: list[float],
+    id_col: str,
+    k: int,
+) -> DataFrame | None:
+    """:class:`DetIvfIndex`'s probe on the driver: :func:`cosine` in
+    numpy op for op (strict left-fold dot and norms, ``nullif`` of a zero
+    norm product to NULL) and the same ordering. None when the list
+    files' schemas differ, the stored vectors hold NULLs, non-finite
+    values or a length other than the query's, or a cosine is NaN: the
+    Spark path keeps those semantics."""
+    table = local_probe.read_files(files, ["id", "v"])
+    if table is None or local_probe.has_nulls(table):
+        return None
+    vecs = table["v"].combine_chunks()
+    q = np.asarray(qv, dtype=np.float64)
+    if not np.all(vecs.value_lengths().to_numpy() == len(q)):
+        return None
+    mat = vecs.flatten().to_numpy().reshape(len(vecs), len(q))
+    if not (np.isfinite(mat).all() and np.isfinite(q).all()):
+        return None
+    dot = local_probe.left_fold_sum(mat * q)
+    norms = np.sqrt(local_probe.left_fold_sum(mat * mat)) * np.sqrt(
+        local_probe.left_fold_sum((q * q)[None, :])
+    )
+    nonzero = norms != 0.0
+    cos = np.full(len(vecs), np.nan)
+    np.divide(dot, norms, out=cos, where=nonzero)
+    if np.isnan(cos[nonzero]).any():
+        return None
+    ids = table["id"].to_numpy()
+    order = local_probe.top_k_order(cos, ids, k)
+    id_type = table.schema.field("id").type
+    schema = StructType(
+        [
+            StructField(id_col, from_arrow_type(id_type)),
+            StructField("cosine_sim", DoubleType()),
+        ]
+    )
+    columns = {
+        id_col: pa.array(ids[order], id_type),
+        # NaN here stands for NULL
+        "cosine_sim": pa.array(cos[order], from_pandas=True),
+    }
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 class DetIvfIndex:
     """Persisted deterministic-quantizer IVF index with INCREMENTAL
     append — the streaming-ingest closure of the cross-engine IVF family.
@@ -1381,8 +1434,18 @@ class DetIvfIndex:
 
     def append(self, batch: DataFrame, vec_col: str, id_col: str) -> None:
         spark = batch.sparkSession
+        rows = self._centroid_rows()
+        # an Arrow local relation (cid bigint, cv array<double>):
+        # broadcasting it needs no Python-worker job
         cent = spark.createDataFrame(
-            self._centroid_rows(), "cid bigint, cv array<double>"
+            pa.table(
+                {
+                    "cid": pa.array([c for c, _ in rows], pa.int64()),
+                    "cv": pa.array(
+                        [v for _, v in rows], pa.list_(pa.float64())
+                    ),
+                }
+            )
         )
         base = batch.select(
             F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
@@ -1407,6 +1470,19 @@ class DetIvfIndex:
         k: int = 10,
         nprobe: int = 4,
     ) -> DataFrame:
+        """Top-k ids by exact cosine to ``query`` (``cosine_sim`` DESC,
+        then ``id_col``) within the ``nprobe`` lists whose centroids are
+        nearest by the strict-fold squared L2 (ties to the lower list id).
+
+        Return contract: when the probed ``list_id=`` directories hold
+        less than ``local_probe.LOCAL_PROBE_MAX_BYTES``, the probe reads
+        them on the driver and returns an EAGER ≤ k-row local relation:
+        values are frozen at call time and ``.collect()`` runs no Spark
+        job. Its schema, row order and doubles equal the Spark path's
+        (strict-fold dot and norms, zero norms to NULL sorted last). The
+        pruning plan is then not inspectable on the result; inspect it
+        on an index above the threshold, where the result stays lazy
+        with ``PartitionFilters: [list_id …]`` on the scan."""
         qv = [float(x) for x in query]
         probe = [
             cid
@@ -1415,6 +1491,11 @@ class DetIvfIndex:
                 key=lambda t: (t[1], t[0]),
             )[:nprobe]
         ]
+        files = local_probe.probed_files(self._lists, "list_id", probe)
+        if files is not None:
+            local = _cosine_topk_local(spark, files, qv, id_col, k)
+            if local is not None:
+                return local
         q = F.transform(vec_lit(query), lambda x: x.cast("double"))
         return (
             spark.read.parquet(self._lists)

@@ -1563,12 +1563,19 @@ def test_preference_pairs_crafted_pool(spark):
     assert got[1].chosen_score - got[1].rejected_score == 40
 
 
-def test_det_ivf_incremental_append_matches_oneshot(spark, sf_dir):
+def test_det_ivf_incremental_append_matches_oneshot(
+    spark, sf_dir, monkeypatch
+):
     """Build-on-half + append-half must probe identically to a one-shot
-    build with the SAME frozen quantizer, and the probe plan must read
-    only the probed list partitions (hive pruning)."""
+    build with the SAME frozen quantizer, and the probe must read only
+    the probed list partitions: hive pruning in the Spark path's plan,
+    and only the nprobe probed list_id= directories on the driver path."""
+    import os
+
+    from databricks_etl_pipelines_spark.operators import local_probe
     from databricks_etl_pipelines_spark.operators.similarity import (
         DetIvfIndex,
+        _py_sq_l2,
     )
     from pyspark.sql import functions as F
 
@@ -1603,10 +1610,29 @@ def test_det_ivf_incremental_append_matches_oneshot(spark, sf_dir):
          for r in other.probe(spark, q, "vec_id", k=10, nprobe=4).collect()]
     assert a == b and len(a) == 10
 
+    # driver path (the index is below the threshold): it reads files of
+    # exactly the nprobe nearest lists' directories
+    nearest = sorted(
+        incr._centroid_rows(), key=lambda c: (_py_sq_l2(q, c[1]), c[0])
+    )[:4]
+    read = []
+    real_read = local_probe.read_files
+
+    def spy(files, columns):
+        read.extend(files)
+        return real_read(files, columns)
+
+    monkeypatch.setattr(local_probe, "read_files", spy)
+    assert [(r.vec_id, round(r.cosine_sim, 9)) for r in incr.probe(
+        spark, q, "vec_id", k=10, nprobe=4).collect()] == a
+    dirs = {os.path.basename(os.path.dirname(f)) for f in read}
+    assert dirs == {f"list_id={cid}" for cid, _ in nearest}
+
+    # forced Spark path: the partition filter reached the scan
+    monkeypatch.setattr(local_probe, "LOCAL_PROBE_MAX_BYTES", 0)
     probed = incr.probe(spark, q, "vec_id", k=10, nprobe=4)
-    probed.collect()
+    assert [(r.vec_id, round(r.cosine_sim, 9)) for r in probed.collect()] == a
     plan = probed._jdf.queryExecution().executedPlan().toString()
-    # partition filter reached the scan: the hive layout prunes list dirs
     assert "list_id" in plan and "PartitionFilters: [list_id" in plan.replace(
         "PartitionFilters: [isnotnull(list_id", "PartitionFilters: [list_id"
     )

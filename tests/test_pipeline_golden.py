@@ -126,6 +126,9 @@ def test_time_travel(spark, pipeline):
 
 
 def test_optimize_compaction_and_clustering(spark, tmp_path):
+    import glob
+    import os
+
     from pyspark.sql import functions as F
 
     from databricks_etl_pipelines_spark.sources.managed_table import ManagedTable
@@ -136,9 +139,11 @@ def test_optimize_compaction_and_clustering(spark, tmp_path):
         (F.col("id") % 7).alias("k"),
         (F.col("id") * 3 % 100).alias("v"),
     )
-    mt.create_or_overwrite(df.repartition(16))  # simulate many small files
-    before = mt.read(spark)
-    assert before.rdd.getNumPartitions() >= 16
+    v0 = mt.create_or_overwrite(df.repartition(16))  # simulate many small files
+    # the written layout, not the read splits: on few cores Spark packs
+    # small files into fewer splits than files
+    written = glob.glob(os.path.join(str(tmp_path / "t"), f"_v{v0}", "part-*"))
+    assert len(written) >= 16
 
     mt.optimize(spark, target_partitions=2)
     compacted = mt.read(spark)
@@ -156,9 +161,6 @@ def test_optimize_compaction_and_clustering(spark, tmp_path):
     # every file. Margins are loose because range-exchange boundary
     # sampling is seeded randomly per run (observed dk<=5, vspan<=49 over
     # trials; full domains are 7 and ~99).
-    import glob
-    import os
-
     files = glob.glob(os.path.join(str(tmp_path / "t"), f"_v{v}", "part-*"))
     assert len(files) >= 4
     dks, vspans = [], []
