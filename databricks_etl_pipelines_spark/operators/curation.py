@@ -1514,8 +1514,8 @@ def leakage_safe_split(
     scale. At 100 TB pass ``minhash_lsh_dedup_pairs``: PPJoin's output
     (and wall) grows with the true-pair count, which is quadratic in the
     copy multiplicity of replicated docs, while banded MinHash stays
-    bounded by bucket co-occurrence (measured in tools/scale_dedup.py /
-    scale_split.py: 25× rows → PPJoin 87 s vs MinHash 11.5 s). Both
+    bounded by bucket co-occurrence (measured at 25× replicated rows:
+    PPJoin 87 s vs MinHash 11.5 s). Both
     generators verify candidates with exact Jaccard ≥ threshold, so at any
     LSH parameterization with recall ~1 at the threshold the resulting
     components — and therefore the split — agree (pinned by

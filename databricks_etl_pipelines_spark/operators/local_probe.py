@@ -17,16 +17,23 @@ IEEE op order, and returns its ≤ k rows as a local relation built from
 an Arrow table (with or without the session's Arrow conf). No Spark job
 runs, neither in the probe nor in the caller's ``.collect()``. Larger
 probes take the Spark path unchanged.
+
+Appends read the stored id type the same way, from a part file's footer
+(:func:`cast_to_stored`), so an index never holds files of two schemas.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterable, Sequence
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # A cap on driver memory, not a measured crossover. The driver path holds
 # one probe's input in memory as an Arrow table. A 20k-doc index in 2
@@ -70,6 +77,31 @@ def read_files(files: Sequence[str], columns: list[str]) -> pa.Table | None:
     if any(not t.schema.equals(tables[0].schema) for t in tables[1:]):
         return None
     return pa.concat_tables(tables)
+
+
+def cast_to_stored(
+    df: DataFrame, col: str, root: str, stored_col: str
+) -> DataFrame:
+    """``df`` with ``col`` cast to the type ``stored_col`` has in the
+    index files under ``root``, so an append never leaves files of two
+    schemas (Spark's probe reads one footer's schema and fails on the
+    other files). The type comes from the Spark schema in the footer of
+    the first part file found: no Spark job runs."""
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames.sort()
+        parts = sorted(f for f in filenames if not f.startswith(("_", ".")))
+        if not parts:
+            continue
+        footer = pq.read_schema(os.path.join(dirpath, parts[0])).metadata or {}
+        row = footer.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if row is None:
+            return df
+        schema = StructType.fromJson(json.loads(row))
+        want = schema[stored_col].dataType
+        if df.schema[col].dataType == want:
+            return df
+        return df.withColumn(col, F.col(col).cast(want))
+    return df
 
 
 def has_nulls(table: pa.Table) -> bool:

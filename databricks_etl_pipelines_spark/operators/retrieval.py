@@ -229,6 +229,9 @@ class InvertedTextIndex:
         self._check_not_torn()
         with open(os.path.join(self.root, self.META)) as f:
             meta = json.load(f)
+        docs = local_probe.cast_to_stored(
+            docs, id_col, os.path.join(self.root, self.POSTINGS), "doc_id"
+        )
         postings, dl = self._postings(
             docs, text_col, id_col, meta["n_buckets"]
         )

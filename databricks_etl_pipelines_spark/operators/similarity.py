@@ -1447,6 +1447,7 @@ class DetIvfIndex:
                 }
             )
         )
+        batch = local_probe.cast_to_stored(batch, id_col, self._lists, "id")
         base = batch.select(
             F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
         )

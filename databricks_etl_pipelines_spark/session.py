@@ -99,13 +99,20 @@ def invocation_pin(df):
     engine pin sites route through here; sites whose CORRECTNESS depends
     on compute-once semantics (e.g. the packing planner's sampled range
     partitioning) call ``localCheckpoint`` directly instead and say why.
+    Any other conf value raises ``ValueError``: a typo must not silently
+    select the default.
     """
     try:
         mode = df.sparkSession.conf.get(PIN_STRATEGY_CONF, "localCheckpoint")
     except Exception:  # pragma: no cover - defensive: conf always readable
         mode = "localCheckpoint"
+    if mode == "localCheckpoint":
+        return df.localCheckpoint(eager=False)
     if mode == "persist":
         return df.persist()
     if mode == "none":
         return df
-    return df.localCheckpoint(eager=False)
+    raise ValueError(
+        f"unknown {PIN_STRATEGY_CONF}={mode!r}; "
+        "use 'localCheckpoint', 'persist' or 'none'"
+    )

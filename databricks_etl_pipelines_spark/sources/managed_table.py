@@ -3,12 +3,13 @@ plain parquet.
 
 The reference relies on Delta Lake for keyed MERGE upserts (02:174-184),
 DESCRIBE HISTORY and VERSION AS OF (01:252, 03:222), and append/overwrite
-sinks. delta-spark isn't available in this environment, so this module
-provides the same capability surface with a minimal version-directory
-layout; when delta-spark IS importable, ``merge_upsert`` delegates to the
-real ``DeltaTable.merge``.
+sinks. This module provides the same capability surface on plain parquet
+with a minimal version-directory layout; it does not use delta-spark.
 
 Layout:  <root>/_v{N}/part-*.parquet  +  <root>/_log.json (version manifest)
+
+Every version is made by ``ManagedTable._commit``: it picks ``N``, writes
+``_v{N}``, carries untouched buckets over and appends the manifest entry.
 
 Semantics mirrored from Delta MERGE whenMatchedUpdateAll /
 whenNotMatchedInsertAll: for keys present in the source, the source row
@@ -37,14 +38,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-try:  # pragma: no cover - depends on environment
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except Exception:  # pragma: no cover
-    DeltaTable = None
-    HAVE_DELTA = False
 
 BUCKET_COL = "__bucket"
 
@@ -271,21 +264,9 @@ class ManagedTable:
         keys = list(keys)
         want = keys_df.select(*keys).distinct()
         spec = self.bucket_spec()
-        if spec and list(spec[0]) == keys:
-            bkeys, nb = spec
-            bucket_ids = sorted(
-                r[0]
-                for r in want.select(
-                    _bucket_expr(bkeys, nb).alias(BUCKET_COL)
-                )
-                .distinct()
-                .collect()
-            )
-            base = (
-                self._read_internal(spark, self.latest_version())
-                .filter(F.col(BUCKET_COL).isin(bucket_ids))
-                .drop(BUCKET_COL)
-            )
+        if spec and spec[0] == keys:
+            _, _, prior = self._touched_buckets(spark, want, *spec)
+            base = prior.drop(BUCKET_COL)
         else:
             base = self.read(spark)
         return base.join(want, keys, "left_semi")
@@ -320,8 +301,6 @@ class ManagedTable:
         version numbers; their history entries are retained but flagged
         ``vacuumed`` (lineage stays auditable, data does not).
         """
-        import shutil
-
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         log = _read_log(self.root)
@@ -354,19 +333,78 @@ class ManagedTable:
         operation: str,
         partition_by: Sequence[str] | None = None,
         meta: dict | None = None,
+        spec: tuple[list[str], int] | None = None,
+        touched: Sequence[int] | None = None,
     ) -> int:
+        """Write ``df`` as version N+1 and append its manifest entry — the
+        one place a version is made.
+
+        ``spec=(keys, n_buckets)`` writes the bucket layout: the bucket
+        column is computed if ``df`` lacks it, and the shuffle is aligned
+        with the layout (partition by bucket before the partitioned write,
+        so each bucket dir is written by its own task: ~1 file per bucket
+        instead of shuffle.partitions files per bucket). ``touched`` makes
+        it a pruned commit: ``df`` holds only those buckets, and every
+        other bucket of the previous version is carried over by hardlink —
+        no data IO, and a pytest can assert byte-identity across
+        versions."""
         log = _read_log(self.root)
         v = (log[-1]["version"] + 1) if log else 0
         path = self._version_dir(v)
+        stamps: dict = {}
+        if spec:
+            keys, n_buckets = spec
+            if BUCKET_COL not in df.columns:
+                df = df.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+            width = n_buckets if touched is None else max(len(touched), 1)
+            df = df.repartition(width, BUCKET_COL)
+            partition_by = [BUCKET_COL]
+            stamps = {"bucket_keys": list(keys), "n_buckets": n_buckets}
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        if touched is not None:
+            touched_set = set(touched)
+            prev_dir = self._version_dir(log[-1]["version"])
+            for bdir in glob.glob(os.path.join(prev_dir, f"{BUCKET_COL}=*")):
+                if int(bdir.rsplit("=", 1)[1]) not in touched_set:
+                    _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
+            stamps["buckets_rewritten"] = len(touched)
         entry = {"version": v, "operation": operation, "timestamp": time.time()}
+        entry.update(stamps)
         entry.update(meta or {})
         log.append(entry)
         _write_log(self.root, log)
         return v
+
+    def _touched_buckets(
+        self, spark: SparkSession, rows: DataFrame, keys: list[str], n_buckets: int
+    ) -> tuple[DataFrame, list[int], DataFrame]:
+        """``rows`` with its bucket column, the sorted bucket ids it hashes
+        into, and the latest version's rows in those buckets (bucket column
+        kept). The id set is at most n_buckets small ints via one distinct —
+        bounded driver traffic regardless of table or input size."""
+        rows = rows.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+        touched = sorted(r[0] for r in rows.select(BUCKET_COL).distinct().collect())
+        prior = self._read_internal(spark).filter(F.col(BUCKET_COL).isin(touched))
+        return rows, touched, prior
+
+    @staticmethod
+    def _drift_gate(
+        prior: DataFrame, incoming: DataFrame, op: str, merge_schema: bool
+    ) -> bool:
+        """True if the column NAME sets differ; fails unless
+        ``merge_schema``, and on any shared-column type change."""
+        drifted = set(prior.columns) != set(incoming.columns)
+        if drifted and not merge_schema:
+            raise ValueError(
+                f"{op} schema drift (use merge_schema=True): "
+                f"table={sorted(prior.columns)} "
+                f"incoming={sorted(incoming.columns)}"
+            )
+        _check_type_drift(prior, incoming, op)
+        return drifted
 
     def create_or_overwrite(
         self,
@@ -438,20 +476,10 @@ class ManagedTable:
                     stacklevel=2,
                 )
             meta["fold_checkpoint"] = None  # reset tombstone
-        if bucket_by:
-            if partition_by:
-                raise ValueError("bucket_by and partition_by are exclusive")
-            keys = list(bucket_by)
-            bucketed = df.withColumn(
-                BUCKET_COL, _bucket_expr(keys, n_buckets)
-            ).repartition(n_buckets, BUCKET_COL)  # aligned write: ~1 file/bucket
-            return self._commit(
-                bucketed,
-                "overwrite",
-                [BUCKET_COL],
-                {"bucket_keys": keys, "n_buckets": n_buckets, **meta},
-            )
-        return self._commit(df, "overwrite", partition_by, meta)
+        if bucket_by and partition_by:
+            raise ValueError("bucket_by and partition_by are exclusive")
+        spec = (list(bucket_by), n_buckets) if bucket_by else None
+        return self._commit(df, "overwrite", partition_by, meta, spec)
 
     def append(
         self,
@@ -467,84 +495,27 @@ class ManagedTable:
         every version dir stays single-schema so ordinary reads never
         need parquet schema merging) — subsequent appends/merges are
         pruned again."""
-        exists = self.exists()
-        spec = self.bucket_spec() if exists else None
-        prior = self.read(df.sparkSession) if exists else None
-        drifted = exists and set(prior.columns) != set(df.columns)
-        if drifted and not merge_schema:
-            raise ValueError(
-                "append schema drift (use merge_schema=True): "
-                f"table={sorted(prior.columns)} incoming={sorted(df.columns)}"
-            )
-        if exists:
-            _check_type_drift(prior, df, "append")
-        if spec:
-            if drifted:
-                keys, nb = spec
-                widened = prior.unionByName(df, allowMissingColumns=True)
-                bucketed = widened.withColumn(
-                    BUCKET_COL, _bucket_expr(keys, nb)
-                ).repartition(nb, BUCKET_COL)
-                return self._commit(
-                    bucketed,
-                    "append",
-                    [BUCKET_COL],
-                    {
-                        "bucket_keys": keys,
-                        "n_buckets": nb,
-                        "schema_evolved": True,
-                    },
-                )
-            return self._append_bucket_pruned(df, *spec)
-        if exists:
-            df = prior.unionByName(df, allowMissingColumns=drifted)
-        return self._commit(df, "append", partition_by)
-
-    def _append_bucket_pruned(
-        self, df: DataFrame, keys: list[str], n_buckets: int
-    ) -> int:
-        """Append on a bucketed table: rewrite only buckets receiving new
-        rows (prior bucket contents unioned in), hardlink the rest — same
-        O(touched/total) write amplification as the pruned MERGE."""
+        if not self.exists():
+            return self._commit(df, "append", partition_by)
         spark = df.sparkSession
-        incoming = df.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        touched = sorted(
-            r[0] for r in incoming.select(BUCKET_COL).distinct().collect()
-        )
-        prev_v = self.latest_version()
-        prior_touched = self._read_internal(spark, prev_v).filter(
-            F.col(BUCKET_COL).isin(touched)
-        )
-        combined = prior_touched.unionByName(incoming)
-
-        log = _read_log(self.root)
-        v = log[-1]["version"] + 1
-        path = self._version_dir(v)
-        (
-            combined.repartition(max(len(touched), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        touched_set = set(touched)
-        for bdir in glob.glob(
-            os.path.join(self._version_dir(prev_v), f"{BUCKET_COL}=*")
-        ):
-            b = int(os.path.basename(bdir).split("=", 1)[1])
-            if b not in touched_set:
-                _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
-        log.append(
-            {
-                "version": v,
-                "operation": "append",
-                "timestamp": time.time(),
-                "bucket_keys": keys,
-                "n_buckets": n_buckets,
-                "buckets_rewritten": len(touched),
-            }
-        )
-        _write_log(self.root, log)
-        return v
+        spec = self.bucket_spec()
+        prior = self.read(spark)
+        drifted = self._drift_gate(prior, df, "append", merge_schema)
+        if spec and not drifted:
+            # rewrite only buckets receiving new rows (prior bucket contents
+            # unioned in) — same O(touched/total) cost as the pruned MERGE
+            incoming, touched, prior_touched = self._touched_buckets(
+                spark, df, *spec
+            )
+            return self._commit(
+                prior_touched.unionByName(incoming),
+                "append",
+                spec=spec,
+                touched=touched,
+            )
+        widened = prior.unionByName(df, allowMissingColumns=drifted)
+        meta = {"schema_evolved": True} if spec else None
+        return self._commit(widened, "append", partition_by, meta, spec)
 
     def optimize(
         self,
@@ -623,35 +594,27 @@ class ManagedTable:
         """
         if not self.exists():
             return self._commit(source, "create")
+        keys = list(keys)
         spec = self.bucket_spec()
         target = self.read(spark)
-        drifted = set(target.columns) != set(source.columns)
-        if drifted and not merge_schema:
-            raise ValueError(
-                "merge schema drift (use merge_schema=True): "
-                f"table={sorted(target.columns)} "
-                f"source={sorted(source.columns)}"
+        drifted = self._drift_gate(target, source, "merge", merge_schema)
+        if spec and spec[0] == keys and not drifted:
+            src, touched, target_touched = self._touched_buckets(
+                spark, source, *spec
             )
-        _check_type_drift(target, source, "merge")
-        if spec and list(spec[0]) == list(keys) and not drifted:
-            return self._merge_bucket_pruned(spark, source, spec[0], spec[1])
-        untouched = target.join(
-            source.select(*keys).distinct(), list(keys), "left_anti"
-        )
+            untouched = target_touched.join(
+                src.select(*keys).distinct(), keys, "left_anti"
+            )
+            return self._commit(
+                src.unionByName(untouched), "merge", spec=spec, touched=touched
+            )
+        # Merge keys differ from the bucket spec (or the schema widens) ⇒
+        # full rewrite; a bucketed table keeps its layout so later
+        # bucket-spec operations stay O(touched buckets).
+        untouched = target.join(source.select(*keys).distinct(), keys, "left_anti")
         merged = source.unionByName(untouched, allowMissingColumns=drifted)
-        if spec:
-            # Merge keys differ from the bucket spec ⇒ full rewrite, but
-            # preserve the bucket layout so later bucket-spec operations
-            # stay O(touched buckets) (same rationale as delete_keys).
-            bkeys, nb = spec
-            merged = merged.withColumn(
-                BUCKET_COL, _bucket_expr(bkeys, nb)
-            ).repartition(nb, BUCKET_COL)
-            meta = {"bucket_keys": bkeys, "n_buckets": nb}
-            if drifted:
-                meta["schema_evolved"] = True
-            return self._commit(merged, "merge", [BUCKET_COL], meta)
-        return self._commit(merged, "merge")
+        meta = {"schema_evolved": True} if spec and drifted else None
+        return self._commit(merged, "merge", meta=meta, spec=spec)
 
     def delete_where(self, spark: SparkSession, condition: F.Column) -> int:
         """DELETE FROM semantics (Delta's ``delete``, absent in the
@@ -667,20 +630,10 @@ class ManagedTable:
         # predicate keeps the row — so the survivor filter must be
         # NOT coalesce(cond, false), not a bare negation.
         keep = ~F.coalesce(condition, F.lit(False))
-        spec = self.bucket_spec()
-        if spec:
-            keys, n_buckets = spec
-            remaining = self._read_internal(
-                spark, self.latest_version()
-            ).filter(keep)
-            return self._commit(
-                remaining.repartition(n_buckets, BUCKET_COL),
-                "delete",
-                [BUCKET_COL],
-                {"bucket_keys": keys, "n_buckets": n_buckets},
-            )
-        remaining = self.read(spark).filter(keep)
-        return self._commit(remaining, "delete")
+        # the raw read keeps a bucketed table's __bucket column, so _commit
+        # rewrites the layout without rehashing
+        remaining = self._read_internal(spark).filter(keep)
+        return self._commit(remaining, "delete", spec=self.bucket_spec())
 
     def delete_keys(
         self, spark: SparkSession, victims: DataFrame, keys: Sequence[str]
@@ -691,121 +644,24 @@ class ManagedTable:
         hardlinks into the new version — right-to-be-forgotten against a
         100 TB table costs O(victim buckets), not a table rewrite.
         """
+        keys = list(keys)
         spec = self.bucket_spec()
-        if not spec or list(spec[0]) != list(keys):
-            remaining = self.read(spark).join(
-                victims.select(*keys).distinct(), list(keys), "left_anti"
+        if spec and spec[0] == keys:
+            vic, touched, target_touched = self._touched_buckets(
+                spark, victims, *spec
             )
-            if spec:
-                # Victim keys don't match the bucket spec ⇒ every bucket may
-                # hold a victim, so a full rewrite is unavoidable — but the
-                # table's bucket LAYOUT must survive the rewrite, or every
-                # later merge/delete silently degrades to full-table cost.
-                bkeys, nb = spec
-                remaining = remaining.withColumn(
-                    BUCKET_COL, _bucket_expr(bkeys, nb)
-                ).repartition(nb, BUCKET_COL)
-                return self._commit(
-                    remaining,
-                    "delete",
-                    [BUCKET_COL],
-                    {"bucket_keys": bkeys, "n_buckets": nb},
-                )
-            return self._commit(remaining, "delete")
-        keys, n_buckets = spec
-        vic = victims.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        touched = sorted(
-            r[0] for r in vic.select(BUCKET_COL).distinct().collect()
+            surviving = target_touched.join(
+                vic.select(*keys).distinct(), keys, "left_anti"
+            )
+            return self._commit(surviving, "delete", spec=spec, touched=touched)
+        # Victim keys don't match the bucket spec ⇒ every bucket may hold a
+        # victim, so a full rewrite is unavoidable — but the table's bucket
+        # LAYOUT must survive it, or every later merge/delete silently
+        # degrades to full-table cost.
+        remaining = self.read(spark).join(
+            victims.select(*keys).distinct(), keys, "left_anti"
         )
-        prev_v = self.latest_version()
-        target = self._read_internal(spark, prev_v)
-        surviving = target.filter(F.col(BUCKET_COL).isin(touched)).join(
-            vic.select(*keys).distinct(), list(keys), "left_anti"
-        )
-
-        log = _read_log(self.root)
-        v = log[-1]["version"] + 1
-        path = self._version_dir(v)
-        (
-            surviving.repartition(max(len(touched), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        touched_set = set(touched)
-        for bdir in glob.glob(
-            os.path.join(self._version_dir(prev_v), f"{BUCKET_COL}=*")
-        ):
-            b = int(os.path.basename(bdir).split("=", 1)[1])
-            if b not in touched_set:
-                _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
-        log.append(
-            {
-                "version": v,
-                "operation": "delete",
-                "timestamp": time.time(),
-                "bucket_keys": list(keys),
-                "n_buckets": n_buckets,
-                "buckets_rewritten": len(touched),
-            }
-        )
-        _write_log(self.root, log)
-        return v
-
-    def _merge_bucket_pruned(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        keys: list[str],
-        n_buckets: int,
-    ) -> int:
-        src = source.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        # Touched-bucket set: at most n_buckets small ints via one distinct —
-        # bounded driver traffic regardless of table or source size.
-        touched = sorted(
-            r[0] for r in src.select(BUCKET_COL).distinct().collect()
-        )
-        prev_v = self.latest_version()
-        target = self._read_internal(spark, prev_v)
-        target_touched = target.filter(F.col(BUCKET_COL).isin(touched))
-        untouched_src = target_touched.join(
-            src.select(*keys).distinct(), keys, "left_anti"
-        )
-        merged = src.unionByName(untouched_src)
-
-        log = _read_log(self.root)
-        v = log[-1]["version"] + 1
-        path = self._version_dir(v)
-        # Align the shuffle with the layout: partition by bucket before the
-        # partitioned write so each bucket dir is written by its own task(s)
-        # (~1 file per bucket instead of shuffle.partitions files per bucket).
-        (
-            merged.repartition(max(len(touched), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        # Carry untouched buckets over by hardlink: no data IO, and a pytest
-        # can assert byte-identity across versions.
-        touched_set = set(touched)
-        for bdir in glob.glob(
-            os.path.join(self._version_dir(prev_v), f"{BUCKET_COL}=*")
-        ):
-            b = int(os.path.basename(bdir).split("=", 1)[1])
-            if b not in touched_set:
-                _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
-        log.append(
-            {
-                "version": v,
-                "operation": "merge",
-                "timestamp": time.time(),
-                "bucket_keys": keys,
-                "n_buckets": n_buckets,
-                "buckets_rewritten": len(touched),
-            }
-        )
-        _write_log(self.root, log)
-        return v
+        return self._commit(remaining, "delete", spec=spec)
 
 
 def _same_file_set(dir_a: str, dir_b: str) -> bool:
@@ -877,19 +733,3 @@ class ChangeFeed:
         )
         return inserts.unionByName(deletes)
 
-
-def merge_upsert_delta(
-    spark: SparkSession, table_name: str, source: DataFrame, keys: Sequence[str]
-) -> None:  # pragma: no cover - needs delta-spark
-    """Real Delta MERGE, used when delta-spark is on the classpath."""
-    if not HAVE_DELTA:
-        raise ImportError("delta-spark not available; use ManagedTable.merge_upsert")
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    (
-        DeltaTable.forName(spark, table_name)
-        .alias("t")
-        .merge(source.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )

@@ -161,6 +161,49 @@ def test_driver_path_errors_and_no_jobs(spark, tmp_path):
     assert err[0] is TornIndexError
 
 
+def test_append_casts_ids_to_the_stored_type(spark, tmp_path):
+    """Built with bigint ids, appended with int ids: the append casts to
+    the stored type, so every posting / list file has one schema and
+    both forced paths return the appended documents, alike."""
+    from pyspark.sql.types import LongType, StructType
+
+    idx = InvertedTextIndex.build(
+        spark.createDataFrame(
+            [(i, f"alpha doc{i}") for i in range(4)], "doc_id long, text string"
+        ),
+        "text", "doc_id", str(tmp_path / "bm25"),
+    )
+    idx.append(
+        spark.createDataFrame([(10, "alpha alpha new")], "doc_id int, text string"),
+        "text", "doc_id",
+    )
+    schema, rows = _same_on_both_paths(
+        lambda: idx.probe_bm25(spark, ("alpha", "new"), k=5)
+    )
+    assert isinstance(schema, StructType)
+    assert schema["doc_id"].dataType == LongType()
+    assert rows[0][0] == 10 and len(rows) == 5
+
+    ivf = DetIvfIndex(str(tmp_path / "ivf"))
+    ivf.build(
+        spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(6)],
+            "doc_id long, emb array<double>",
+        ),
+        "emb", "doc_id", nlist=2, centroid_stride=3,
+    )
+    ivf.append(
+        spark.createDataFrame([(10, [9.0, 1.0])], "doc_id int, emb array<double>"),
+        "emb", "doc_id",
+    )
+    schema, rows = _same_on_both_paths(
+        lambda: ivf.probe(spark, [9.0, 1.0], "doc_id", k=3, nprobe=2)
+    )
+    assert isinstance(schema, StructType)
+    assert schema["doc_id"].dataType == LongType()
+    assert rows[0][0] == 10 and len(rows) == 3
+
+
 def test_strict_log_matches_spark_log_bit_for_bit(spark):
     """The driver-path idf goes through StrictMath, which is what Spark's
     ``log`` runs; ``math.log`` is 1 ulp off on some of these pairs."""

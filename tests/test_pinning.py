@@ -65,3 +65,18 @@ def test_default_strategy_is_invocation_scoped(spark, sf_dir):
     # CacheManager's registry is empty: no plan fragment survived.
     jsc = spark._jsparkSession.sharedState().cacheManager()
     assert jsc.isEmpty(), "default pin strategy leaked a session cache entry"
+
+
+def test_unknown_strategy_is_rejected(spark):
+    """A typo must fail loudly, naming the valid values, instead of
+    silently falling back to the default localCheckpoint."""
+    from databricks_etl_pipelines_spark.session import invocation_pin
+
+    spark.conf.set(PIN_STRATEGY_CONF, "Persist")
+    try:
+        with pytest.raises(
+            ValueError, match="'localCheckpoint', 'persist' or 'none'"
+        ):
+            invocation_pin(spark.range(3))
+    finally:
+        spark.conf.unset(PIN_STRATEGY_CONF)

@@ -857,3 +857,92 @@ def test_merge_schema_evolution(spark, tmp_path):
     )
     last = _read_log(mt.root)[-1]
     assert last["operation"] == "merge" and last["buckets_rewritten"] == 1
+
+
+def _write_once(spark, mt, path):
+    """Run one ManagedTable write path on a 200-row table bucketed by
+    ``id`` into 8 buckets (plain for ``overwrite_plain``)."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 200).select(
+        "id", (F.col("id") % 9).alias("grp"), (F.col("id") * 2).alias("v")
+    )
+    if path == "overwrite_plain":
+        return mt.create_or_overwrite(df)
+    mt.create_or_overwrite(df, bucket_by=["id"], n_buckets=8)
+    if path == "overwrite_bucketed":
+        return mt.create_or_overwrite(df, bucket_by=["id"], n_buckets=8)
+    one = spark.createDataFrame([(5, 5, -1)], "id long, grp long, v long")
+    if path == "append_pruned":
+        return mt.append(one.withColumn("id", F.lit(5000).cast("long")))
+    if path == "append_drifted":
+        return mt.append(one.withColumn("extra", F.lit(1)), merge_schema=True)
+    if path == "merge_pruned":
+        return mt.merge_upsert(spark, one, ["id"])
+    if path == "merge_non_key":
+        return mt.merge_upsert(spark, one, ["grp"])
+    if path == "delete_where_bucketed":
+        return mt.delete_where(spark, F.col("v") > 300)
+    if path == "delete_keys_pruned":
+        return mt.delete_keys(spark, one.select("id"), ["id"])
+    assert path == "delete_keys_non_key"
+    return mt.delete_keys(spark, one.select("grp"), ["grp"])
+
+
+# path -> (operation, bucketed, buckets_rewritten, schema_evolved); None
+# means the key is absent from the entry. Full bucketed rewrites carry no
+# buckets_rewritten: perfbench's buckets_rewritten_share counts only the
+# pruned commits.
+_MANIFEST_CASES = {
+    "overwrite_plain": ("overwrite", False, None, None),
+    "overwrite_bucketed": ("overwrite", True, None, None),
+    "append_pruned": ("append", True, 1, None),
+    "append_drifted": ("append", True, None, True),
+    "merge_pruned": ("merge", True, 1, None),
+    "merge_non_key": ("merge", True, None, None),
+    "delete_where_bucketed": ("delete", True, None, None),
+    "delete_keys_pruned": ("delete", True, 1, None),
+    "delete_keys_non_key": ("delete", True, None, None),
+}
+
+
+@pytest.mark.parametrize("path", sorted(_MANIFEST_CASES))
+def test_manifest_entry_per_write_path(spark, tmp_path, path):
+    """Each write path's ``_log.json`` entry: its exact key set, its
+    operation and its bucket stamps. A bucketed table keeps its layout
+    (bucket stamps and ``__bucket=`` dirs) through every full rewrite,
+    ``delete_where`` included."""
+    import glob
+    import os
+
+    from databricks_etl_pipelines_spark.sources.managed_table import (
+        ManagedTable,
+        _read_log,
+    )
+
+    operation, bucketed, rewritten, evolved = _MANIFEST_CASES[path]
+    mt = ManagedTable(str(tmp_path / path))
+    v = _write_once(spark, mt, path)
+    entry = _read_log(mt.root)[-1]
+    assert entry["version"] == v
+
+    want = {"version", "operation", "timestamp"}
+    if operation == "overwrite":
+        want.add("fold_checkpoint")  # owner reset tombstone
+        assert entry["fold_checkpoint"] is None
+    if bucketed:
+        want |= {"bucket_keys", "n_buckets"}
+    if rewritten is not None:
+        want.add("buckets_rewritten")
+    if evolved is not None:
+        want.add("schema_evolved")
+    assert set(entry) == want
+    assert entry["operation"] == operation
+    assert entry.get("bucket_keys") == (["id"] if bucketed else None)
+    assert entry.get("n_buckets") == (8 if bucketed else None)
+    assert entry.get("buckets_rewritten") == rewritten
+    assert entry.get("schema_evolved") == evolved
+
+    bucket_dirs = glob.glob(os.path.join(mt.root, f"_v{v}", "__bucket=*"))
+    assert mt.bucket_spec() == ((["id"], 8) if bucketed else None)
+    assert (len(bucket_dirs) == 8) if bucketed else not bucket_dirs
