@@ -54,30 +54,6 @@ from databricks_etl_pipelines_spark.functions.vectors import as_double_array, co
 from databricks_etl_pipelines_spark.session import invocation_pin, tune_for_derived_generate
 
 
-def _materialize_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Pin a pair generator's bounded output once per invocation (LAZY
-    localCheckpoint) so multi-action consumers (connected components'
-    count + collect, curation drops) compute the pair pipeline exactly
-    once — the probe_bm25/MMR cache-lifecycle contract (r11) applied to
-    the pair generators.
-
-    r15 (2nd pass): every internal cache these generators once
-    session-persisted is now itself an invocation-scoped lazy
-    checkpoint, so there is nothing left to release and no eager
-    construction-time job — the first consumer action materializes the
-    whole chain (shingles → index/buckets → candidates → verified
-    pairs) in one go, and nothing outlives the invocation (a leaked
-    session persist would both accumulate executor storage across a
-    multi-query run — measured 2-4× degradation across a 41-query bench
-    — and dishonestly serve a later bench run of the same query through
-    plan-fragment matching). ``caches`` is kept for call-site symmetry;
-    unpersisting a checkpointed frame is a no-op."""
-    out = result.transform(invocation_pin)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Repartition to the session's shuffle parallelism with an explicit
     count so AQE does NOT coalesce it away. Candidate-pair verification is
@@ -246,8 +222,7 @@ def minhash_lsh_candidates(
     # guardrail plus both self-join sides); unpersisted, each re-runs the
     # whole signature aggregation. One (id, band) row per doc per band —
     # a per-doc-constant fraction of the corpus, far smaller than the
-    # shingle relation already cached underneath. Released once the
-    # candidate pair set is materialized.
+    # shingle relation already cached underneath.
     buckets = _band_buckets(sigs, bands, rows_per_band).transform(invocation_pin)
     bucket_sizes = buckets.groupBy("band_id", "band_hash").agg(
         F.count("*").alias("bucket_n")
@@ -262,12 +237,17 @@ def minhash_lsh_candidates(
     b = bounded.select(
         F.col("band_id"), F.col("band_hash"), F.col("id").alias("id_b")
     )
-    return _materialize_release(
+    # Every pair generator pins its bounded output once per invocation,
+    # so multi-action consumers (connected components' count + collect,
+    # curation drops) compute the pair pipeline once. The pins inside it
+    # are left alone: under pinStrategy=persist, unpersisting them here
+    # would evict them before this lazy result had materialized.
+    return (
         a.join(b, ["band_id", "band_hash"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct(),
-        buckets,
+        .distinct()
+        .transform(invocation_pin)
     )
 
 
@@ -295,11 +275,11 @@ def minhash_lsh_dedup_pairs(
     # candidate instead of two, same exact integer division
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return _materialize_release(
+    return (
         paired.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        sh,
+        .select("id_a", "id_b", "jaccard")
+        .transform(invocation_pin)
     )
 
 
@@ -433,7 +413,7 @@ def minhash_crossengine_pairs(
     """
     sh = xengine_shingle_sets(df, text_col, id_col, shingle_k)
     # Persisted (r15): three consumers (size guardrail + both self-join
-    # sides), same rationale as minhash_lsh_candidates; released below.
+    # sides), same rationale as minhash_lsh_candidates.
     buckets = xengine_band_buckets(sh, num_perm, bands).transform(invocation_pin)
     sizes = buckets.groupBy("band_id", "band_hash").agg(
         F.count("*").alias("bucket_n")
@@ -464,12 +444,11 @@ def minhash_crossengine_pairs(
     # two, same exact integer division.
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return _materialize_release(
+    return (
         paired.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        sh,
-        buckets,
+        .select("id_a", "id_b", "jaccard")
+        .transform(invocation_pin)
     )
 
 
@@ -919,12 +898,11 @@ def ngram_jaccard_pairs(
     # candidate instead of two, same exact integer division
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return _materialize_release(
+    return (
         paired.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        sh,
-        idx,
+        .select("id_a", "id_b", "jaccard")
+        .transform(invocation_pin)
     )
 
 
@@ -1033,17 +1011,15 @@ def containment_pairs(
     containment = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
         "sh_a"
     )
-    # released like every other pair generator (r15): the persisted
-    # shingle relation must not outlive the invocation
-    return _materialize_release(
+    return (
         paired.withColumn("containment", containment)
         .filter(F.col("containment") >= threshold)
         .select(
             F.col("id_a").alias("contained_id"),
             F.col("id_b").alias("container_id"),
             "containment",
-        ),
-        sh,
+        )
+        .transform(invocation_pin)
     )
 
 
@@ -1271,7 +1247,7 @@ def semantic_dedup_pairs_deterministic(
         assign_deterministic_lists,
     )
 
-    _, assigned, _ = assign_deterministic_lists(
+    assigned, _ = assign_deterministic_lists(
         df, vec_col, id_col, nlist=n_clusters,
         centroid_stride=centroid_stride,
     )

@@ -2,7 +2,7 @@
 
 A probe of a persisted index reads a few hive partition directories:
 ``wb=`` posting buckets for :class:`retrieval.InvertedTextIndex`,
-``list_id=`` inverted lists for :class:`similarity.DetIvfIndex`. At small
+``list_id=`` inverted lists for :class:`similarity.IvfIndex`. At small
 sizes almost none of a Spark probe's latency is scoring. It is fixed cost
 per job: a 64-task listing job whenever a read names more directories
 than ``parallelPartitionDiscovery.threshold``, a schema-inference job,

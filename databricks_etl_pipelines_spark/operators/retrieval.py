@@ -5,7 +5,7 @@ query): build the posting lists ONCE, hive-partitioned by a word-hash
 bucket, persist the two corpus scalars (N, Σdl) as metadata, then answer
 every query by reading ONLY the query terms' buckets — a
 PartitionFilters prune before any IO, the same layout discipline as
-``similarity.IvfIndex``. Postings are denormalized with the document
+``similarity.IvfIndex`` (lists hive-partitioned by ``list_id``). Postings are denormalized with the document
 length (the standard posting-list trick) so a probe never touches a
 per-document side table.
 

@@ -2,12 +2,18 @@
 
 Baseline: brute-force cosine top-k — a single scan + projection +
 TakeOrderedAndProject; exact, and at 100 TB still embarrassingly parallel
-(no shuffle, k·partitions rows to the driver).
+(no shuffle, k·partitions rows to the driver). Every single-query top-k
+here ends in that same tail (:func:`_cosine_topk`); only the candidate
+set before it differs.
 
-Scale path: LSH bucketing (deterministic random-hyperplane signatures) —
-probes only matching buckets, trading recall for a ~2^bits scan reduction.
-IVF-style coarse quantization is the same pattern with learned centroids;
-the bucketed join shape below is the Spark-side skeleton either way.
+Scale paths: LSH bucketing (deterministic random-hyperplane signatures)
+scans only the query's bucket; IVF coarse quantization scans only the
+``nprobe`` inverted lists nearest the query. :class:`IvfIndex` is the one
+persisted index: inverted lists written hive-partitioned by ``list_id``
+plus a ``centroids.json`` of ``[[list_id, centroid], ...]``, built from
+strided corpus centroids (cross-engine replayable), learned KMeans
+centroids, or KMeans plus a product-quantization ``codes`` column
+(IVFADC). One probe serves all three; small probes run on the driver.
 
 A vectorized Pandas-UDF cosine (`pandas_cosine`) is provided for wide
 vectors where Arrow+numpy beats the expression evaluator; default stays
@@ -15,14 +21,16 @@ expression-side (no Python in the row path).
 
 Algorithm provenance (public literature): random-hyperplane sign LSH
 (Charikar 2002); IVF coarse quantization (Sivic & Zisserman "Video
-Google" 2003 bag-of-words inverted files; Jégou et al., "Product
-quantization for nearest neighbor search", 2011 — IVF without the PQ
-refinement stage).
+Google" 2003 bag-of-words inverted files); product quantization with
+asymmetric distances and residual encoding (Jégou et al., "Product
+quantization for nearest neighbor search", TPAMI 2011).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import json
+import os
+from collections.abc import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -43,6 +51,25 @@ from databricks_etl_pipelines_spark.functions.vectors import (
 )
 
 
+def _cosine_to(v: Column, query: Sequence[float]) -> Column:
+    """Cosine of the vector column ``v`` to a literal query vector."""
+    return cosine(v, F.transform(vec_lit(query), lambda x: x.cast("double")))
+
+
+def _cosine_topk(
+    df: DataFrame, id_col: str, k: int, sim: Column, src: str | None = None
+) -> DataFrame:
+    """The single-query top-k tail: ``(id_col, cosine_sim)`` ranked by
+    ``cosine_sim`` DESC, ties to the lower id, first ``k``. ``src`` names
+    the id column of ``df`` when it is not ``id_col``."""
+    ident = F.col(id_col) if src is None else F.col(src).alias(id_col)
+    return (
+        df.select(ident, sim.alias("cosine_sim"))
+        .orderBy(F.desc("cosine_sim"), F.col(id_col))
+        .limit(k)
+    )
+
+
 def brute_force_cosine_topk(
     df: DataFrame,
     vec_col: str,
@@ -52,14 +79,8 @@ def brute_force_cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine to a literal query vector. Ties break on id so
     the result is a deterministic set."""
-    v = as_double_array(vec_col)
-    q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-    sim = cosine(v, q)
-    return (
-        df.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
-        .limit(k)
-    )
+    sim = _cosine_to(as_double_array(vec_col), query)
+    return _cosine_topk(df, id_col, k, sim)
 
 
 def hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
@@ -106,22 +127,17 @@ def lsh_ann_topk(
     # different order, and a sign flip on a near-zero dot would put the
     # query in a different bucket than the same vector stored in the
     # table (and than a SQL oracle replaying the same left fold).
-    def fold_dot(p) -> float:
+    qsig = 0
+    for i, plane in enumerate(planes):
         acc = 0.0
-        for x, y in zip(query, p):
+        for x, y in zip(query, plane):
             acc += float(x) * float(y)
-        return acc
-
-    qsig = sum((1 << i) for i, p in enumerate(planes) if fold_dot(p) >= 0)
-    q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-    sim = cosine(v, q)
-    return (
-        df.withColumn("__sig", _sign_signature(v, planes))
-        .filter(F.col("__sig") == qsig)
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
-        .limit(k)
+        if acc >= 0:
+            qsig |= 1 << i
+    bucket = df.withColumn("__sig", _sign_signature(v, planes)).filter(
+        F.col("__sig") == qsig
     )
+    return _cosine_topk(bucket, id_col, k, _cosine_to(v, query))
 
 
 def ivf_index(
@@ -138,10 +154,11 @@ def ivf_index(
 
     Returns (assignments ``(id, v, list_id)``, centroids array). At scale
     the assignment DataFrame is written out partitioned/bucketed by
-    ``list_id`` ONCE, so each probe is a partition-pruned scan of
-    nprobe/nlist of the data; centroids (nlist × dim floats) are tiny and
-    live with the index metadata. Fit on a sample (``sample_fraction``) —
-    centroid quality needs representative data, not all of it.
+    ``list_id`` ONCE (:meth:`IvfIndex.build_kmeans`), so each probe is a
+    partition-pruned scan of nprobe/nlist of the data; centroids (nlist ×
+    dim floats) are tiny and live with the index metadata. Fit on a sample
+    (``sample_fraction``) — centroid quality needs representative data,
+    not all of it.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -185,385 +202,11 @@ def ivf_topk(
         df, vec_col, id_col, nlist=nlist, seed=seed,
         sample_fraction=sample_fraction, max_iter=max_iter,
     )
-    qvec = np.asarray(query, dtype=float)
-    order = np.argsort(((centroids - qvec) ** 2).sum(axis=1))
-    probe = [int(i) for i in order[:nprobe]]
-    q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-    sim = cosine(F.col("v"), q)
-    return (
-        assigned.filter(F.col("list_id").isin(probe))
-        .select(F.col("id").alias(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
-        .limit(k)
+    probe = _probe_lists(enumerate(centroids.tolist()), query, nprobe)
+    return _cosine_topk(
+        assigned.filter(F.col("list_id").isin(probe)),
+        id_col, k, _cosine_to(F.col("v"), query), src="id",
     )
-
-
-class IvfIndex:
-    """Persisted IVF index: build ONCE (inverted lists written partitioned
-    by ``list_id``, centroids as JSON metadata), probe MANY times with
-    partition-pruned scans.
-
-    This is the production split of ``ivf_topk`` (which re-trains per
-    call): at 100 TB the quantizer is fit on a sample, every vector is
-    assigned and written out hive-partitioned by list, and each query then
-    reads only ``nprobe``/``nlist`` of the data — the scan prunes whole
-    list directories before any IO (PartitionFilters, not a post-scan
-    filter)."""
-
-    LISTS = "lists"
-    META = "ivf_meta.json"
-
-    def __init__(self, root: str):
-        self.root = root
-
-    # -- build --------------------------------------------------------------
-
-    @classmethod
-    def build(
-        cls,
-        df: DataFrame,
-        vec_col: str,
-        id_col: str,
-        root: str,
-        nlist: int = 64,
-        seed: int = 42,
-        sample_fraction: float | None = None,
-        max_iter: int = 5,
-    ) -> "IvfIndex":
-        import json
-        import os
-
-        assigned, centroids = ivf_index(
-            df, vec_col, id_col, nlist=nlist, seed=seed,
-            sample_fraction=sample_fraction, max_iter=max_iter,
-        )
-        (
-            # align the shuffle with the layout: one task per list → ~1
-            # file per list directory
-            assigned.repartition(nlist, "list_id")
-            .write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(os.path.join(root, cls.LISTS))
-        )
-        with open(os.path.join(root, cls.META), "w") as f:
-            json.dump(
-                {"nlist": nlist, "centroids": centroids.tolist()}, f
-            )
-        return cls(root)
-
-    # -- probe --------------------------------------------------------------
-
-    def _centroids(self) -> np.ndarray:
-        import json
-        import os
-
-        with open(os.path.join(self.root, self.META)) as f:
-            return np.asarray(json.load(f)["centroids"], dtype=float)
-
-    def probe_lists(self, query: Sequence[float], nprobe: int) -> list[int]:
-        centroids = self._centroids()
-        qvec = np.asarray(query, dtype=float)
-        order = np.argsort(((centroids - qvec) ** 2).sum(axis=1))
-        return [int(i) for i in order[:nprobe]]
-
-    def probe(
-        self,
-        spark,
-        query: Sequence[float],
-        k: int = 10,
-        nprobe: int = 8,
-    ) -> DataFrame:
-        """Partition-pruned top-k: scans only the nprobe nearest lists."""
-        import os
-
-        lists = self.probe_lists(query, nprobe)
-        scan = spark.read.parquet(os.path.join(self.root, self.LISTS))
-        q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-        sim = cosine(F.col("v"), q)
-        return (
-            scan.filter(F.col("list_id").isin(lists))
-            .select(F.col("id").alias("vec_id"), sim.alias("cosine_sim"))
-            .orderBy(F.desc("cosine_sim"), F.col("vec_id"))
-            .limit(k)
-        )
-
-
-class PqIvfIndex(IvfIndex):
-    """IVF + product-quantization (PQ-lite): the memory-bounded ANN shape.
-
-    On top of the inverted lists, every vector stores ``m`` uint8 codes —
-    its nearest codebook centroid per subspace (codebooks: per-subspace
-    KMeans over a sample, k=16..256). A probe then runs ADC (asymmetric
-    distance computation, Jégou et al. 2011): the query precomputes an
-    m×k lookup table of subspace distances ON THE DRIVER (tiny), each
-    candidate's approximate distance is m table lookups over its codes
-    (Arrow-vectorized numpy, no full vectors touched), and only the top
-    ``rerank`` survivors are re-ranked with exact cosine over the stored
-    vectors. At 100 TB the codes are D/m·(8/32)× smaller than the raw
-    vectors, so the probe scan reads a few bytes per candidate instead of
-    the embedding column.
-
-    ``residual=True`` (default) is the full IVFADC shape from the same
-    paper: each vector is quantized as ``v - coarse_centroid[list_id]``.
-    Residuals concentrate near the origin, so the same codebook budget
-    spends its centroids on a much tighter distribution — quantization
-    error drops (pinned by test_pq_residual_beats_plain_quantization).
-    The probe then needs one lookup table PER PROBED LIST (the query is
-    re-expressed relative to each list's centroid): nprobe × m × k floats,
-    still driver-trivial, gathered per-candidate by list_id.
-    """
-
-    PQ_META = "pq_meta.json"
-
-    @classmethod
-    def build_pq(
-        cls,
-        df: DataFrame,
-        vec_col: str,
-        id_col: str,
-        root: str,
-        nlist: int = 64,
-        m: int = 4,
-        k: int = 16,
-        seed: int = 42,
-        sample_fraction: float | None = None,
-        max_iter: int = 5,
-        residual: bool = True,
-    ) -> "PqIvfIndex":
-        import json
-        import os
-
-        idx = cls(root)
-        assigned, centroids = ivf_index(
-            df, vec_col, id_col, nlist=nlist, seed=seed,
-            sample_fraction=sample_fraction, max_iter=max_iter,
-        )
-        assigned = assigned.persist()
-        dim = len(assigned.select("v").head()["v"])
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        sub = dim // m
-        # per-subspace codebooks fit on a driver-side sample: k centroids of
-        # a `sub`-dim space need thousands of points, not the full table
-        srows = assigned.select("v", "list_id").limit(20000).collect()
-        sample = np.stack(
-            # bounded driver pull — no full-table count or collect
-            [np.asarray(r["v"], dtype=np.float64) for r in srows]
-        )
-        if residual:
-            sample = sample - centroids[[r["list_id"] for r in srows]]
-        rng = np.random.RandomState(seed)
-        codebooks = []
-        for j in range(m):
-            block = sample[:, j * sub : (j + 1) * sub]
-            # tiny Lloyd's iterations, numpy-only (no sklearn in image)
-            cent = block[rng.choice(len(block), size=k, replace=False)]
-            for _ in range(max_iter):
-                d2 = ((block[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-                owner = d2.argmin(axis=1)
-                for c in range(k):
-                    members = block[owner == c]
-                    if len(members):
-                        cent[c] = members.mean(axis=0)
-            codebooks.append(cent.tolist())
-        cb = np.asarray(codebooks)  # m × k × sub
-
-        def encode(batches):
-            for pdf in batches:
-                mat = np.stack(
-                    pdf["v"].apply(lambda v: np.asarray(v, dtype=np.float64))
-                )
-                if residual:
-                    # centroids (nlist × dim) ride the closure — tiny
-                    mat = mat - centroids[pdf["list_id"].to_numpy()]
-                codes = []
-                for j in range(m):
-                    block = mat[:, j * sub : (j + 1) * sub]
-                    d2 = (
-                        (block[:, None, :] - cb[j][None, :, :]) ** 2
-                    ).sum(axis=2)
-                    codes.append(d2.argmin(axis=1).astype("int32"))
-                out = pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "v": pdf["v"],
-                        "list_id": pdf["list_id"],
-                    }
-                )
-                out["codes"] = np.stack(codes, axis=1).tolist()
-                yield out
-
-        encoded = assigned.mapInPandas(
-            encode,
-            "id bigint, v array<double>, list_id int, codes array<int>",
-        )
-        (
-            encoded.repartition(nlist, "list_id")
-            .write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(os.path.join(root, cls.LISTS))
-        )
-        with open(os.path.join(root, cls.META), "w") as f:
-            json.dump({"nlist": nlist, "centroids": centroids.tolist()}, f)
-        with open(os.path.join(root, cls.PQ_META), "w") as f:
-            json.dump(
-                {
-                    "m": m,
-                    "k": k,
-                    "sub": sub,
-                    "residual": residual,
-                    "codebooks": cb.tolist(),
-                },
-                f,
-            )
-        assigned.unpersist()
-        return idx
-
-    def probe_pq(
-        self,
-        spark,
-        query: Sequence[float],
-        kk: int = 10,
-        nprobe: int = 8,
-        rerank: int = 50,
-    ) -> DataFrame:
-        """ADC probe: lookup-table distances over codes select ``rerank``
-        candidates; exact cosine re-ranks them to the final top-k."""
-        import json
-        import os
-
-        with open(os.path.join(self.root, self.PQ_META)) as f:
-            pq = json.load(f)
-        cb = np.asarray(pq["codebooks"])  # m × k × sub
-        m, sub = pq["m"], pq["sub"]
-        residual = pq.get("residual", False)
-        qvec = np.asarray(query, dtype=np.float64)
-        lists = self.probe_lists(query, nprobe)
-
-        def sub_table(q: np.ndarray) -> np.ndarray:
-            # distance from each query subvector to every codebook centroid
-            return np.stack(
-                [
-                    ((cb[j] - q[j * sub : (j + 1) * sub][None, :]) ** 2).sum(
-                        axis=1
-                    )
-                    for j in range(m)
-                ]
-            )
-
-        if residual:
-            # one m×k table per probed list (query re-expressed relative to
-            # that list's coarse centroid) — nprobe × m × k floats, indexed
-            # by list_id so the UDF can gather per candidate
-            centroids = self._centroids()
-            tables = np.zeros((len(centroids), m, cb.shape[1]))
-            for li in lists:
-                tables[li] = sub_table(qvec - centroids[li])
-        else:
-            tables = np.broadcast_to(
-                sub_table(qvec), (1, m, cb.shape[1])
-            ).copy()
-
-        @pandas_udf("double")
-        def adc_dist(list_id: pd.Series, codes: pd.Series) -> pd.Series:
-            c = np.stack(codes.apply(np.asarray))
-            li = (
-                list_id.to_numpy() if residual
-                else np.zeros(len(c), dtype=int)
-            )
-            return pd.Series(
-                tables[li[:, None], np.arange(m)[None, :], c].sum(axis=1)
-            )
-
-        scan = spark.read.parquet(os.path.join(self.root, self.LISTS))
-        cands = (
-            scan.filter(F.col("list_id").isin(lists))
-            .withColumn("adc", adc_dist(F.col("list_id"), F.col("codes")))
-            .orderBy("adc")
-            .limit(rerank)
-        )
-        q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-        sim = cosine(F.col("v"), q)
-        return (
-            cands.select(F.col("id").alias("vec_id"), sim.alias("cosine_sim"))
-            .orderBy(F.desc("cosine_sim"), F.col("vec_id"))
-            .limit(kk)
-        )
-
-
-class LshIndex:
-    """Persisted sign-LSH index: signatures materialized as a partition
-    column (the scale note on ``lsh_ann_topk`` made real). Build writes
-    vectors hive-partitioned by ``sig``; probe reads exactly one bucket
-    directory. Planes are re-derived from (dim, bits, seed) — no stored
-    model state beyond three ints."""
-
-    BUCKETS = "buckets"
-    META = "lsh_meta.json"
-
-    def __init__(self, root: str):
-        self.root = root
-
-    @classmethod
-    def build(
-        cls,
-        df: DataFrame,
-        vec_col: str,
-        id_col: str,
-        root: str,
-        dim: int,
-        bits: int = 8,
-        seed: int = 42,
-    ) -> "LshIndex":
-        import json
-        import os
-
-        planes = hyperplanes(dim, bits, seed)
-        v = as_double_array(vec_col)
-        base = df.select(
-            F.col(id_col).alias("id"),
-            v.alias("v"),
-            _sign_signature(v, planes).alias("sig"),
-        )
-        (
-            base.repartition(2**bits, "sig")
-            .write.mode("overwrite")
-            .partitionBy("sig")
-            .parquet(os.path.join(root, cls.BUCKETS))
-        )
-        with open(os.path.join(root, cls.META), "w") as f:
-            json.dump({"dim": dim, "bits": bits, "seed": seed}, f)
-        return cls(root)
-
-    def probe(
-        self, spark, query: Sequence[float], k: int = 10
-    ) -> DataFrame:
-        import json
-        import os
-
-        with open(os.path.join(self.root, self.META)) as f:
-            meta = json.load(f)
-        planes = hyperplanes(meta["dim"], meta["bits"], meta["seed"])
-        # left-fold dot, matching _sign_signature's aggregate order (same
-        # rationale as lsh_ann_topk: a BLAS np.dot could sum differently
-        # and flip a near-zero sign into a bucket the stored signatures
-        # never used)
-        qsig = 0
-        for i, p in enumerate(planes):
-            acc = 0.0
-            for x, y in zip(query, p):
-                acc += float(x) * float(y)
-            if acc >= 0:
-                qsig |= 1 << i
-        scan = spark.read.parquet(os.path.join(self.root, self.BUCKETS))
-        q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-        sim = cosine(F.col("v"), q)
-        return (
-            scan.filter(F.col("sig") == qsig)
-            .select(F.col("id").alias("vec_id"), sim.alias("cosine_sim"))
-            .orderBy(F.desc("cosine_sim"), F.col("vec_id"))
-            .limit(k)
-        )
 
 
 def pandas_cosine(query: Sequence[float]):
@@ -595,12 +238,7 @@ def pandas_cosine_topk(
     query: Sequence[float],
     k: int = 10,
 ) -> DataFrame:
-    sim = pandas_cosine(query)(F.col(vec_col))
-    return (
-        df.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return _cosine_topk(df, id_col, k, pandas_cosine(query)(F.col(vec_col)))
 
 
 def sq_l2(a: Column, b: Column) -> Column:
@@ -615,39 +253,99 @@ def sq_l2(a: Column, b: Column) -> Column:
     )
 
 
+def _py_sq_l2(a: Sequence[float], b: Sequence[float]) -> float:
+    """Driver-side squared L2 with the SAME strict left-fold op order as
+    sq_l2 / the DuckDB list_reduce replay — probe decisions must agree."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + (x - y) * (x - y)
+    return acc
+
+
+def _strided_centroids(
+    base: DataFrame, n: int, stride: int
+) -> list[tuple[int, list[float]]]:
+    """The deterministic quantizer's init rule, collected: the first ``n``
+    ``(id, v)`` rows of ``base`` by id whose id is a multiple of
+    ``stride``, as ``[(id, vector)]`` — a pure relational rule any engine
+    replays exactly."""
+    return [
+        (int(r["id"]), [float(x) for x in r["v"]])
+        for r in base.filter((F.col("id") % stride) == 0)
+        .orderBy("id")
+        .limit(n)
+        .collect()
+    ]
+
+
+def _centroid_frame(
+    spark: SparkSession, rows: Sequence[tuple[int, Sequence[float]]]
+) -> DataFrame:
+    """``(cid bigint, cv array<double>)`` as an Arrow local relation:
+    broadcasting it needs no Python-worker job. A local relation scans in
+    up to ``defaultParallelism`` slices; one slice makes the broadcast's
+    collect a single task."""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "cid": pa.array([c for c, _ in rows], pa.int64()),
+                "cv": pa.array([v for _, v in rows], pa.list_(pa.float64())),
+            }
+        )
+    ).coalesce(1)
+
+
+def _nearest_centroid(
+    base: DataFrame,
+    rows: Sequence[tuple[int, Sequence[float]]],
+    label: str = "list_id",
+) -> DataFrame:
+    """``(id, v, label, d)``: every ``(id, v)`` row of ``base`` with the id
+    of its nearest centroid by the strict-fold squared L2 (ties to the
+    lower id) and that distance. Explode-grid against the broadcast
+    centroids + one groupBy min(struct) — NOT a k-way nested HOF fold
+    (giant nested lambda expressions whole-stage-compile pathologically;
+    see NOTES_NEXT_ROUND round-4 traps)."""
+    grid = base.join(
+        F.broadcast(_centroid_frame(base.sparkSession, rows))
+    ).withColumn("d", sq_l2(F.col("v"), F.col("cv")))
+    return (
+        grid.groupBy("id", "v")
+        .agg(F.min(F.struct("d", "cid")).alias("m"))
+        .select("id", "v", F.col("m.cid").alias(label), F.col("m.d").alias("d"))
+    )
+
+
+def _probe_lists(
+    rows: Iterable[tuple[int, Sequence[float]]],
+    query: Sequence[float],
+    nprobe: int,
+) -> list[int]:
+    """Ids of the ``nprobe`` centroids in ``rows`` (``(id, vector)``
+    pairs) nearest ``query`` by the strict-fold squared L2, ties to the
+    lower id — the order a SQL replay of the probe derives."""
+    qv = [float(x) for x in query]
+    ranked = sorted((_py_sq_l2(qv, cv), cid) for cid, cv in rows)
+    return [cid for _, cid in ranked[:nprobe]]
+
+
 def assign_deterministic_lists(
     df: DataFrame,
     vec_col: str,
     id_col: str,
     nlist: int = 16,
     centroid_stride: int = 29,
-) -> tuple[DataFrame, DataFrame, list[tuple[int, list[float]]]]:
+) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Shared coarse quantizer for the cross-engine-verifiable ANN/dedup
     variants: centroids are the first ``nlist`` corpus vectors at a
-    strided id rule, every vector goes to its nearest centroid by the
-    strict-left-fold squared L2 (ties to the lower centroid id) via
-    explode-grid + groupBy min(struct). Returns (base(id, v),
-    assignments(id, v, list_id), collected [(cid, centroid)] rows)."""
+    strided id rule (:func:`_strided_centroids`), and every vector goes to
+    its nearest centroid (:func:`_nearest_centroid`). Returns
+    (assignments(id, v, list_id), collected [(cid, centroid)] rows)."""
     base = df.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
     )
-    cent = (
-        base.filter((F.col("id") % centroid_stride) == 0)
-        .orderBy("id")
-        .limit(nlist)
-        .select(F.col("id").alias("cid"), F.col("v").alias("cv"))
-    )
-    cent_rows = [(int(r["cid"]), [float(x) for x in r["cv"]])
-                 for r in cent.collect()]
-    grid = base.join(F.broadcast(cent)).withColumn(
-        "d", sq_l2(F.col("v"), F.col("cv"))
-    )
-    assigned = (
-        grid.groupBy("id", "v")
-        .agg(F.min(F.struct("d", "cid")).alias("m"))
-        .select("id", "v", F.col("m.cid").alias("list_id"))
-    )
-    return base, assigned, cent_rows
+    cent_rows = _strided_centroids(base, nlist, centroid_stride)
+    return _nearest_centroid(base, cent_rows).drop("d"), cent_rows
 
 
 def ivf_topk_deterministic(
@@ -673,35 +371,21 @@ def ivf_topk_deterministic(
     exact cosine within them. Recall is below KMeans-IVF (centroids are
     arbitrary corpus points, not cluster means) — this variant exists so
     the bucketing/pruning machinery itself gets a hard differential check;
-    production uses :func:`ivf_topk` / :class:`IvfIndex`.
+    production uses :func:`ivf_topk` / :meth:`IvfIndex.build_kmeans`.
 
-    Scale shape: centroids are a broadcast-joined 16-row frame; the
+    Scale shape: centroids are a broadcast 16-row local relation; the
     assignment grid is rows × nlist (map-side, no shuffle in), reduced by
-    one hash aggregation on (id, v) taking min(struct(dist, cid)) —
-    explode-grid + groupBy-min, NOT a 16-way nested HOF fold (giant nested
-    lambda expressions whole-stage-compile pathologically; see
-    NOTES_NEXT_ROUND round-4 traps). Query-to-centroid distances fold on
-    the driver over the collected 16-row centroid frame (bounded, like the
-    PQ codebook fit).
+    one hash aggregation on (id, v) taking min(struct(dist, cid)).
+    Query-to-centroid distances fold on the driver over the collected
+    16 centroid rows (bounded, like the PQ codebook fit).
     """
-    base, assigned, cent_rows = assign_deterministic_lists(
+    assigned, cent_rows = assign_deterministic_lists(
         df, vec_col, id_col, nlist=nlist, centroid_stride=centroid_stride
     )
-    qv = [float(x) for x in query]
-    probe = [
-        cid
-        for cid, _ in sorted(
-            ((cid, _py_sq_l2(qv, cv)) for cid, cv in cent_rows),
-            key=lambda t: (t[1], t[0]),
-        )[:nprobe]
-    ]
-    q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-    return (
-        assigned.filter(F.col("list_id").isin(probe))
-        .select(F.col("id").alias(id_col),
-                cosine(F.col("v"), q).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
-        .limit(k)
+    probe = _probe_lists(cent_rows, query, nprobe)
+    return _cosine_topk(
+        assigned.filter(F.col("list_id").isin(probe)),
+        id_col, k, _cosine_to(F.col("v"), query), src="id",
     )
 
 
@@ -766,13 +450,7 @@ def kmeans_lloyd_deterministic(
     base = df.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
     )
-    cent_rows = [
-        [float(x) for x in r["v"]]
-        for r in base.filter((F.col("id") % centroid_stride) == 0)
-        .orderBy("id")
-        .limit(k)
-        .collect()
-    ]
+    cent_rows = [v for _, v in _strided_centroids(base, k, centroid_stride)]
     if len(cent_rows) < k:
         raise ValueError(
             f"kmeans_lloyd_deterministic: only {len(cent_rows)} of {k} "
@@ -783,22 +461,7 @@ def kmeans_lloyd_deterministic(
     dim = len(cent_rows[0])
 
     def assigned_against(cent: list[list[float]]) -> DataFrame:
-        cent_df = base.sparkSession.createDataFrame(
-            [(ci, cv) for ci, cv in enumerate(cent)],
-            "cluster long, cv array<double>",
-        )
-        grid = base.join(F.broadcast(cent_df)).withColumn(
-            "d", sq_l2(F.col("v"), F.col("cv"))
-        )
-        return (
-            grid.groupBy("id", "v")
-            .agg(F.min(F.struct("d", "cluster")).alias("m"))
-            .select(
-                "id", "v",
-                F.col("m.cluster").alias("cluster"),
-                F.col("m.d").alias("d"),
-            )
-        )
+        return _nearest_centroid(base, list(enumerate(cent)), "cluster")
 
     for _ in range(iters):
         scaled = [
@@ -1099,7 +762,7 @@ def pq_adc_topk_deterministic(
 ) -> DataFrame:
     """Product-quantization ADC search with DATA-DERIVED DETERMINISTIC
     codebooks — the cross-engine-verifiable sibling of
-    :class:`PqIvfIndex` (whose learned KMeans codebooks cannot be
+    :meth:`IvfIndex.build_pq` (whose learned KMeans codebooks cannot be
     SQL-replayed).
 
     Codebook for subspace s = the s-th subvector of the first ``ksub``
@@ -1126,24 +789,11 @@ def pq_adc_topk_deterministic(
     base = df.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
     )
-    cent_rows = [
-        [float(x) for x in r["v"]]
-        for r in base.filter((F.col("id") % centroid_stride) == 0)
-        .orderBy("id")
-        .limit(ksub)
-        .collect()
-    ]
+    cent_rows = [v for _, v in _strided_centroids(base, ksub, centroid_stride)]
     qv = [float(x) for x in query]
-
-    def py_sq_l2(a, b) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
     # query-to-codeword lookup table, driver-side (m x ksub floats)
     qtab = {
-        (s, c): py_sq_l2(
+        (s, c): _py_sq_l2(
             qv[s * sub:(s + 1) * sub], cw[s * sub:(s + 1) * sub]
         )
         for s in range(m)
@@ -1185,12 +835,11 @@ def pq_adc_topk_deterministic(
         .orderBy("adc_dist", "id")
         .limit(candidates)
     )
-    q = F.transform(vec_lit(query), lambda x: x.cast("double"))
     return (
         cand.select(
             F.col("id").alias(id_col),
             F.col("adc_dist"),
-            cosine(F.col("v"), q).alias("cosine_sim"),
+            _cosine_to(F.col("v"), query).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.col(id_col))
         .limit(k)
@@ -1273,8 +922,6 @@ def hash_embed_cosine_topk(
     bucket rows broadcast onto the corpus rows; candidates are only
     documents sharing ≥1 bucket with the query (cosine 0 otherwise).
     """
-    from databricks_etl_pipelines_spark.functions.numeric import stable_round
-
     # Pinned (r15): emb feeds norms, the query-row filter and the dot
     # pass — unpinned, each reference re-ran the md5 token-hash pass
     # (the operator's dominant cost). Lazy localCheckpoint replaces the
@@ -1285,6 +932,20 @@ def hash_embed_cosine_topk(
     # cache through plan-fragment matching (dishonest under a warm
     # bench re-run).
     emb = hash_embed_buckets(df, text_col, id_col, dim=dim).transform(invocation_pin)
+    _, rel = _hash_relevance(emb, query_id, round_digits)
+    return _cosine_topk(rel, id_col, k, F.col("rel"), src="id")
+
+
+def _hash_relevance(
+    emb: DataFrame, query_id, round_digits: int
+) -> tuple[DataFrame, DataFrame]:
+    """``(norms(id, n2), rel(id, rel))`` over hash-embedding rows: squared
+    norms and dot products with document ``query_id`` as exact BIGINT
+    sums, then one stable-rounded double ratio per document sharing a
+    bucket with the query (the query itself excluded). The query's
+    ≤ ``dim`` bucket rows and its norm broadcast onto the corpus rows."""
+    from databricks_etl_pipelines_spark.functions.numeric import stable_round
+
     norms = emb.groupBy("id").agg(
         F.sum(F.col("val") * F.col("val")).alias("n2")
     )
@@ -1294,34 +955,21 @@ def hash_embed_cosine_topk(
     qn = norms.filter(F.col("id") == query_id).select(
         F.col("n2").alias("qn2")
     )
-    dots = (
-        emb.filter(F.col("id") != query_id)
-        .join(F.broadcast(q), "bucket")
-        .groupBy("id")
-        .agg(F.sum(F.col("val") * F.col("qval")).alias("dot"))
-    )
-    sim = stable_round(
+    rel = stable_round(
         F.col("dot")
         / (F.sqrt(F.col("n2").cast("double"))
            * F.sqrt(F.col("qn2").cast("double"))),
         round_digits,
     )
-    return (
-        dots.join(norms, "id")
+    return norms, (
+        emb.filter(F.col("id") != query_id)
+        .join(F.broadcast(q), "bucket")
+        .groupBy("id")
+        .agg(F.sum(F.col("val") * F.col("qval")).alias("dot"))
+        .join(norms, "id")
         .crossJoin(F.broadcast(qn))
-        .select(F.col("id").alias(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
-        .limit(k)
+        .select("id", rel.alias("rel"))
     )
-
-
-def _py_sq_l2(a: Sequence[float], b: Sequence[float]) -> float:
-    """Driver-side squared L2 with the SAME strict left-fold op order as
-    sq_l2 / the DuckDB list_reduce replay — probe decisions must agree."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + (x - y) * (x - y)
-    return acc
 
 
 def _cosine_topk_local(
@@ -1331,7 +979,7 @@ def _cosine_topk_local(
     id_col: str,
     k: int,
 ) -> DataFrame | None:
-    """:class:`DetIvfIndex`'s probe on the driver: :func:`cosine` in
+    """:meth:`IvfIndex.probe` on the driver: :func:`cosine` in
     numpy op for op (strict left-fold dot and norms, ``nullif`` of a zero
     norm product to NULL) and the same ordering. None when the list
     files' schemas differ, the stored vectors hold NULLs, non-finite
@@ -1373,21 +1021,32 @@ def _cosine_topk_local(
     return spark.createDataFrame(pa.table(columns), schema)
 
 
-class DetIvfIndex:
-    """Persisted deterministic-quantizer IVF index with INCREMENTAL
-    append — the streaming-ingest closure of the cross-engine IVF family.
+class IvfIndex:
+    """Persisted IVF index: inverted lists written ONCE hive-partitioned by
+    ``list_id``, probed MANY times with partition-pruned reads, and grown
+    by incremental :meth:`append`.
 
-    The coarse quantizer (strided corpus centroids,
-    :func:`assign_deterministic_lists`) is FROZEN at build; appending a
-    batch argmin-assigns it against those centroids with the identical
-    broadcast-grid + groupBy-min machinery (same IEEE fold order), then
-    appends ONLY the touched list partitions of the hive layout. Probes
-    hive-prune to ``nprobe`` list dirs, so probe cost stays list-bounded
-    no matter how many appends have landed. Because the quantizer is a
-    relational rule, a DuckDB oracle replays build + append + probe
-    value-for-value (`similarity_incremental_ivf`) — the differential
-    check the KMeans :class:`IvfIndex` cannot have; production keeps the
-    learned quantizer and this class's storage/append/probe shape.
+    Layout under ``root``: ``lists/list_id=*`` parquet of ``(id, v)`` rows
+    (plus ``codes`` for a PQ index) and ``centroids.json`` as
+    ``[[list_id, centroid], ...]``; a PQ index also holds ``pq_meta.json``
+    (its codebooks). Three builders fill the same layout:
+
+    * :meth:`build` — strided corpus centroids
+      (:func:`assign_deterministic_lists`). The quantizer is a relational
+      rule, so a DuckDB oracle replays build + append + probe
+      value-for-value (``similarity_incremental_ivf``).
+    * :meth:`build_kmeans` — learned KMeans centroids (:func:`ivf_index`)
+      fit on a sample; at 100 TB every vector is assigned once and each
+      query reads only ``nprobe``/``nlist`` of the data.
+    * :meth:`build_pq` — KMeans lists plus a product-quantization
+      ``codes`` column for ADC probes (:meth:`probe_pq`).
+
+    The quantizer is FROZEN at build. :meth:`append` argmin-assigns a batch
+    against the stored centroids with the strict-fold broadcast grid
+    (:func:`_nearest_centroid`) and appends ONLY the touched list
+    partitions, so probe cost stays list-bounded however many appends
+    land. Every probe ranks lists by the strict-fold squared L2, ties to
+    the lower list id (:func:`_probe_lists`).
     """
 
     def __init__(self, root: str):
@@ -1395,15 +1054,37 @@ class DetIvfIndex:
 
     @property
     def _lists(self) -> str:
-        import os
-
         return os.path.join(self.root, "lists")
 
     @property
     def _meta(self) -> str:
-        import os
-
         return os.path.join(self.root, "centroids.json")
+
+    @property
+    def _pq_meta(self) -> str:
+        return os.path.join(self.root, "pq_meta.json")
+
+    # -- build --------------------------------------------------------------
+
+    def _write(
+        self,
+        lists: DataFrame,
+        cent_rows: Sequence[tuple[int, Sequence[float]]],
+        pq: dict | None = None,
+    ) -> None:
+        """The one list write: ``(id, v, list_id[, codes])`` rows
+        overwrite ``lists/``, then the centroids and PQ metadata."""
+        lists.write.partitionBy("list_id").mode("overwrite").parquet(
+            self._lists
+        )
+        os.makedirs(self.root, exist_ok=True)
+        with open(self._meta, "w") as f:
+            json.dump(cent_rows, f)
+        if pq is not None:
+            with open(self._pq_meta, "w") as f:
+                json.dump(pq, f)
+        elif os.path.exists(self._pq_meta):
+            os.remove(self._pq_meta)
 
     def build(
         self,
@@ -1413,55 +1094,143 @@ class DetIvfIndex:
         nlist: int = 16,
         centroid_stride: int = 29,
     ) -> None:
-        import json
-        import os
-
-        _, assigned, cent_rows = assign_deterministic_lists(
+        assigned, cent_rows = assign_deterministic_lists(
             df, vec_col, id_col, nlist=nlist, centroid_stride=centroid_stride
         )
-        assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-            self._lists
+        self._write(assigned, cent_rows)
+
+    def build_kmeans(
+        self,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        nlist: int = 64,
+        seed: int = 42,
+        sample_fraction: float | None = None,
+        max_iter: int = 5,
+    ) -> None:
+        assigned, centroids = ivf_index(
+            df, vec_col, id_col, nlist=nlist, seed=seed,
+            sample_fraction=sample_fraction, max_iter=max_iter,
         )
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta, "w") as f:
-            json.dump(cent_rows, f)
+        # align the shuffle with the layout: one task per list → ~1 file
+        # per list directory
+        self._write(
+            assigned.repartition(nlist, "list_id"),
+            list(enumerate(centroids.tolist())),
+        )
+
+    def build_pq(
+        self,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        nlist: int = 64,
+        m: int = 4,
+        k: int = 16,
+        seed: int = 42,
+        sample_fraction: float | None = None,
+        max_iter: int = 5,
+        residual: bool = True,
+    ) -> None:
+        """KMeans lists (:meth:`build_kmeans`) where every vector also
+        stores ``m`` small-int codes — its nearest codebook centroid per
+        subspace (codebooks: per-subspace Lloyd's over a driver sample,
+        k=16..256). At 100 TB the codes are D/m·(8/32)× smaller than the
+        raw vectors, so an ADC probe reads a few bytes per candidate.
+
+        ``residual=True`` (default) is the full IVFADC shape (Jégou et al.
+        2011): each vector is quantized as ``v - coarse_centroid[list_id]``.
+        Residuals concentrate near the origin, so the same codebook budget
+        spends its centroids on a much tighter distribution — quantization
+        error drops (pinned by test_pq_residual_beats_plain_quantization).
+        """
+        assigned, centroids = ivf_index(
+            df, vec_col, id_col, nlist=nlist, seed=seed,
+            sample_fraction=sample_fraction, max_iter=max_iter,
+        )
+        assigned = assigned.persist()
+        dim = len(assigned.select("v").head()["v"])
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        sub = dim // m
+        # per-subspace codebooks fit on a driver-side sample: k centroids of
+        # a `sub`-dim space need thousands of points, not the full table
+        srows = assigned.select("v", "list_id").limit(20000).collect()
+        sample = np.stack(
+            # bounded driver pull — no full-table count or collect
+            [np.asarray(r["v"], dtype=np.float64) for r in srows]
+        )
+        if residual:
+            sample = sample - centroids[[r["list_id"] for r in srows]]
+        rng = np.random.RandomState(seed)
+        codebooks = []
+        for j in range(m):
+            block = sample[:, j * sub : (j + 1) * sub]
+            # tiny Lloyd's iterations, numpy-only (no sklearn in image)
+            cent = block[rng.choice(len(block), size=k, replace=False)]
+            for _ in range(max_iter):
+                d2 = ((block[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+                owner = d2.argmin(axis=1)
+                for c in range(k):
+                    members = block[owner == c]
+                    if len(members):
+                        cent[c] = members.mean(axis=0)
+            codebooks.append(cent.tolist())
+        cb = np.asarray(codebooks)  # m × k × sub
+
+        def encode(batches):
+            for pdf in batches:
+                mat = np.stack(
+                    pdf["v"].apply(lambda v: np.asarray(v, dtype=np.float64))
+                )
+                if residual:
+                    # centroids (nlist × dim) ride the closure — tiny
+                    mat = mat - centroids[pdf["list_id"].to_numpy()]
+                codes = []
+                for j in range(m):
+                    block = mat[:, j * sub : (j + 1) * sub]
+                    d2 = (
+                        (block[:, None, :] - cb[j][None, :, :]) ** 2
+                    ).sum(axis=2)
+                    codes.append(d2.argmin(axis=1).astype("int32"))
+                out = pdf[["id", "v", "list_id"]].copy()
+                out["codes"] = np.stack(codes, axis=1).tolist()
+                yield out
+
+        encoded = assigned.mapInPandas(
+            encode,
+            "id bigint, v array<double>, list_id int, codes array<int>",
+        )
+        self._write(
+            encoded.repartition(nlist, "list_id"),
+            list(enumerate(centroids.tolist())),
+            pq={"m": m, "k": k, "sub": sub, "residual": residual,
+                "codebooks": cb.tolist()},
+        )
+        assigned.unpersist()
+
+    # -- append -------------------------------------------------------------
 
     def _centroid_rows(self) -> list[tuple[int, list[float]]]:
-        import json
-
         with open(self._meta) as f:
             return [(int(c), [float(x) for x in v]) for c, v in json.load(f)]
 
     def append(self, batch: DataFrame, vec_col: str, id_col: str) -> None:
-        spark = batch.sparkSession
-        rows = self._centroid_rows()
-        # an Arrow local relation (cid bigint, cv array<double>):
-        # broadcasting it needs no Python-worker job
-        cent = spark.createDataFrame(
-            pa.table(
-                {
-                    "cid": pa.array([c for c, _ in rows], pa.int64()),
-                    "cv": pa.array(
-                        [v for _, v in rows], pa.list_(pa.float64())
-                    ),
-                }
+        if os.path.exists(self._pq_meta):
+            raise ValueError(
+                f"{self.root} stores PQ codes, which append cannot encode; "
+                "rebuild it with build_pq"
             )
-        )
         batch = local_probe.cast_to_stored(batch, id_col, self._lists, "id")
         base = batch.select(
             F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
         )
-        grid = base.join(F.broadcast(cent)).withColumn(
-            "d", sq_l2(F.col("v"), F.col("cv"))
-        )
-        assigned = (
-            grid.groupBy("id", "v")
-            .agg(F.min(F.struct("d", "cid")).alias("m"))
-            .select("id", "v", F.col("m.cid").alias("list_id"))
-        )
-        assigned.write.partitionBy("list_id").mode("append").parquet(
-            self._lists
-        )
+        _nearest_centroid(base, self._centroid_rows()).drop(
+            "d"
+        ).write.partitionBy("list_id").mode("append").parquet(self._lists)
+
+    # -- probe --------------------------------------------------------------
 
     def probe(
         self,
@@ -1484,30 +1253,91 @@ class DetIvfIndex:
         pruning plan is then not inspectable on the result; inspect it
         on an index above the threshold, where the result stays lazy
         with ``PartitionFilters: [list_id …]`` on the scan."""
-        qv = [float(x) for x in query]
-        probe = [
-            cid
-            for cid, _ in sorted(
-                ((cid, _py_sq_l2(qv, cv)) for cid, cv in self._centroid_rows()),
-                key=lambda t: (t[1], t[0]),
-            )[:nprobe]
-        ]
-        files = local_probe.probed_files(self._lists, "list_id", probe)
+        lists = _probe_lists(self._centroid_rows(), query, nprobe)
+        files = local_probe.probed_files(self._lists, "list_id", lists)
         if files is not None:
+            qv = [float(x) for x in query]
             local = _cosine_topk_local(spark, files, qv, id_col, k)
             if local is not None:
                 return local
-        q = F.transform(vec_lit(query), lambda x: x.cast("double"))
-        return (
-            spark.read.parquet(self._lists)
-            .filter(F.col("list_id").isin(probe))
-            .select(
-                F.col("id").alias(id_col),
-                cosine(F.col("v"), q).alias("cosine_sim"),
-            )
-            .orderBy(F.desc("cosine_sim"), F.col(id_col))
-            .limit(k)
+        return _cosine_topk(
+            spark.read.parquet(self._lists).filter(F.col("list_id").isin(lists)),
+            id_col, k, _cosine_to(F.col("v"), query), src="id",
         )
+
+    def probe_pq(
+        self,
+        spark: SparkSession,
+        query: Sequence[float],
+        kk: int = 10,
+        nprobe: int = 8,
+        rerank: int = 50,
+    ) -> DataFrame:
+        """ADC probe of a :meth:`build_pq` index (asymmetric distance
+        computation, Jégou et al. 2011): the query precomputes an m×k
+        lookup table of subspace distances ON THE DRIVER, each candidate's
+        approximate distance is m table lookups over its codes
+        (Arrow-vectorized numpy, no full vectors touched), and the
+        ``rerank`` nearest survivors are re-ranked by exact cosine to the
+        final ``(vec_id, cosine_sim)`` top-``kk``. A residual index needs
+        one table PER PROBED LIST (the query re-expressed relative to
+        each list's centroid): nprobe × m × k floats, gathered per
+        candidate by list_id."""
+        with open(self._pq_meta) as f:
+            pq = json.load(f)
+        cb = np.asarray(pq["codebooks"])  # m × k × sub
+        m, sub = pq["m"], pq["sub"]
+        residual = pq.get("residual", False)
+        qvec = np.asarray(query, dtype=np.float64)
+        rows = self._centroid_rows()
+        lists = _probe_lists(rows, query, nprobe)
+
+        def sub_table(q: np.ndarray) -> np.ndarray:
+            # distance from each query subvector to every codebook centroid
+            return np.stack(
+                [
+                    ((cb[j] - q[j * sub : (j + 1) * sub][None, :]) ** 2).sum(
+                        axis=1
+                    )
+                    for j in range(m)
+                ]
+            )
+
+        if residual:
+            centroids = dict(rows)
+            tables = np.zeros((max(centroids) + 1, m, cb.shape[1]))
+            for li in lists:
+                tables[li] = sub_table(qvec - np.asarray(centroids[li]))
+        else:
+            tables = np.broadcast_to(
+                sub_table(qvec), (1, m, cb.shape[1])
+            ).copy()
+
+        @pandas_udf("double")
+        def adc_dist(list_id: pd.Series, codes: pd.Series) -> pd.Series:
+            c = np.stack(codes.apply(np.asarray))
+            li = (
+                list_id.to_numpy() if residual
+                else np.zeros(len(c), dtype=int)
+            )
+            return pd.Series(
+                tables[li[:, None], np.arange(m)[None, :], c].sum(axis=1)
+            )
+
+        cands = (
+            spark.read.parquet(self._lists)
+            .filter(F.col("list_id").isin(lists))
+            .withColumn("adc", adc_dist(F.col("list_id"), F.col("codes")))
+            .orderBy("adc")
+            .limit(rerank)
+        )
+        return _cosine_topk(
+            cands, "vec_id", kk, _cosine_to(F.col("v"), query), src="id"
+        )
+
+
+# the name perfbench/workloads.py and perfbench/spans.py still use
+DetIvfIndex = IvfIndex
 
 
 def ann_recall_report(
@@ -1551,15 +1381,10 @@ def ann_recall_report(
 
     from databricks_etl_pipelines_spark.functions.numeric import stable_round
 
-    base, assigned, _ = assign_deterministic_lists(
+    assigned, cent_rows = assign_deterministic_lists(
         df, vec_col, id_col, nlist=nlist, centroid_stride=centroid_stride
     )
-    cent = (
-        base.filter((F.col("id") % centroid_stride) == 0)
-        .orderBy("id")
-        .limit(nlist)
-        .select(F.col("id").alias("cid"), F.col("v").alias("cv"))
-    )
+    cent = _centroid_frame(df.sparkSession, cent_rows)
     qs = queries_df.select(
         F.col(q_id_col).alias("query_id"),
         as_double_array(q_vec_col).alias("qv"),
@@ -1653,33 +1478,8 @@ def mmr_rerank_topk(
     from databricks_etl_pipelines_spark.functions.numeric import stable_round
 
     emb = hash_embed_buckets(df, text_col, id_col, dim=dim).persist()
-    norms = emb.groupBy("id").agg(
-        F.sum(F.col("val") * F.col("val")).alias("n2")
-    )
-    q = emb.filter(F.col("id") == query_id).select(
-        "bucket", F.col("val").alias("qval")
-    )
-    qn = norms.filter(F.col("id") == query_id).select(
-        F.col("n2").alias("qn2")
-    )
-    rel = stable_round(
-        F.col("dot")
-        / (F.sqrt(F.col("n2").cast("double"))
-           * F.sqrt(F.col("qn2").cast("double"))),
-        round_digits,
-    )
-    cands = (
-        emb.filter(F.col("id") != query_id)
-        .join(F.broadcast(q), "bucket")
-        .groupBy("id")
-        .agg(F.sum(F.col("val") * F.col("qval")).alias("dot"))
-        .join(norms, "id")
-        .crossJoin(F.broadcast(qn))
-        .select("id", rel.alias("rel"))
-        .orderBy(F.desc("rel"), "id")
-        .limit(n_cands)
-        .persist()
-    )
+    norms, rel = _hash_relevance(emb, query_id, round_digits)
+    cands = rel.orderBy(F.desc("rel"), "id").limit(n_cands).persist()
     # full candidate×candidate similarity matrix, zeros materialized
     ce = emb.join(
         F.broadcast(cands.select("id")), "id"

@@ -1490,7 +1490,7 @@ def similarity_ivf_crossengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy(F.desc("cosine_sim"), "vec_id")
 
 
-_INCR_IVF_CACHE: dict[str, object] = {}
+_INCR_IVF_CACHE: dict[str, IvfIndex] = {}
 
 
 @query(
@@ -1505,16 +1505,11 @@ def similarity_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-ingest closure of the ANN family: append cost is one
     broadcast grid over the batch, probe cost stays hive-pruned to nprobe
     list dirs no matter how many appends landed
-    (operators/similarity.py::DetIvfIndex)."""
-    from databricks_etl_pipelines_spark.operators.similarity import (
-        DetIvfIndex,
-    )
-    from databricks_etl_pipelines_spark.sources.scratch import scratch_dir
-
+    (operators/similarity.py::IvfIndex)."""
     idx = _INCR_IVF_CACHE.get(sf_dir)
     if idx is None:
         emb = table(spark, sf_dir, "embeddings")
-        idx = DetIvfIndex(scratch_dir("det_ivf_"))
+        idx = IvfIndex(scratch_dir("det_ivf_"))
         idx.build(
             emb.filter(F.col("vec_id") % 2 == 0), "embedding", "vec_id",
             nlist=16, centroid_stride=29,
@@ -1736,7 +1731,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     sample_fraction=0.5)
 
 
-_PQ_INDEX_CACHE: dict[str, "object"] = {}
+_PQ_INDEX_CACHE: dict[str, IvfIndex] = {}
 
 
 @query("similarity_pq_ivf_topk")
@@ -1745,14 +1740,13 @@ def similarity_pq_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores candidates from uint8 codes via a driver-side lookup table
     before re-ranking survivors exactly (rows-only: learned codebooks;
     recall pinned by test_pq_ivf_adc_probe_recall)."""
-    from databricks_etl_pipelines_spark.operators.similarity import PqIvfIndex
-
     emb = table(spark, sf_dir, "embeddings")
     qv = _query_vector(spark, sf_dir)
     idx = _PQ_INDEX_CACHE.get(sf_dir)
     if idx is None:
-        idx = PqIvfIndex.build_pq(
-            emb, "embedding", "vec_id", scratch_dir("pq_ivf_"),
+        idx = IvfIndex(scratch_dir("pq_ivf_"))
+        idx.build_pq(
+            emb, "embedding", "vec_id",
             nlist=16, m=4, k=16, seed=42, sample_fraction=0.5,
         )
         _PQ_INDEX_CACHE[sf_dir] = idx
@@ -1772,12 +1766,12 @@ def similarity_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _query_vector(spark, sf_dir)
     idx = _IVF_INDEX_CACHE.get(sf_dir)
     if idx is None:
-        idx = IvfIndex.build(
-            emb, "embedding", "vec_id", scratch_dir("ivf_index_"),
-            nlist=16, seed=42, sample_fraction=0.5,
+        idx = IvfIndex(scratch_dir("ivf_index_"))
+        idx.build_kmeans(
+            emb, "embedding", "vec_id", nlist=16, seed=42, sample_fraction=0.5,
         )
         _IVF_INDEX_CACHE[sf_dir] = idx
-    return idx.probe(spark, qv, k=20, nprobe=4)
+    return idx.probe(spark, qv, "vec_id", k=20, nprobe=4)
 
 
 @query("similarity_pandas_udf_topk", _TOPK_COSINE_ORACLE)

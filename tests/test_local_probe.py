@@ -21,7 +21,7 @@ from databricks_etl_pipelines_spark.operators.retrieval import (
     InvertedTextIndex,
     TornIndexError,
 )
-from databricks_etl_pipelines_spark.operators.similarity import DetIvfIndex
+from databricks_etl_pipelines_spark.operators.similarity import IvfIndex
 
 _DRIVER, _SPARK = 1 << 62, 0
 
@@ -113,7 +113,7 @@ def test_ivf_driver_path_equals_spark_path(
             "doc_id long, emb array<double>",
         )
 
-    idx = DetIvfIndex(str(tmp_path_factory.mktemp("ivfdiff") / "idx"))
+    idx = IvfIndex(str(tmp_path_factory.mktemp("ivfdiff") / "idx"))
     idx.build(frame(base, 0), "emb", "doc_id", nlist=3, centroid_stride=2)
     _same_on_both_paths(lambda: idx.probe(spark, queries[0], "doc_id", k=k,
                                           nprobe=2))
@@ -121,6 +121,50 @@ def test_ivf_driver_path_equals_spark_path(
     for q in queries[1:]:
         _same_on_both_paths(lambda: idx.probe(spark, q, "doc_id", k=k,
                                               nprobe=2))
+
+
+def _clustered(spark, n, dim=8, first_id=0):
+    """``n`` vectors around four corners of a ``dim``-cube, with sevenths
+    so the fold order of their sums matters."""
+    return spark.createDataFrame(
+        [
+            (first_id + i,
+             [(4.0 if (i % 4) == j % 4 else 0.0) + ((i * j) % 7 - 3) / 7
+              for j in range(dim)])
+            for i in range(n)
+        ],
+        "doc_id long, emb array<double>",
+    )
+
+
+def test_kmeans_index_driver_path_equals_spark_path(spark, tmp_path):
+    """One probe serves a KMeans-built index too: the driver path and
+    the forced Spark path agree on schema, row order and doubles."""
+    idx = IvfIndex(str(tmp_path / "kmeans"))
+    idx.build_kmeans(_clustered(spark, 40), "emb", "doc_id", nlist=4, seed=7)
+    for q, k, nprobe in (([4.0] + [0.0] * 7, 5, 1), ([1.0] * 8, 12, 2),
+                         ([0.0, -1.0] * 4, 40, 4)):
+        _, rows = _same_on_both_paths(
+            lambda: idx.probe(spark, q, "doc_id", k=k, nprobe=nprobe)
+        )
+        assert 0 < len(rows) <= k
+
+
+def test_append_refuses_a_pq_index(spark, tmp_path):
+    """``append`` cannot encode PQ codes, so it raises on a
+    ``build_pq`` index and leaves the lists as they were; ``probe``
+    still serves the index on both paths."""
+    idx = IvfIndex(str(tmp_path / "pq"))
+    idx.build_pq(_clustered(spark, 40), "emb", "doc_id", nlist=2, m=2, k=4,
+                 seed=7)
+    before = _same_on_both_paths(
+        lambda: idx.probe(spark, [4.0] + [0.0] * 7, "doc_id", k=6, nprobe=2)
+    )
+    with pytest.raises(ValueError, match="PQ codes"):
+        idx.append(_clustered(spark, 4, first_id=100), "emb", "doc_id")
+    assert _same_on_both_paths(
+        lambda: idx.probe(spark, [4.0] + [0.0] * 7, "doc_id", k=6, nprobe=2)
+    ) == before
 
 
 def test_driver_path_errors_and_no_jobs(spark, tmp_path):
@@ -137,7 +181,7 @@ def test_driver_path_errors_and_no_jobs(spark, tmp_path):
     vecs = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(6)], "doc_id long, emb array<double>"
     )
-    ivf = DetIvfIndex(str(tmp_path / "ivf"))
+    ivf = IvfIndex(str(tmp_path / "ivf"))
     ivf.build(vecs, "emb", "doc_id", nlist=2, centroid_stride=3)
 
     sc = spark.sparkContext
@@ -184,7 +228,7 @@ def test_append_casts_ids_to_the_stored_type(spark, tmp_path):
     assert schema["doc_id"].dataType == LongType()
     assert rows[0][0] == 10 and len(rows) == 5
 
-    ivf = DetIvfIndex(str(tmp_path / "ivf"))
+    ivf = IvfIndex(str(tmp_path / "ivf"))
     ivf.build(
         spark.createDataFrame(
             [(i, [float(i), 1.0]) for i in range(6)],

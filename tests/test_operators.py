@@ -201,10 +201,11 @@ def test_minhash_consistent_with_exact_jaccard(spark):
     assert len(exact) > 0
 
 
-def test_persisted_ivf_index_build_probe(spark, sf_dir, tmp_path):
-    """IvfIndex: one build, partition-pruned probes. The probe scan must
-    prune list directories (PartitionFilters), match the per-call ivf_topk
-    result, and keep good recall vs brute force."""
+def test_persisted_ivf_index_build_probe(spark, sf_dir, tmp_path, monkeypatch):
+    """IvfIndex.build_kmeans: one build, partition-pruned probes. The
+    Spark-path probe scan must prune list directories (PartitionFilters),
+    and the probe must keep good recall vs brute force."""
+    from databricks_etl_pipelines_spark.operators import local_probe
     from databricks_etl_pipelines_spark.operators.similarity import (
         IvfIndex,
         brute_force_cosine_topk,
@@ -213,11 +214,13 @@ def test_persisted_ivf_index_build_probe(spark, sf_dir, tmp_path):
 
     emb = table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    idx = IvfIndex.build(
-        emb, "embedding", "vec_id", str(tmp_path / "ivf"), nlist=8, seed=42
-    )
-    probe = idx.probe(spark, qv, k=10, nprobe=4)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
+    idx = IvfIndex(str(tmp_path / "ivf"))
+    idx.build_kmeans(emb, "embedding", "vec_id", nlist=8, seed=42)
+    probe = idx.probe(spark, qv, "vec_id", k=10, nprobe=4)
+    with monkeypatch.context() as mp:  # a small probe runs on the driver
+        mp.setattr(local_probe, "LOCAL_PROBE_MAX_BYTES", 0)
+        spark_probe = idx.probe(spark, qv, "vec_id", k=10, nprobe=4)
+    plan = spark_probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "list_id" in plan
 
     exact = {
@@ -229,29 +232,11 @@ def test_persisted_ivf_index_build_probe(spark, sf_dir, tmp_path):
     got = {r.vec_id for r in probe.collect()}
     assert len(exact & got) >= 6
     # a second probe reuses the persisted lists — no rebuild, same result
-    again = {r.vec_id for r in idx.probe(spark, qv, k=10, nprobe=4).collect()}
+    again = {
+        r.vec_id
+        for r in idx.probe(spark, qv, "vec_id", k=10, nprobe=4).collect()
+    }
     assert again == got
-
-
-def test_persisted_lsh_index_build_probe(spark, sf_dir, tmp_path):
-    """LshIndex: signature as a partition column; the probe reads exactly
-    one bucket directory and always finds the query vector itself."""
-    from databricks_etl_pipelines_spark.operators.similarity import LshIndex
-    from databricks_etl_pipelines_spark.sources import table
-
-    emb = table(spark, sf_dir, "embeddings")
-    first = emb.orderBy("vec_id").first()
-    qv = [float(x) for x in first["embedding"]]
-    idx = LshIndex.build(
-        emb, "embedding", "vec_id", str(tmp_path / "lsh"),
-        dim=len(qv), bits=4, seed=42,
-    )
-    probe = idx.probe(spark, qv, k=5)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "sig" in plan
-    rows = probe.collect()
-    assert rows and rows[0].vec_id == first["vec_id"]
-    assert abs(rows[0].cosine_sim - 1.0) < 1e-9
 
 
 def test_ivf_index_partitioned_probe_prunes(spark, sf_dir, tmp_path):
@@ -438,7 +423,7 @@ def test_pq_ivf_adc_probe_recall(spark, sf_dir, tmp_path):
     """PQ-lite: ADC over uint8 codes + exact re-rank must recover most of
     the true top-10 while scanning only nprobe lists (partition-pruned)."""
     from databricks_etl_pipelines_spark.operators.similarity import (
-        PqIvfIndex,
+        IvfIndex,
         brute_force_cosine_topk,
     )
     from databricks_etl_pipelines_spark.sources import table
@@ -446,10 +431,8 @@ def test_pq_ivf_adc_probe_recall(spark, sf_dir, tmp_path):
     emb = table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     assert len(qv) % 4 == 0
-    idx = PqIvfIndex.build_pq(
-        emb, "embedding", "vec_id", str(tmp_path / "pq"),
-        nlist=8, m=4, k=16, seed=42,
-    )
+    idx = IvfIndex(str(tmp_path / "pq"))
+    idx.build_pq(emb, "embedding", "vec_id", nlist=8, m=4, k=16, seed=42)
     probe = idx.probe_pq(spark, qv, kk=10, nprobe=4, rerank=60)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "list_id" in plan
@@ -473,21 +456,22 @@ def test_pq_residual_beats_plain_quantization(spark, sf_dir, tmp_path):
 
     import numpy as np
 
-    from databricks_etl_pipelines_spark.operators.similarity import PqIvfIndex
+    from databricks_etl_pipelines_spark.operators.similarity import IvfIndex
     from databricks_etl_pipelines_spark.sources import table
 
     emb = table(spark, sf_dir, "embeddings")
 
     def recon_mse(root, residual):
-        idx = PqIvfIndex.build_pq(
-            emb, "embedding", "vec_id", root,
+        idx = IvfIndex(root)
+        idx.build_pq(
+            emb, "embedding", "vec_id",
             nlist=8, m=4, k=16, seed=42, residual=residual,
         )
-        with open(f"{root}/{PqIvfIndex.PQ_META}") as f:
+        with open(f"{root}/pq_meta.json") as f:
             pq = json.load(f)
         assert pq["residual"] is residual  # meta round-trips the flag
         cb = np.asarray(pq["codebooks"])  # m × k × sub
-        cents = idx._centroids()
+        cents = {c: np.asarray(v) for c, v in idx._centroid_rows()}
         rows = spark.read.parquet(f"{root}/lists").collect()
         errs = []
         for r in rows:
@@ -2107,20 +2091,29 @@ def test_bm25_plan_and_semantics(spark):
     assert all(r.score_bm25 < cap for r in rows)
 
 
-def test_bm25_terms_all_present_in_corpus(spark):
+def test_bm25_terms_all_present_in_corpus(spark, sf_dir):
     """Fixture guard (r16, from the r15 ADVICE): the single-pass BM25
     computes a FINITE idf for a df=0 term (log(1 + (N+0.5)/0.5)) while
     the oracle's per-term max(CASE...) CTE yields NULL for a term absent
     from the corpus — the engines agree only while every _BM25_TERMS
     member actually occurs. Pin df_t >= 1 at every test scale so a
-    future term/fixture change trips here instead of in the driver."""
+    future term/fixture change trips here instead of in the driver.
+    Scales absent next to the ``sf_dir`` fixture are skipped."""
+    import os
+
     from pyspark.sql import functions as F
 
     from databricks_etl_pipelines_spark.functions.textfns import tokens
     from databricks_etl_pipelines_spark.plans.queries_llm import _BM25_TERMS
     from databricks_etl_pipelines_spark.sources import table
 
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    scales = [
+        os.path.join(os.path.dirname(sf_dir), name)
+        for name in ("sf0.001", "sf0.01")
+    ]
+    for sf in scales:
+        if not os.path.isdir(sf):
+            continue
         words = (
             table(spark, sf, "documents")
             .select(F.explode(tokens("text")).alias("word"))
