@@ -51,22 +51,31 @@ def probed_files(
     root: str, column: str, values: Iterable[object]
 ) -> list[str] | None:
     """The parquet files of the ``root/column=value`` directories, or None
-    when they total ``LOCAL_PROBE_MAX_BYTES`` or more, or hold no file.
-    A missing directory holds no rows. Names starting with ``_`` or ``.``
-    (``_SUCCESS``, ``.crc`` files) are skipped, as Spark's file index
+    when they total ``LOCAL_PROBE_MAX_BYTES`` or more, or hold no file
+    (see :func:`capped_files`)."""
+    files = capped_files(os.path.join(root, f"{column}={v}") for v in values)
+    return files or None
+
+
+def capped_files(dirs: Iterable[str]) -> list[str] | None:
+    """The files directly in ``dirs``, or None when they total
+    ``LOCAL_PROBE_MAX_BYTES`` or more. A missing directory holds no
+    rows. Subdirectories are skipped, and so are names starting with
+    ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files), as Spark's file index
     skips them."""
     files, total = [], 0
-    for value in values:
+    for d in dirs:
         try:
-            with os.scandir(os.path.join(root, f"{column}={value}")) as it:
-                entries = [e for e in it if not e.name.startswith(("_", "."))]
+            with os.scandir(d) as it:
+                entries = [
+                    e for e in it
+                    if not e.name.startswith(("_", ".")) and e.is_file()
+                ]
         except FileNotFoundError:
             continue
         files += [e.path for e in entries]
         total += sum(e.stat().st_size for e in entries)
-    if not files or total >= LOCAL_PROBE_MAX_BYTES:
-        return None
-    return files
+    return files if total < LOCAL_PROBE_MAX_BYTES else None
 
 
 def read_files(files: Sequence[str], columns: list[str]) -> pa.Table | None:

@@ -21,6 +21,7 @@ differential tests can exclude nondeterminism.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,45 +95,84 @@ def split_valid_quarantine(bronze: DataFrame) -> tuple[DataFrame, DataFrame]:
     mcc) from BOTH sides, silently losing them from the audit trail. The
     reference's ``subtract`` form (02_Silver_Cleanse_PII.py:120) retains such
     rows; so do we."""
+    return _split(bronze, *_split_columns())
+
+
+def _split_columns() -> tuple[F.Column, F.Column, F.Column]:
     pred = validation_predicate()
-    valid = bronze.filter(pred)
-    quarantined = bronze.filter(~F.coalesce(pred, F.lit(False))).withColumn(
-        "quarantine_reason", quarantine_reason()
-    )
-    return valid, quarantined
+    return pred, ~F.coalesce(pred, F.lit(False)), quarantine_reason()
+
+
+def _split(
+    bronze: DataFrame, keep: F.Column, drop: F.Column, reason: F.Column
+) -> tuple[DataFrame, DataFrame]:
+    quarantined = bronze.filter(drop).withColumn("quarantine_reason", reason)
+    return bronze.filter(keep), quarantined
+
+
+def _with_columns(df: DataFrame, cols: list[tuple[str, F.Column]]) -> DataFrame:
+    for name, col in cols:
+        df = df.withColumn(name, col)
+    return df
+
+
+def _pii_columns() -> list[tuple[str, F.Column]]:
+    return [
+        ("card_number_masked", mask_card_number("card_number")),
+        ("cardholder_token", tokenize_pii("cardholder_name")),
+    ]
+
+
+def _mask(df: DataFrame, pii: list[tuple[str, F.Column]]) -> DataFrame:
+    return _with_columns(df, pii).drop("card_number", "cardholder_name")
 
 
 def mask_pii(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "card_number_masked", mask_card_number("card_number")
-    ).withColumn(
-        "cardholder_token", tokenize_pii("cardholder_name")
-    ).drop("card_number", "cardholder_name")
+    return _mask(df, _pii_columns())
+
+
+def _enrich_columns(stamps: bool) -> list[tuple[str, F.Column]]:
+    cols = [
+        ("mcc_category", map_lookup("mcc_code", MCC_CATEGORIES, default="other")),
+        ("event_date", F.to_date("event_timestamp")),
+        ("event_hour", F.hour("event_timestamp").cast("bigint")),
+        ("amount_bucket", bucketize("amount", *AMOUNT_BUCKETS)),
+        ("is_high_risk_mcc", F.col("mcc_code").isin(*HIGH_RISK_MCC)),
+        (
+            "risk_score_raw",
+            additive_score([(F.col(c), w) for c, w in RISK_TERMS]),
+        ),
+    ]
+    if stamps:
+        cols.append(("silver_timestamp", F.current_timestamp()))
+    return cols
 
 
 def enrich_silver(df: DataFrame, stamps: bool = False) -> DataFrame:
-    out = (
-        df.withColumn(
-            "mcc_category", map_lookup("mcc_code", MCC_CATEGORIES, default="other")
-        )
-        .withColumn("event_date", F.to_date("event_timestamp"))
-        .withColumn("event_hour", F.hour("event_timestamp").cast("bigint"))
-        .withColumn("amount_bucket", bucketize("amount", *AMOUNT_BUCKETS))
-        .withColumn("is_high_risk_mcc", F.col("mcc_code").isin(*HIGH_RISK_MCC))
-        .withColumn(
-            "risk_score_raw",
-            additive_score([(F.col(c), w) for c, w in RISK_TERMS]),
-        )
-    )
-    if stamps:
-        out = out.withColumn("silver_timestamp", F.current_timestamp())
-    return out
+    return _with_columns(df, _enrich_columns(stamps))
+
+
+def silver_transformer(
+    stamps: bool = False,
+) -> Callable[[DataFrame], tuple[DataFrame, DataFrame]]:
+    """:func:`silver_transform` with its Columns built once, for a stream
+    that transforms every micro-batch. Building them costs a Py4J round
+    trip per literal and function call, about half of a call's time on a
+    2k-row batch; the plan each call builds is the same."""
+    split = _split_columns()
+    pii = _pii_columns()
+    enrich = _enrich_columns(stamps)
+
+    def transform(bronze: DataFrame) -> tuple[DataFrame, DataFrame]:
+        valid, quarantined = _split(bronze, *split)
+        return _with_columns(_mask(valid, pii), enrich), quarantined
+
+    return transform
 
 
 def silver_transform(bronze: DataFrame, stamps: bool = False) -> tuple[DataFrame, DataFrame]:
     """bronze → (silver, quarantine)."""
-    valid, quarantined = split_valid_quarantine(bronze)
-    return enrich_silver(mask_pii(valid), stamps=stamps), quarantined
+    return silver_transformer(stamps)(bronze)
 
 
 # ---------------------------------------------------------------------------

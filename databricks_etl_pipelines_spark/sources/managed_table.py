@@ -14,8 +14,21 @@ Every version is made by ``ManagedTable._commit``: it picks ``N``, writes
 Semantics mirrored from Delta MERGE whenMatchedUpdateAll /
 whenNotMatchedInsertAll: for keys present in the source, the source row
 wins; target rows with unmatched keys carry over; source rows with new keys
-insert. Implemented as ``source ∪ (target ⟕anti source on key)`` — one
-shuffle on the key, no driver-side collection, scales like any anti join.
+insert. Implemented as ``source ∪ (target ⟕anti source on key)``: one
+shuffle on the key, which scales like any anti join.
+
+Small commits run on the driver. A pruned MERGE or an append (to a
+bucketed or a flat table) whose source has at most :data:`CAP_ROWS` rows
+and whose prior files total less than ``local_probe.LOCAL_PROBE_MAX_BYTES``
+collects the source in one Spark job (bucket ids still come from Spark's
+``xxhash64`` in that projection), reads the prior files and writes the new
+ones with pyarrow; ``create_or_overwrite`` also takes a ``pyarrow.Table``.
+At this size a Spark commit's cost is fixed per job, not data. Both paths
+end in ``_commit``, which writes files Spark reads with the same schema
+(microsecond timestamps, no Arrow schema blob) and stamps the version's schema
+into the manifest, so the next commit needs no Spark job to learn it.
+Above the caps, or for a layout or a type the driver path does not cover,
+the Spark path runs.
 
 Write amplification: a table created with ``bucket_by=keys`` stores each
 snapshot hive-partitioned on ``__bucket = pmod(hash(keys), n_buckets)``.
@@ -33,13 +46,44 @@ import json
 import os
 import shutil
 import time
+import uuid
 import warnings
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampType,
+)
+
+from databricks_etl_pipelines_spark.operators import local_probe
 
 BUCKET_COL = "__bucket"
+
+# A cap on driver memory, not a measured crossover: the most source rows a
+# commit collects to the driver. Past it the source's Arrow copy, the prior
+# files (capped by ``local_probe.LOCAL_PROBE_MAX_BYTES``) and the output
+# could no longer be assumed small. It counts rows, not bytes: a table of
+# wide string or binary rows holds more than its row count suggests. A
+# source over the cap has been collected up to CAP_ROWS + 1 rows before
+# the Spark path evaluates it again. Perfbench's stream commits 2k rows.
+CAP_ROWS = 65_536
 
 
 def _log_path(root: str) -> str:
@@ -90,7 +134,7 @@ def _normalize_nullability(dt):
     return dt
 
 
-def _check_type_drift(prior: DataFrame, incoming: DataFrame, op: str) -> None:
+def _check_type_drift(prior: StructType, incoming: StructType, op: str) -> None:
     """Fail fast when a SHARED column changes type (e.g. int → string).
 
     Name-set drift is handled by the ``merge_schema`` gate, but a
@@ -101,12 +145,12 @@ def _check_type_drift(prior: DataFrame, incoming: DataFrame, op: str) -> None:
     columns and both types. Nullability differences are NOT drift (see
     ``_normalize_nullability``)."""
     prior_types = {
-        f.name: _normalize_nullability(f.dataType) for f in prior.schema.fields
+        f.name: _normalize_nullability(f.dataType) for f in prior.fields
     }
     bad = [
         f"{f.name} (table={prior_types[f.name].simpleString()}, "
         f"incoming={f.dataType.simpleString()})"
-        for f in incoming.schema.fields
+        for f in incoming.fields
         if f.name in prior_types
         and _normalize_nullability(f.dataType) != prior_types[f.name]
     ]
@@ -115,6 +159,86 @@ def _check_type_drift(prior: DataFrame, incoming: DataFrame, op: str) -> None:
             f"{op} type drift on shared columns — cast the incoming frame "
             f"explicitly: {'; '.join(bad)}"
         )
+
+
+def _schema_json(schema: StructType) -> str:
+    """The manifest's ``schema``: the data columns without the bucket
+    column, nullability and field metadata dropped. Delta keeps the same
+    thing in ``metaData.schemaString``."""
+    data = StructType([f for f in schema.fields if f.name != BUCKET_COL])
+    return _normalize_nullability(data).json()
+
+
+def _flat_atomic(schema: StructType) -> bool:
+    """Whether every column has a type the driver path writes as Spark
+    does. TimestampNTZ is left out: a pyarrow file carries no Spark
+    schema, so Spark would read its NTZ column as NTZ only while
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on."""
+    atomic = (
+        BooleanType(), ByteType(), ShortType(), IntegerType(), LongType(),
+        FloatType(), DoubleType(), StringType(), BinaryType(), DateType(),
+        TimestampType(),
+    )
+    return all(
+        isinstance(f.dataType, DecimalType) or f.dataType in atomic
+        for f in schema.fields
+    )
+
+
+def _nullable(schema: pa.Schema) -> pa.Schema:
+    return pa.schema([f.with_nullable(True) for f in schema])
+
+
+def _partitioned(vdir: str) -> bool:
+    with os.scandir(vdir) as it:
+        return any(e.is_dir() for e in it)
+
+
+def _read_arrow(files: Sequence[str], schema: pa.Schema) -> pa.Table:
+    """The files' rows cast to ``schema``. A file under a ``__bucket=k``
+    dir gets its bucket column back when ``schema`` has one. The cast
+    reconciles Spark- and pyarrow-written files, which differ in
+    nullability and timestamp unit."""
+    parts = []
+    for f in files:
+        t = pq.ParquetFile(f, coerce_int96_timestamp_unit="us").read()
+        if BUCKET_COL in schema.names:
+            bucket = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+            t = t.append_column(
+                BUCKET_COL, pa.repeat(pa.scalar(bucket, pa.int32()), t.num_rows)
+            )
+        parts.append(t.select(schema.names).cast(schema))
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+def _write_arrow(table: pa.Table, path: str) -> None:
+    """Write ``table`` as Spark would: one part file, or one per
+    ``__bucket=k`` dir when it has a bucket column. Microsecond
+    timestamps, because Spark rejects pyarrow's nanosecond ones; no Arrow
+    schema blob, which would double a small file's footer; dictionary encoding
+    only where it pays, as parquet-mr falls back to plain encoding for
+    mostly-distinct columns."""
+    os.makedirs(path, exist_ok=True)
+    if BUCKET_COL in table.column_names:
+        ids = table[BUCKET_COL]
+        for b in pc.unique(ids).to_pylist():
+            part = table.filter(pc.equal(ids, b)).drop_columns([BUCKET_COL])
+            _write_arrow(part, os.path.join(path, f"{BUCKET_COL}={b}"))
+        return
+    table = table.cast(_nullable(table.schema))
+    dictionary = [
+        name
+        for name, col in zip(table.column_names, table.columns)
+        if 2 * pc.count_distinct(col).as_py() < table.num_rows
+    ]
+    pq.write_table(
+        table,
+        os.path.join(path, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
+        compression="snappy",
+        use_dictionary=dictionary,
+        coerce_timestamps="us",
+        store_schema=False,
+    )
 
 
 def _zorder_value(
@@ -329,41 +453,57 @@ class ManagedTable:
 
     def _commit(
         self,
-        df: DataFrame,
+        data: DataFrame | pa.Table,
         operation: str,
         partition_by: Sequence[str] | None = None,
         meta: dict | None = None,
         spec: tuple[list[str], int] | None = None,
         touched: Sequence[int] | None = None,
     ) -> int:
-        """Write ``df`` as version N+1 and append its manifest entry — the
+        """Write ``data`` as version N+1 and append its manifest entry — the
         one place a version is made.
 
+        ``data`` is a DataFrame, which Spark writes, or a ``pyarrow.Table``
+        built on the driver, which is written with pyarrow (see
+        ``_write_arrow``; a bucketed one carries its bucket column and
+        takes no ``partition_by``).
+
         ``spec=(keys, n_buckets)`` writes the bucket layout: the bucket
-        column is computed if ``df`` lacks it, and the shuffle is aligned
+        column is computed if ``data`` lacks it, and the shuffle is aligned
         with the layout (partition by bucket before the partitioned write,
         so each bucket dir is written by its own task: ~1 file per bucket
         instead of shuffle.partitions files per bucket). ``touched`` makes
-        it a pruned commit: ``df`` holds only those buckets, and every
+        it a pruned commit: ``data`` holds only those buckets, and every
         other bucket of the previous version is carried over by hardlink —
         no data IO, and a pytest can assert byte-identity across
-        versions."""
+        versions.
+
+        The entry stamps the written schema (see ``_schema_json``)."""
         log = _read_log(self.root)
         v = (log[-1]["version"] + 1) if log else 0
         path = self._version_dir(v)
         stamps: dict = {}
         if spec:
             keys, n_buckets = spec
-            if BUCKET_COL not in df.columns:
-                df = df.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-            width = n_buckets if touched is None else max(len(touched), 1)
-            df = df.repartition(width, BUCKET_COL)
             partition_by = [BUCKET_COL]
             stamps = {"bucket_keys": list(keys), "n_buckets": n_buckets}
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        # a failed attempt may have left files at N, which the Spark
+        # writer's overwrite mode would clear too
+        shutil.rmtree(path, ignore_errors=True)
+        if isinstance(data, pa.Table):
+            schema = from_arrow_schema(data.schema)
+            _write_arrow(data, path)
+        else:
+            if spec:
+                if BUCKET_COL not in data.columns:
+                    data = data.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+                width = n_buckets if touched is None else max(len(touched), 1)
+                data = data.repartition(width, BUCKET_COL)
+            schema = data.schema
+            writer = data.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
         if touched is not None:
             touched_set = set(touched)
             prev_dir = self._version_dir(log[-1]["version"])
@@ -371,7 +511,12 @@ class ManagedTable:
                 if int(bdir.rsplit("=", 1)[1]) not in touched_set:
                     _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
             stamps["buckets_rewritten"] = len(touched)
-        entry = {"version": v, "operation": operation, "timestamp": time.time()}
+        entry = {
+            "version": v,
+            "operation": operation,
+            "timestamp": time.time(),
+            "schema": _schema_json(schema),
+        }
         entry.update(stamps)
         entry.update(meta or {})
         log.append(entry)
@@ -390,32 +535,89 @@ class ManagedTable:
         prior = self._read_internal(spark).filter(F.col(BUCKET_COL).isin(touched))
         return rows, touched, prior
 
+    def _stored_schema(self) -> StructType | None:
+        """The latest version's schema from its manifest entry, or None for
+        a version committed without one."""
+        log = _read_log(self.root)
+        if not log or "schema" not in log[-1]:
+            return None
+        return StructType.fromJson(json.loads(log[-1]["schema"]))
+
+    def _touched_local(
+        self, rows: DataFrame, spec: tuple[list[str], int] | None, op: str
+    ) -> tuple[pa.Table, list[int] | None, pa.Table] | None:
+        """The driver path's twin of :meth:`_touched_buckets`: ``rows``
+        collected as Arrow in the table's column order (with its bucket
+        column when ``spec`` is set),
+        the sorted bucket ids it touches, and the latest version's rows in
+        those buckets (every row when unbucketed), cast to the collected
+        Arrow schema. None when the Spark path must run: no stored schema,
+        a type outside ``_flat_atomic``, drifted column names, a partitioned
+        layout, more than :data:`CAP_ROWS` rows (a cap on rows, not
+        bytes), or prior files over ``local_probe.LOCAL_PROBE_MAX_BYTES``.
+        A shared column whose type changed raises as the Spark path does.
+        Runs one Spark job, the collect; the checks that need no job run
+        before it."""
+        stored = self._stored_schema()
+        incoming = rows.schema
+        if stored is None or not (_flat_atomic(stored) and _flat_atomic(incoming)):
+            return None
+        if set(stored.names) != set(incoming.names):
+            return None
+        _check_type_drift(stored, incoming, op)
+        vdir = self._version_dir(self.latest_version())
+        if spec:
+            rows = rows.withColumn(BUCKET_COL, _bucket_expr(*spec))
+        else:
+            files = None if _partitioned(vdir) else local_probe.capped_files([vdir])
+            if files is None:
+                return None
+        src = rows.limit(CAP_ROWS + 1).toArrow()
+        if src.num_rows > CAP_ROWS:
+            return None
+        src = src.select(stored.names + ([BUCKET_COL] if spec else []))
+        src = src.cast(_nullable(src.schema))
+        touched = None
+        if spec:
+            touched = sorted(pc.unique(src[BUCKET_COL]).to_pylist())
+            files = local_probe.capped_files(
+                os.path.join(vdir, f"{BUCKET_COL}={b}") for b in touched
+            )
+            if files is None:
+                return None
+        return src, touched, _read_arrow(files, src.schema)
+
     @staticmethod
     def _drift_gate(
-        prior: DataFrame, incoming: DataFrame, op: str, merge_schema: bool
+        prior: StructType, incoming: StructType, op: str, merge_schema: bool
     ) -> bool:
         """True if the column NAME sets differ; fails unless
         ``merge_schema``, and on any shared-column type change."""
-        drifted = set(prior.columns) != set(incoming.columns)
+        drifted = set(prior.names) != set(incoming.names)
         if drifted and not merge_schema:
             raise ValueError(
                 f"{op} schema drift (use merge_schema=True): "
-                f"table={sorted(prior.columns)} "
-                f"incoming={sorted(incoming.columns)}"
+                f"table={sorted(prior.names)} "
+                f"incoming={sorted(incoming.names)}"
             )
         _check_type_drift(prior, incoming, op)
         return drifted
 
     def create_or_overwrite(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         partition_by: Sequence[str] | None = None,
         bucket_by: Sequence[str] | None = None,
         n_buckets: int = 16,
         meta: dict | None = None,
         reset_fold_markers: bool = True,
     ) -> int:
-        """``partition_by`` = hive-style layout (reference S2 partitions
+        """``df`` is a DataFrame, or a ``pyarrow.Table`` built on the
+        driver, which is written without a Spark job; an Arrow table takes
+        neither ``partition_by`` nor ``bucket_by`` and holds only the
+        column types of ``_flat_atomic`` (``ValueError`` otherwise).
+
+        ``partition_by`` = hive-style layout (reference S2 partitions
         bronze by ingestion_date, 01:186): time-range queries then prune
         whole directories before the scan (PartitionFilters in .explain).
 
@@ -459,6 +661,13 @@ class ManagedTable:
         ``RuntimeWarning`` naming both escape hatches — a reset of an
         unmarked table stays silent.
         """
+        if isinstance(df, pa.Table) and (
+            bucket_by or partition_by or not _flat_atomic(from_arrow_schema(df.schema))
+        ):
+            raise ValueError(
+                "a pyarrow.Table is written unbucketed and unpartitioned, "
+                "with flat atomic columns only"
+            )
         meta = dict(meta or {})
         if "fold_checkpoint" not in meta and reset_fold_markers:
             prior = self.latest_meta(having="fold_checkpoint") if self.exists() else None
@@ -494,13 +703,20 @@ class ManagedTable:
         layout-preserving full rewrite (schema changes are rare events;
         every version dir stays single-schema so ordinary reads never
         need parquet schema merging) — subsequent appends/merges are
-        pruned again."""
+        pruned again. A small append without ``partition_by`` runs on the
+        driver (see the module docstring)."""
         if not self.exists():
             return self._commit(df, "append", partition_by)
-        spark = df.sparkSession
         spec = self.bucket_spec()
+        if not partition_by:
+            local = self._touched_local(df, spec, "append")
+            if local is not None:
+                incoming, touched, prior = local
+                rows = pa.concat_tables([prior, incoming])
+                return self._commit(rows, "append", spec=spec, touched=touched)
+        spark = df.sparkSession
         prior = self.read(spark)
-        drifted = self._drift_gate(prior, df, "append", merge_schema)
+        drifted = self._drift_gate(prior.schema, df.schema, "append", merge_schema)
         if spec and not drifted:
             # rewrite only buckets receiving new rows (prior bucket contents
             # unioned in) — same O(touched/total) cost as the pruned MERGE
@@ -585,6 +801,8 @@ class ManagedTable:
         On a table created with ``bucket_by=keys``, only buckets containing
         source keys are rewritten; untouched buckets are hardlinked into
         the new version (byte-identical carry-over, no read or write IO).
+        A small one runs on the driver (see the module docstring). A pruned
+        merge writes the table's column order, whatever the source's.
 
         ``merge_schema`` = Delta's MERGE ``autoMerge``: drifted source
         schemas widen the table (absent columns null-filled both sides).
@@ -596,8 +814,22 @@ class ManagedTable:
             return self._commit(source, "create")
         keys = list(keys)
         spec = self.bucket_spec()
+        # float keys stay on Spark, whose join equates NaNs and ±0.0
+        dtypes = dict(source.dtypes)
+        if spec and spec[0] == keys and not any(
+            dtypes.get(k) in ("float", "double") for k in keys
+        ):
+            local = self._touched_local(source, spec, "merge")
+            if local is not None:
+                src, touched, target_touched = local
+                # an Arrow join never matches a NULL key, as Spark's
+                untouched = target_touched.join(
+                    src.select(keys), keys, join_type="left anti"
+                )
+                merged = pa.concat_tables([src, untouched.select(src.column_names)])
+                return self._commit(merged, "merge", spec=spec, touched=touched)
         target = self.read(spark)
-        drifted = self._drift_gate(target, source, "merge", merge_schema)
+        drifted = self._drift_gate(target.schema, source.schema, "merge", merge_schema)
         if spec and spec[0] == keys and not drifted:
             src, touched, target_touched = self._touched_buckets(
                 spark, source, *spec
@@ -605,9 +837,9 @@ class ManagedTable:
             untouched = target_touched.join(
                 src.select(*keys).distinct(), keys, "left_anti"
             )
-            return self._commit(
-                src.unionByName(untouched), "merge", spec=spec, touched=touched
-            )
+            # the table's column order, so no version mixes two orders
+            merged = src.select(*target_touched.columns).unionByName(untouched)
+            return self._commit(merged, "merge", spec=spec, touched=touched)
         # Merge keys differ from the bucket spec (or the schema widens) ⇒
         # full rewrite; a bucketed table keeps its layout so later
         # bucket-spec operations stay O(touched buckets).

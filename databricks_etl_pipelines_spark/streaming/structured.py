@@ -15,9 +15,11 @@ pair dropDuplicates with withWatermark on production streams.
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -464,6 +466,7 @@ def reservoir_sample_stream(
 # override via this session conf; unbounded-key state (per-user dedup,
 # stream-stream join buffers) must keep the session-level width.
 STREAM_STATE_PARTITIONS_CONF = "spark.databricks_etl.streamStatePartitions"
+_SHUFFLE_WIDTH_LOCK = threading.Lock()
 
 
 def drain_to_memory(
@@ -481,31 +484,35 @@ def drain_to_memory(
     ``min(streamStatePartitions (default 8), session shuffle width)``
     state partitions (see STREAM_STATE_PARTITIONS_CONF above). Results
     are identical either way — exact aggregation does not depend on the
-    partition count (pinned by tests/test_streaming.py)."""
+    partition count (pinned by tests/test_streaming.py).
+
+    Spark copies the session conf into the query's own session at
+    ``start()``, so the narrowed width is set only around ``start()``,
+    under a module lock: two drains on two threads cannot restore each
+    other's value, and the session width is back before the drain runs.
+    A non-integer session width does not cap the state partitions."""
     spark = df.sparkSession
-    old_width: str | None = None
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
     if bounded_state:
-        old_width = spark.conf.get("spark.sql.shuffle.partitions")
-        n = min(
-            int(spark.conf.get(STREAM_STATE_PARTITIONS_CONF, "8")),
-            int(old_width),
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        name = f"mem_{uuid.uuid4().hex[:12]}"
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q, timeout_s)
-    finally:
-        # restore only after the drain: every micro-batch of this query
-        # must plan with the bounded width
-        if old_width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_width)
+        with _SHUFFLE_WIDTH_LOCK:
+            old_width = spark.conf.get("spark.sql.shuffle.partitions")
+            n = int(spark.conf.get(STREAM_STATE_PARTITIONS_CONF, "8"))
+            if old_width.isdigit():
+                n = min(n, int(old_width))
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            try:
+                q = writer.start()
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", old_width)
+    else:
+        q = writer.start()
+    await_drained(q, timeout_s)
     return df.sparkSession.table(name)
 
 
@@ -781,14 +788,33 @@ class StreamingMedallion:
         self.bucket_silver = bucket_silver
 
     def _fold_gold(self, silver_batch: DataFrame) -> None:
-        partial = silver_batch.groupBy(
-            "event_date", "event_hour", "card_network", "mcc_category"
-        ).agg(
+        """Add the batch's hourly partial into gold. A small fold runs on
+        the driver: the partial holds at most one row per gold cell, so
+        each cell adds exactly two values, and IEEE addition of two values
+        commutes, so it gives the Spark fold's doubles bit for bit."""
+        keys = ["event_date", "event_hour", "card_network", "mcc_category"]
+        partial = silver_batch.groupBy(*keys).agg(
             F.count("*").alias("txn_count"),
             F.sum("amount").alias("total_volume"),
         )
+        local = (
+            self.gold_hourly._touched_local(partial, None, "fold")
+            if self.gold_hourly.exists()
+            else None
+        )
+        if local is not None:
+            batch, _, current = local
+            sums = ["txn_count", "total_volume"]
+            folded = (
+                pa.concat_tables([current, batch])
+                .group_by(keys)
+                .aggregate([(c, "sum") for c in sums])
+                .select(keys + [f"{c}_sum" for c in sums])
+                .rename_columns(keys + sums)
+            )
+            self.gold_hourly.create_or_overwrite(folded)
+            return
         if self.gold_hourly.exists():
-            keys = ["event_date", "event_hour", "card_network", "mcc_category"]
             current = self.gold_hourly.read(self.spark)
             partial = (
                 current.unionByName(partial)
@@ -805,8 +831,10 @@ class StreamingMedallion:
         processing_time: str | None = None,
     ) -> StreamingQuery:
         from databricks_etl_pipelines_spark.plans.medallion import (
-            silver_transform,
+            silver_transformer,
         )
+
+        silver_transform = silver_transformer()
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():

@@ -926,7 +926,7 @@ def test_manifest_entry_per_write_path(spark, tmp_path, path):
     entry = _read_log(mt.root)[-1]
     assert entry["version"] == v
 
-    want = {"version", "operation", "timestamp"}
+    want = {"version", "operation", "timestamp", "schema"}
     if operation == "overwrite":
         want.add("fold_checkpoint")  # owner reset tombstone
         assert entry["fold_checkpoint"] is None

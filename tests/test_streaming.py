@@ -72,6 +72,70 @@ def test_bounded_state_drain_matches_default_and_restores_width(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == width_before
 
 
+def test_bounded_state_drains_on_two_threads(spark, tmp_path):
+    """Two bounded drains started on two threads both plan with the
+    bounded state width, and the session width is back to its old value
+    while both queries still run: the narrowed width is set only around
+    ``start()``, under a lock, because Spark copies the session conf into
+    the query's session there."""
+    import threading
+
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        STREAM_STATE_PARTITIONS_CONF,
+    )
+
+    src = str(tmp_path / "feed")
+    for i in range(8):
+        spark.createDataFrame(
+            [(j % 5, i) for j in range(20)], "g long, f long"
+        ).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert int(width) > 2
+    results, errors = {}, []
+
+    def drain(tag):
+        try:
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+                .groupBy("g")
+                .count()
+            )
+            out = drain_to_memory(stream, "complete", bounded_state=True)
+            results[tag] = sorted(map(tuple, out.collect()))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    spark.conf.set(STREAM_STATE_PARTITIONS_CONF, "2")
+    try:
+        threads = [threading.Thread(target=drain, args=(t,)) for t in "ab"]
+        for t in threads:
+            t.start()
+        queries, both_running = {}, 0
+        while any(t.is_alive() for t in threads):
+            active = spark.streams.active
+            for q in active:
+                queries[q.id] = q
+            if len(active) == 2 and all(q.lastProgress for q in active):
+                both_running += 1
+                assert spark.conf.get("spark.sql.shuffle.partitions") == width
+            time.sleep(0.05)
+        for t in threads:
+            t.join()
+    finally:
+        spark.conf.unset(STREAM_STATE_PARTITIONS_CONF)
+    assert not errors, errors
+    assert both_running > 0
+    assert len(queries) == 2
+    for q in queries.values():
+        states = [p["stateOperators"][0] for p in q.recentProgress]
+        assert {s["numShufflePartitions"] for s in states} == {2}
+    assert results["a"] == results["b"] == [(g, 32) for g in range(5)]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
 def test_checkpoint_replay_exactly_once(spark, sf_dir, tmp_path):
     """Draining the same source twice against one checkpoint must not
     duplicate rows (offsets are committed in the WAL)."""
