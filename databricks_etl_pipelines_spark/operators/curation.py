@@ -24,6 +24,9 @@ Scale notes:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -305,12 +308,13 @@ def curate_corpus(
     # 2-thread pool lets the second job's tasks back-fill executors
     # freed by the first job's straggler tail. The values are the same
     # scalars as before; n_clean stays sequential (it consumes the
-    # pinned exact_unique).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # pinned exact_unique). Pool threads start without the caller's Spark
+    # local properties, so each callable is wrapped to inherit them: the
+    # overlapped jobs stay in the caller's job group and carry its tags.
+    inherit = inheritable_thread_target(exact_unique.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_gates = pool.submit(gate_agg.first)
-        f_exact = pool.submit(exact_unique.count)
+        f_gates = pool.submit(inherit(gate_agg.first))
+        f_exact = pool.submit(inherit(exact_unique.count))
         gate_counts = f_gates.result()
         n_exact = f_exact.result()
     total, n_quality, n_lang, n_rep = (
@@ -686,12 +690,12 @@ def prepare_pretraining_corpus(
     unique = exact_dedup(gated, text_col, id_col).persist()
     # Overlap the independent gate-count scan with the dedup cache
     # materialization (r16, guide §2.6): same scalars, same semantics,
-    # the second job back-fills the first one's tail.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the second job back-fills the first one's tail. The callables
+    # inherit the caller's job group and tags, as in curate_corpus.
+    inherit = inheritable_thread_target(unique.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_gates = pool.submit(gate_agg.first)
-        f_exact = pool.submit(unique.count)
+        f_gates = pool.submit(inherit(gate_agg.first))
+        f_exact = pool.submit(inherit(unique.count))
         row = f_gates.result()
         n_exact = f_exact.result()
     total, n_gate = row["t"] or 0, row["g"] or 0

@@ -21,13 +21,21 @@ Scale design (100 TB documents):
     hamming filter (bit_count of xor), all codegen.
   * n-gram Jaccard: lossless AllPairs prefix filtering (rarest-first
     global order + length filter), exact verification on surviving pairs
-    via array_intersect/array_union over hashed sets.
+    via the shared exact-Jaccard verify over hashed sets.
   * embedding cosine: candidate pairs from sign-bit buckets of leading
     dims (or brute-force below modest n); verification is an
     expression-side cosine.
 
-Every method shares ``_hashed_shingle_sets`` — shingling+hashing runs once
-per document and is persisted across the plan's branches.
+Shingle sets are built once per document and pinned across the plan's
+branches. The MinHash families are one table, ``_FAMILIES``: each name
+("xxhash64", the production default over ``_hashed_shingle_sets``'
+64-bit hashes; "crossengine", md5 + Karp-Rabin over string shingles,
+replayable in ANSI SQL) maps to the functions that make its shingle sets
+and its band table. Every MinHash path — the batch pairs of either family
+and ``MinHashCorpusIndex`` — runs the same capped band join
+(``_band_pairs``) and the same exact-Jaccard verify
+(``_verify_jaccard``), which the prefix-filtered n-gram join shares too.
+SimHash, the span report and the embedding methods shingle on their own.
 
 Algorithm provenance (public literature): MinHash resemblance sketches
 (Broder, "On the resemblance and containment of documents", 1997); LSH
@@ -41,11 +49,16 @@ similarity joins for near duplicate detection", 2008).
 
 from __future__ import annotations
 
+import json
+import os
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from databricks_etl_pipelines_spark.functions.textfns import (
     distinct_shingles,
+    fingerprint_rolling,
     normalized_text,
     tokens,
 )
@@ -145,25 +158,8 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 32,
-    shingle_k: int = 3,
-    hashed_sets: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig: array<bigint>) — sig[i] = min over the doc's hashed
-    shingles of xxhash64(i, h). Re-hashing the 64-bit shingle hash with the
-    permutation index is an equally valid MinHash family and lets the
-    num_perm × |shingles| inner loop run over longs, not strings — and the
-    underlying (persisted) hashed-shingle relation is shared with the
-    verification joins, so shingling happens once per document total."""
-    sets = (
-        hashed_sets
-        if hashed_sets is not None
-        else _hashed_shingle_sets(df, text_col, id_col, shingle_k)
-    )
+def _signatures(sets: DataFrame, num_perm: int) -> DataFrame:
+    """(id, sig: array<bigint>) over hashed shingle sets (id, sh)."""
 
     def perm_min(i: int) -> F.Column:
         # NB: capture ``i`` via this factory, NOT a `lambda h, i=i:` default
@@ -178,18 +174,39 @@ def minhash_signature(
     return sets.select("id", sig.alias("sig"))
 
 
-def _band_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Explode each signature into (id, band_id, band_hash)."""
+def minhash_signature(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 32,
+    shingle_k: int = 3,
+    hashed_sets: DataFrame | None = None,
+) -> DataFrame:
+    """(id, sig: array<bigint>) — sig[i] = min over the doc's hashed
+    shingles of xxhash64(i, h). Re-hashing the 64-bit shingle hash with the
+    permutation index is an equally valid MinHash family and lets the
+    num_perm × |shingles| inner loop run over longs, not strings — and the
+    underlying (persisted) hashed-shingle relation is shared with the
+    verification joins, so shingling happens once per document total."""
+    if hashed_sets is None:
+        hashed_sets = _hashed_shingle_sets(df, text_col, id_col, shingle_k)
+    return _signatures(hashed_sets, num_perm)
+
+
+def _explode_bands(
+    sigs: DataFrame,
+    perms: list[Column],
+    bands: int,
+    band_key: Callable[..., Column],
+) -> DataFrame:
+    """(id, band_id, band_hash): band b is ``band_key`` over its slice of
+    ``len(perms) // bands`` permutation columns."""
+    r = len(perms) // bands
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    *[
-                        F.element_at("sig", b * rows_per_band + j + 1)
-                        for j in range(rows_per_band)
-                    ]
-                ).alias("band_hash"),
+                band_key(*perms[b * r:(b + 1) * r]).alias("band_hash"),
             )
             for b in range(bands)
         ]
@@ -199,88 +216,11 @@ def _band_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    max_bucket: int = 200,
-    hashed_sets: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) from LSH banding.
-
-    A pair is a candidate iff it collides in ≥1 band. Buckets larger than
-    ``max_bucket`` are dropped (boilerplate guardrail) — at 100 TB a single
-    viral doc cluster would otherwise produce a quadratic bucket."""
-    rows_per_band = num_perm // bands
-    sigs = minhash_signature(
-        df, text_col, id_col, num_perm, shingle_k, hashed_sets=hashed_sets
-    )
-    # Persisted (r15): the bucket relation feeds THREE consumers (the size
-    # guardrail plus both self-join sides); unpersisted, each re-runs the
-    # whole signature aggregation. One (id, band) row per doc per band —
-    # a per-doc-constant fraction of the corpus, far smaller than the
-    # shingle relation already cached underneath.
-    buckets = _band_buckets(sigs, bands, rows_per_band).transform(invocation_pin)
-    bucket_sizes = buckets.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_n")
-    )
-    bounded = buckets.join(
-        bucket_sizes.filter(F.col("bucket_n") <= max_bucket),
-        ["band_id", "band_hash"],
-    )
-    a = bounded.select(
-        F.col("band_id"), F.col("band_hash"), F.col("id").alias("id_a")
-    )
-    b = bounded.select(
-        F.col("band_id"), F.col("band_hash"), F.col("id").alias("id_b")
-    )
-    # Every pair generator pins its bounded output once per invocation,
-    # so multi-action consumers (connected components' count + collect,
-    # curation drops) compute the pair pipeline once. The pins inside it
-    # are left alone: under pinStrategy=persist, unpersisting them here
-    # would evict them before this lazy result had materialized.
-    return (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .transform(invocation_pin)
-    )
-
-
-def minhash_lsh_dedup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.7,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """LSH candidates verified with exact shingle-set Jaccard ≥ threshold."""
-    sh = _hashed_shingle_sets(df, text_col, id_col, shingle_k)
-    cands = _spread(
-        minhash_lsh_candidates(
-            df, text_col, id_col, num_perm, bands, shingle_k, hashed_sets=sh
-        )
-    )
-    paired = (
-        cands.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    # |A ∪ B| = |A| + |B| − |A ∩ B| over sets (r15): one array op per
-    # candidate instead of two, same exact integer division
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        paired.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        .transform(invocation_pin)
-    )
+def _band_buckets(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(id, band_id, band_hash: bigint) for the xxhash64 family: each band
+    keys on the xxhash64 of its signature slice."""
+    perms = [F.element_at("sig", i + 1) for i in range(num_perm)]
+    return _explode_bands(_signatures(sets, num_perm), perms, bands, F.xxhash64)
 
 
 def xengine_shingle_sets(
@@ -289,10 +229,6 @@ def xengine_shingle_sets(
     """(id, sh: array<string>) persisted STRING shingle sets for the
     cross-engine md5+Karp-Rabin family (the permutation hash needs the
     original shingle text, unlike the xxhash64 family's long sets)."""
-    from databricks_etl_pipelines_spark.functions.textfns import (
-        distinct_shingles,
-    )
-
     return (
         _spread_input(df)
         .select(
@@ -341,11 +277,6 @@ def xengine_band_buckets(
     whole-stage-codegen COMPILATION for 16 permutations). Band keys are
     the comma-joined signature slices (SQL-replayable, unlike xxhash64).
     """
-    from databricks_etl_pipelines_spark.functions.textfns import (
-        fingerprint_rolling,
-    )
-
-    rows_per_band = num_perm // bands
     # Per-instance hashing is DELIBERATE here (r16 measured rejection of
     # the r15 DSIR vocabulary trick for shingles): hashing the distinct
     # shingle vocabulary once and joining back lost 13-30% on every
@@ -366,24 +297,161 @@ def xengine_band_buckets(
             for i in range(num_perm)
         ]
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"s{b * rows_per_band + j}").cast("string")
-                        for j in range(rows_per_band)
-                    ],
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    perms = [F.col(f"s{i}").cast("string") for i in range(num_perm)]
+    return _explode_bands(
+        mins, perms, bands, lambda *cols: F.concat_ws(",", *cols)
     )
-    return mins.select(
-        "id", F.explode(band_structs).alias("band")
-    ).select("id", "band.band_id", "band.band_hash")
+
+
+class _Family(NamedTuple):
+    """A MinHash hash family: ``shingle_sets(df, text_col, id_col,
+    shingle_k)`` gives the pinned (id, sh) sets that the band table is
+    built from and that the exact verify compares; ``band_table(sets,
+    num_perm, bands)`` gives (id, band_id, band_hash).
+
+    ``spread_pairs``: the batch pair operator pins its candidates and
+    spreads them over the session's cores before the verify. The xxhash64
+    operator does (its candidates are the public, multi-action
+    ``minhash_lsh_candidates``); the crossengine one never has, and its
+    catalog timings were measured without it."""
+
+    shingle_sets: Callable[[DataFrame, str, str, int], DataFrame]
+    band_table: Callable[[DataFrame, int, int], DataFrame]
+    spread_pairs: bool
+
+
+_FAMILIES = {
+    "xxhash64": _Family(_hashed_shingle_sets, _band_buckets, True),
+    "crossengine": _Family(xengine_shingle_sets, xengine_band_buckets, False),
+}
+
+
+def _family(name: str) -> _Family:
+    try:
+        return _FAMILIES[name]
+    except KeyError:
+        raise ValueError(
+            f"unknown MinHash family {name!r}; use one of {sorted(_FAMILIES)}"
+        ) from None
+
+
+_BAND = ["band_id", "band_hash"]
+
+
+def _band_pairs(
+    buckets: DataFrame, max_bucket: int, probe: DataFrame | None = None
+) -> DataFrame:
+    """Distinct (id_a, id_b) sharing a band bucket of ``buckets`` — the
+    banded equi-join on (band_id, band_hash). Buckets with more than
+    ``max_bucket`` members are dropped: the boilerplate guardrail, since at
+    100 TB one viral doc cluster would otherwise make a quadratic bucket.
+
+    Without ``probe`` the capped buckets self-join (id_a < id_b). With it,
+    each probe row (id_a) joins the capped buckets (id_b), so only the
+    ``buckets`` side is capped."""
+    sizes = buckets.groupBy(*_BAND).agg(F.count("*").alias("bucket_n"))
+    bounded = buckets.join(sizes.filter(F.col("bucket_n") <= max_bucket), _BAND)
+    left = bounded if probe is None else probe
+    pairs = left.select(*_BAND, F.col("id").alias("id_a")).join(
+        bounded.select(*_BAND, F.col("id").alias("id_b")), _BAND
+    )
+    if probe is None:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b").distinct()
+
+
+def _pair_sets(cands: DataFrame, sets_a: DataFrame, sets_b: DataFrame) -> DataFrame:
+    """The (id_a, id_b) candidates with their shingle sets sh_a, sh_b."""
+    return cands.join(
+        sets_a.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a"
+    ).join(sets_b.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
+
+
+def _verify_jaccard(
+    cands: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidates whose exact shingle-set
+    Jaccard reaches ``threshold``. Both sides are distinct sets, so
+    |A ∪ B| = |A| + |B| − |A ∩ B|: one array op per candidate, and the
+    same double as |A ∩ B| / |A ∪ B|."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
+    return (
+        _pair_sets(cands, sets_a, sets_b)
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _lsh_candidates(
+    sets: DataFrame, fam: _Family, num_perm: int, bands: int, max_bucket: int
+) -> DataFrame:
+    # The bucket relation feeds three consumers (the size guardrail and
+    # both self-join sides), so it is pinned: one (id, band) row per doc
+    # per band, far smaller than the shingle relation pinned underneath.
+    # Under pinStrategy=persist it must not be unpersisted here: the
+    # result is still lazy.
+    buckets = fam.band_table(sets, num_perm, bands).transform(invocation_pin)
+    return _band_pairs(buckets, max_bucket)
+
+
+def _minhash_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    family: str,
+    threshold: float,
+    num_perm: int,
+    bands: int,
+    shingle_k: int = 3,
+    max_bucket: int = 200,
+) -> DataFrame:
+    """Banded-LSH candidates of ``family`` verified with exact Jaccard."""
+    fam = _family(family)
+    sh = fam.shingle_sets(df, text_col, id_col, shingle_k)
+    cands = _lsh_candidates(sh, fam, num_perm, bands, max_bucket)
+    if fam.spread_pairs:
+        cands = _spread(cands.transform(invocation_pin))
+    return _verify_jaccard(cands, sh, sh, threshold).transform(invocation_pin)
+
+
+def minhash_lsh_candidates(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_k: int = 3,
+    max_bucket: int = 200,
+    hashed_sets: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate near-dup pairs (id_a < id_b) from xxhash64 LSH banding.
+
+    A pair is a candidate iff it collides in ≥1 band whose bucket has at
+    most ``max_bucket`` members. The result is pinned once per invocation,
+    so multi-action consumers (connected components' count + collect,
+    curation drops) compute the pair pipeline once."""
+    if hashed_sets is None:
+        hashed_sets = _hashed_shingle_sets(df, text_col, id_col, shingle_k)
+    return _lsh_candidates(
+        hashed_sets, _FAMILIES["xxhash64"], num_perm, bands, max_bucket
+    ).transform(invocation_pin)
+
+
+def minhash_lsh_dedup_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float = 0.7,
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """LSH candidates verified with exact shingle-set Jaccard ≥ threshold."""
+    return _minhash_pairs(
+        df, text_col, id_col, "xxhash64", threshold, num_perm, bands, shingle_k
+    )
 
 
 def minhash_crossengine_pairs(
@@ -411,44 +479,9 @@ def minhash_crossengine_pairs(
     hashing, no string materialization); this variant exists to prove
     the machinery, at a deliberately smaller num_perm.
     """
-    sh = xengine_shingle_sets(df, text_col, id_col, shingle_k)
-    # Persisted (r15): three consumers (size guardrail + both self-join
-    # sides), same rationale as minhash_lsh_candidates.
-    buckets = xengine_band_buckets(sh, num_perm, bands).transform(invocation_pin)
-    sizes = buckets.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_n")
-    )
-    bounded = buckets.join(
-        sizes.filter(F.col("bucket_n") <= max_bucket),
-        ["band_id", "band_hash"],
-    ).select("id", "band_id", "band_hash")
-    cands = (
-        bounded.withColumnRenamed("id", "id_a")
-        .join(
-            bounded.withColumnRenamed("id", "id_b"),
-            ["band_id", "band_hash"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    paired = cands.join(
-        sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),
-        "id_a",
-    ).join(
-        sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")),
-        "id_b",
-    )
-    # |A ∪ B| = |A| + |B| − |A ∩ B| over sets (r16, aligning with the
-    # xxhash64 family's r15 form): one array op per candidate instead of
-    # two, same exact integer division.
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        paired.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        .transform(invocation_pin)
+    return _minhash_pairs(
+        df, text_col, id_col, "crossengine", threshold, num_perm, bands,
+        shingle_k, max_bucket,
     )
 
 
@@ -462,14 +495,18 @@ class MinHashCorpusIndex:
     for O(batch) questions; this index persists them once:
 
         <root>/bands/     (id, band_id, band_hash), partitioned by band_id
-        <root>/shingles/  (id, sh) hashed shingle sets for exact verify
-        <root>/meta.json  num_perm / bands / shingle_k
+        <root>/shingles/  (id, sh) the family's shingle sets for exact verify
+        <root>/meta.json  num_perm / bands / shingle_k / family
 
-    ``match_new`` shingles + signs ONLY the incoming batch, equi-joins its
-    band buckets against the persisted band table, and verifies candidates
-    with exact Jaccard against the persisted shingle sets — corpus-side
-    cost is an index scan, never re-shingling. ``add`` appends the new
-    docs' rows so the next batch screens against them too.
+    ``family`` names an entry of ``_FAMILIES``; the index builds, signs
+    and verifies through that entry, so a match equals the batch pair
+    operator of the same family and settings restricted to (new, corpus)
+    pairs. ``match_new`` shingles + signs ONLY the incoming batch, runs the
+    batch operators' band join with only the corpus side capped, and
+    verifies candidates with the same exact Jaccard against the persisted
+    shingle sets — corpus-side cost is an index scan, never re-shingling.
+    ``add`` appends the new docs' rows so the next batch screens against
+    them too.
     """
 
     BANDS = "bands"
@@ -481,28 +518,20 @@ class MinHashCorpusIndex:
 
     @staticmethod
     def _meta_path(root: str) -> str:
-        import os
-
         return os.path.join(root, MinHashCorpusIndex.META)
 
     @staticmethod
     def exists(root: str) -> bool:
         """True once ``build`` has persisted an index at ``root``."""
-        import os
-
         return os.path.exists(MinHashCorpusIndex._meta_path(root))
 
-    def _meta(self) -> dict:
-        import json
-
+    def _shingle(self, docs: DataFrame, text_col: str, id_col: str):
+        """(meta, family, pinned shingle sets of ``docs``) under the index's
+        stored settings."""
         with open(self._meta_path(self.root)) as f:
-            return json.load(f)
-
-    @staticmethod
-    def _shingle(df, text_col, id_col, shingle_k, family):
-        if family == "crossengine":
-            return xengine_shingle_sets(df, text_col, id_col, shingle_k)
-        return _hashed_shingle_sets(df, text_col, id_col, shingle_k)
+            meta = json.load(f)
+        fam = _family(meta.get("family", "xxhash64"))
+        return meta, fam, fam.shingle_sets(docs, text_col, id_col, meta["shingle_k"])
 
     @classmethod
     def build(
@@ -519,14 +548,12 @@ class MinHashCorpusIndex:
         """``family``: "xxhash64" (production default — JVM long hashing)
         or "crossengine" (md5+Karp-Rabin over string shingles, slower but
         SQL-replayable, so the whole incremental screening path admits a
-        hard differential oracle)."""
-        import json
-        import os
-
+        hard differential oracle). Any other name raises ``ValueError``
+        before anything is written."""
+        fam = _family(family)
         idx = cls(root)
-        sh = cls._shingle(corpus, text_col, id_col, shingle_k, family)
-        idx._write(corpus.sparkSession, sh, num_perm, bands, shingle_k,
-                   mode="overwrite", family=family)
+        sh = fam.shingle_sets(corpus, text_col, id_col, shingle_k)
+        idx._write(fam, sh, num_perm, bands, mode="overwrite")
         os.makedirs(root, exist_ok=True)
         with open(cls._meta_path(root), "w") as f:
             json.dump(
@@ -538,33 +565,16 @@ class MinHashCorpusIndex:
         return idx
 
     def _write(
-        self,
-        spark,
-        hashed_sets: DataFrame,
-        num_perm: int,
-        bands: int,
-        shingle_k: int,
-        mode: str,
-        family: str = "xxhash64",
+        self, fam: _Family, sets: DataFrame, num_perm: int, bands: int, mode: str
     ) -> None:
-        import os
-
-        if family == "crossengine":
-            buckets = xengine_band_buckets(hashed_sets, num_perm, bands)
-        else:
-            sigs = minhash_signature(
-                None, "", "", num_perm, shingle_k, hashed_sets=hashed_sets
-            )
-            buckets = _band_buckets(sigs, bands, num_perm // bands)
         (
-            buckets.repartition(bands, "band_id")
+            fam.band_table(sets, num_perm, bands)
+            .repartition(bands, "band_id")
             .write.mode(mode)
             .partitionBy("band_id")
             .parquet(os.path.join(self.root, self.BANDS))
         )
-        hashed_sets.write.mode(mode).parquet(
-            os.path.join(self.root, self.SHINGLES)
-        )
+        sets.write.mode(mode).parquet(os.path.join(self.root, self.SHINGLES))
 
     def match_new(
         self,
@@ -577,71 +587,21 @@ class MinHashCorpusIndex:
     ) -> DataFrame:
         """(new_id, corpus_id, jaccard) for every new doc near-duplicating
         an indexed corpus doc. Only the new batch is shingled/signed."""
-        import os
-
-        meta = self._meta()
-        family = meta.get("family", "xxhash64")
-        new_sh = self._shingle(
-            new_docs, text_col, id_col, meta["shingle_k"], family
-        )
-        if family == "crossengine":
-            new_buckets = xengine_band_buckets(
-                new_sh, meta["num_perm"], meta["bands"]
-            ).withColumnRenamed("id", "new_id")
-        else:
-            new_sigs = minhash_signature(
-                None, "", "", meta["num_perm"], meta["shingle_k"],
-                hashed_sets=new_sh,
-            )
-            new_buckets = _band_buckets(
-                new_sigs, meta["bands"], meta["num_perm"] // meta["bands"]
-            ).withColumnRenamed("id", "new_id")
-
-        corpus_buckets = spark.read.parquet(
-            os.path.join(self.root, self.BANDS)
-        ).withColumnRenamed("id", "corpus_id")
-        # boilerplate guardrail on the corpus side, as in the batch operator
-        sizes = corpus_buckets.groupBy("band_id", "band_hash").agg(
-            F.count("*").alias("bucket_n")
-        )
-        bounded = corpus_buckets.join(
-            sizes.filter(F.col("bucket_n") <= max_bucket),
-            ["band_id", "band_hash"],
-        )
-        cands = (
-            new_buckets.join(bounded, ["band_id", "band_hash"])
-            .select("new_id", "corpus_id")
-            .distinct()
-        )
-        corpus_sh = spark.read.parquet(
-            os.path.join(self.root, self.SHINGLES)
-        ).withColumnsRenamed({"id": "corpus_id", "sh": "sh_corpus"})
-        paired = _spread(cands).join(
-            new_sh.withColumnsRenamed({"id": "new_id", "sh": "sh_new"}),
-            "new_id",
-        ).join(corpus_sh, "corpus_id")
-        jaccard = F.size(F.array_intersect("sh_new", "sh_corpus")) / F.size(
-            F.array_union("sh_new", "sh_corpus")
-        )
-        return (
-            paired.withColumn("jaccard", jaccard)
-            .filter(F.col("jaccard") >= threshold)
-            .select("new_id", "corpus_id", "jaccard")
+        meta, fam, new_sh = self._shingle(new_docs, text_col, id_col)
+        new_buckets = fam.band_table(new_sh, meta["num_perm"], meta["bands"])
+        corpus_buckets = spark.read.parquet(os.path.join(self.root, self.BANDS))
+        cands = _band_pairs(corpus_buckets, max_bucket, probe=new_buckets)
+        corpus_sh = spark.read.parquet(os.path.join(self.root, self.SHINGLES))
+        return _verify_jaccard(_spread(cands), new_sh, corpus_sh, threshold).select(
+            F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
         )
 
     def add(
         self, spark, new_docs: DataFrame, text_col: str, id_col: str
     ) -> None:
         """Index the new batch's docs so later batches screen against them."""
-        meta = self._meta()
-        family = meta.get("family", "xxhash64")
-        sh = self._shingle(
-            new_docs, text_col, id_col, meta["shingle_k"], family
-        )
-        self._write(
-            spark, sh, meta["num_perm"], meta["bands"], meta["shingle_k"],
-            mode="append", family=family,
-        )
+        meta, fam, sh = self._shingle(new_docs, text_col, id_col)
+        self._write(fam, sh, meta["num_perm"], meta["bands"], mode="append")
         sh.unpersist()
 
 
@@ -657,10 +617,6 @@ def crossengine_feature_hash(tok: F.Column) -> F.Column:
     KarpRabin(md5(...)) 30-bit halves packed side by side. Slower than
     xxhash64 (string md5 + char fold vs one long hash) — exists so the
     SimHash pipeline can be replayed value-for-value in a SQL oracle."""
-    from databricks_etl_pipelines_spark.functions.textfns import (
-        fingerprint_rolling,
-    )
-
     half_mask = F.lit((1 << 30) - 1)
     h1 = fingerprint_rolling(F.md5(F.concat(F.lit("a:"), tok))).bitwiseAND(
         half_mask
@@ -788,6 +744,80 @@ def simhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _df_ordered(sh: DataFrame) -> DataFrame:
+    """(id, ln, oss): each doc's hashed shingles as (df, hs) structs in the
+    one global order both prefix filters rely on — document frequency
+    ascending (rarest first, which minimizes candidates), then hash. One
+    shuffle join on the hash + one hash-agg back to (id, ordered-array)."""
+    tok = sh.select("id", F.size("sh").alias("ln"), F.explode("sh").alias("hs"))
+    dfreq = tok.groupBy("hs").agg(F.count("*").alias("df"))
+    return (
+        tok.join(dfreq, "hs")
+        .groupBy("id", "ln")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "hs"))).alias("oss"))
+    )
+
+
+def _prefix(threshold: float) -> Column:
+    """The first |s| - ceil(t·|s|) + 1 ordered elements: any pair reaching
+    overlap ceil(t·|s|) must share one of them."""
+    n = (F.col("ln") - F.ceil(F.lit(threshold) * F.col("ln")) + 1).cast("int")
+    return F.slice("oss", 1, n)
+
+
+def _positions(ordered: DataFrame, elems: Column) -> DataFrame:
+    """(id, ln, pos, hs): one row per element of ``elems`` with its 1-based
+    position, for the PPJoin positional filter (Xiao et al., "Efficient
+    Similarity Joins for Near Duplicate Detection", WWW 2008)."""
+    return ordered.select(
+        "id", "ln", F.posexplode(elems).alias("pos0", "p")
+    ).select("id", "ln", (F.col("pos0") + 1).alias("pos"), F.col("p.hs").alias("hs"))
+
+
+def _prefix_candidates(
+    a: DataFrame, b: DataFrame, pair_filter: Column, alpha: Column
+) -> DataFrame:
+    """(id_a, id_b) of position rows ``a`` × ``b`` sharing a hash, kept
+    when ``pair_filter`` holds and the grouped positional bound reaches the
+    required overlap ``alpha``.
+
+    Grouped positional bound (r16 — PPJoin's per-occurrence check upgraded
+    to the pair-level count+position filter, lossless): let c be the
+    number of shared elements of a candidate pair and (pa, pb) the
+    positions of the LAST one. Both sides are slices of the same global
+    (df, hash) order, so any common element outside those c sits after pa
+    in a AND after pb in b (were it before pa in a it would precede the
+    last shared element in the global order and hence sit inside BOTH
+    slices — i.e. be one of the c). Therefore overlap ≤ c + min(|a|−pa,
+    |b|−pb). The groupBy replaces the r15 per-occurrence check + distinct
+    on the same shuffle key, and measurably fewer pairs reach the exact
+    verify (guide §2.3: drop rows before the expensive stage). It must
+    aggregate ALL join hits — pre-filtering occurrences would undercount
+    c and make the bound unsound."""
+
+    def side(pos: DataFrame, s: str) -> DataFrame:
+        return pos.select(
+            "hs", F.col("id").alias(f"id_{s}"),
+            F.col("ln").alias(f"ln_{s}"), F.col("pos").alias(f"pos_{s}"),
+        )
+
+    gbound = F.col("cp") + F.least(
+        F.col("ln_a") - F.col("mpa"), F.col("ln_b") - F.col("mpb")
+    )
+    return (
+        side(a, "a").join(side(b, "b"), "hs")
+        .filter(pair_filter)
+        .groupBy("id_a", "id_b", "ln_a", "ln_b")
+        .agg(
+            F.count("*").alias("cp"),
+            F.max("pos_a").alias("mpa"),
+            F.max("pos_b").alias("mpb"),
+        )
+        .filter(gbound >= alpha)
+        .select("id_a", "id_b")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -816,93 +846,24 @@ def ngram_jaccard_pairs(
     # pair to collide in 64 bits — vanishing even at 100 TB vocabulary, and
     # it could only perturb a pair sitting exactly on the threshold.
     sh = _hashed_shingle_sets(df, text_col, id_col, shingle_k)
-    tok = sh.select(
-        "id", F.size("sh").alias("ln"), F.explode("sh").alias("hs")
-    )
-    dfreq = tok.groupBy("hs").agg(F.count("*").alias("df"))
-    # re-assemble each doc's shingles ordered by (df, hash): one shuffle
-    # join on the hash + one hash-agg back to (id, ordered-array).
-    ordered = (
-        tok.join(dfreq, "hs")
-        .groupBy("id", "ln")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "hs"))).alias("oss"))
-    )
-    prefix_len = (
-        F.col("ln") - F.ceil(F.lit(threshold) * F.col("ln")) + 1
-    ).cast("int")
-    # posexplode keeps each prefix element's 1-based position for the PPJoin
-    # positional filter below (Xiao et al., "Efficient Similarity Joins for
-    # Near Duplicate Detection", WWW 2008).
-    # Persisted (r15): the self-join below consumes idx on BOTH sides, so an
+    # Persisted (r15): the self-join consumes idx on BOTH sides, so an
     # unpersisted idx re-executes the whole dfreq-join + per-doc sort chain
     # twice (guide §2.4 — two operations keyed the same way should share one
     # computation). idx is the PREFIX tokens only (~(1−t)·shingle count), a
     # strict fraction of the already-persisted shingle relation.
-    idx = ordered.select(
-        "id", "ln",
-        F.posexplode(F.slice("oss", 1, prefix_len)).alias("pos0", "p"),
-    ).select(
-        "id", "ln", (F.col("pos0") + 1).alias("pos"), F.col("p.hs").alias("hs")
-    ).transform(invocation_pin)
-    a = idx.select(
-        F.col("hs"), F.col("id").alias("id_a"),
-        F.col("ln").alias("ln_a"), F.col("pos").alias("pos_a"),
-    )
-    b = idx.select(
-        F.col("hs"), F.col("id").alias("id_b"),
-        F.col("ln").alias("ln_b"), F.col("pos").alias("pos_b"),
-    )
-    # Jaccard ≥ t ⇔ overlap ≥ α = ceil(t/(1+t)·(|a|+|b|)). Grouped
-    # positional bound (r16 — PPJoin's per-occurrence check upgraded to
-    # the pair-level count+position filter, lossless): let c be the
-    # number of shared PREFIX elements of a candidate pair and (pa, pb)
-    # the positions of the LAST one. Both prefixes are slices of the
-    # same global (df, hash) order, so any common element outside those
-    # c sits after pa in a AND after pb in b (were it before pa in a it
-    # would precede the last shared element in the global order and
-    # hence sit inside BOTH prefixes — i.e. be one of the c). Therefore
-    # overlap ≤ c + min(|a|−pa, |b|−pb). The r15 form kept a pair when
-    # ANY single occurrence satisfied 1 + min(|a|−i, |b|−j) ≥ α; the
-    # grouped bound is tighter (c hits consume c prefix slots), and the
-    # groupBy replaces the old distinct — same shuffle key, one extra
-    # count/max per pair, measurably fewer pairs reaching the exact
-    # array_intersect verify (guide §2.3: drop rows before the
-    # expensive stage). It must aggregate ALL join hits — pre-filtering
-    # occurrences would undercount c and make the bound unsound.
+    idx = _positions(_df_ordered(sh), _prefix(threshold)).transform(invocation_pin)
+    # Jaccard ≥ t ⇔ overlap ≥ α = ceil(t/(1+t)·(|a|+|b|))
     alpha = F.ceil(
         F.lit(threshold) / (1.0 + threshold) * (F.col("ln_a") + F.col("ln_b"))
     )
-    gbound = F.col("cp") + F.least(
-        F.col("ln_a") - F.col("mpa"), F.col("ln_b") - F.col("mpb")
+    pair_filter = (
+        (F.col("id_a") < F.col("id_b"))
+        & (F.col("ln_a") >= threshold * F.col("ln_b"))
+        & (F.col("ln_b") >= threshold * F.col("ln_a"))
     )
-    cands = (
-        a.join(b, "hs")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("ln_a") >= threshold * F.col("ln_b"))
-            & (F.col("ln_b") >= threshold * F.col("ln_a"))
-        )
-        .groupBy("id_a", "id_b", "ln_a", "ln_b")
-        .agg(
-            F.count("*").alias("cp"),
-            F.max("pos_a").alias("mpa"),
-            F.max("pos_b").alias("mpb"),
-        )
-        .filter(gbound >= alpha)
-        .select("id_a", "id_b")
-    )
-    paired = _spread(cands).join(
-        sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a"
-    ).join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    # |A ∪ B| = |A| + |B| − |A ∩ B| over sets (r15): one array op per
-    # candidate instead of two, same exact integer division
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        paired.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        .transform(invocation_pin)
+    cands = _prefix_candidates(idx, idx, pair_filter, alpha)
+    return _verify_jaccard(_spread(cands), sh, sh, threshold).transform(
+        invocation_pin
     )
 
 
@@ -926,10 +887,11 @@ def containment_pairs(
     its first |Sa| − ⌈t·|Sa|⌉ + 1 shingles in global df-ascending order
     (rarest first — any qualifying pair must share one of them), while
     the CONTAINER side is indexed on ALL its shingles (no symmetric
-    prefix exists: b's extra mass is unbounded). The positional bound
-    overlap ≤ 1 + min(|Sa|−i, |Sb|−j) at the first shared (i, j) prunes
-    candidates before the exact verify, losslessly (Xiao et al., WWW
-    2008, adapted to the containment measure).
+    prefix exists: b's extra mass is unbounded). The grouped positional
+    bound of :func:`ngram_jaccard_pairs` holds here too (the probe prefix
+    and the full index share one global order) and prunes candidates
+    before the exact verify, losslessly (Xiao et al., WWW 2008, adapted to
+    the containment measure).
 
     Scale shape: candidate volume is bounded by co-occurrence of RARE
     probe shingles × container df — never O(n²); the verify joins the
@@ -937,82 +899,20 @@ def containment_pairs(
     (contained, container) with ln_a < ln_b, ties broken id_a < id_b
     (equal-size sets have symmetric containment)."""
     sh = _hashed_shingle_sets(df, text_col, id_col, shingle_k)
-    tok = sh.select(
-        "id", F.size("sh").alias("ln"), F.explode("sh").alias("hs")
+    ordered = _df_ordered(sh)
+    pair_filter = (F.col("ln_a") < F.col("ln_b")) | (
+        (F.col("ln_a") == F.col("ln_b")) & (F.col("id_a") < F.col("id_b"))
     )
-    dfreq = tok.groupBy("hs").agg(F.count("*").alias("df"))
-    ordered = (
-        tok.join(dfreq, "hs")
-        .groupBy("id", "ln")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("df", "hs"))).alias("oss")
-        )
+    cands = _prefix_candidates(
+        _positions(ordered, _prefix(threshold)),
+        _positions(ordered, F.col("oss")),
+        pair_filter,
+        F.ceil(F.lit(threshold) * F.col("ln_a")),
     )
-    probe_len = (
-        F.col("ln") - F.ceil(F.lit(threshold) * F.col("ln")) + 1
-    ).cast("int")
-    probe = ordered.select(
-        "id", "ln",
-        F.posexplode(F.slice("oss", 1, probe_len)).alias("pos0", "p"),
-    ).select(
-        "id", "ln", (F.col("pos0") + 1).alias("pos"),
-        F.col("p.hs").alias("hs"),
-    )
-    index = ordered.select(
-        "id", "ln",
-        F.posexplode("oss").alias("pos0", "p"),
-    ).select(
-        "id", "ln", (F.col("pos0") + 1).alias("pos"),
-        F.col("p.hs").alias("hs"),
-    )
-    a = probe.select(
-        "hs", F.col("id").alias("id_a"),
-        F.col("ln").alias("ln_a"), F.col("pos").alias("pos_a"),
-    )
-    b = index.select(
-        "hs", F.col("id").alias("id_b"),
-        F.col("ln").alias("ln_b"), F.col("pos").alias("pos_b"),
-    )
-    # Grouped positional bound (r16 — same lossless argument as
-    # ngram_jaccard_pairs: c shared probe-prefix hits with last
-    # positions (pa, pb) bound overlap ≤ c + min(|Sa|−pa, |Sb|−pb),
-    # because the probe prefix and the full index share one global
-    # (df, hash) order — a common element missed by the hits must sit
-    # past BOTH last positions). Replaces per-occurrence 1 + min(...)
-    # + distinct with groupBy over ALL hits; fewer pairs reach the
-    # exact containment verify.
-    alpha = F.ceil(F.lit(threshold) * F.col("ln_a"))
-    gbound = F.col("cp") + F.least(
-        F.col("ln_a") - F.col("mpa"), F.col("ln_b") - F.col("mpb")
-    )
-    cands = (
-        a.join(b, "hs")
-        .filter(
-            (F.col("ln_a") < F.col("ln_b"))
-            | (
-                (F.col("ln_a") == F.col("ln_b"))
-                & (F.col("id_a") < F.col("id_b"))
-            )
-        )
-        .groupBy("id_a", "id_b", "ln_a", "ln_b")
-        .agg(
-            F.count("*").alias("cp"),
-            F.max("pos_a").alias("mpa"),
-            F.max("pos_b").alias("mpb"),
-        )
-        .filter(gbound >= alpha)
-        .select("id_a", "id_b")
-    )
-    paired = (
-        _spread(cands)
-        .join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    containment = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        "sh_a"
-    )
+    containment = F.size(F.array_intersect("sh_a", "sh_b")) / F.size("sh_a")
     return (
-        paired.withColumn("containment", containment)
+        _pair_sets(_spread(cands), sh, sh)
+        .withColumn("containment", containment)
         .filter(F.col("containment") >= threshold)
         .select(
             F.col("id_a").alias("contained_id"),
@@ -1241,8 +1141,6 @@ def semantic_dedup_pairs_deterministic(
     shuffles) + a per-cluster self-join — the same bucketed-join skeleton
     as the sign-blocked cosine pairs, with data-placed buckets.
     """
-    from databricks_etl_pipelines_spark.functions.numeric import stable_round
-    from databricks_etl_pipelines_spark.functions.vectors import cosine
     from databricks_etl_pipelines_spark.operators.similarity import (
         assign_deterministic_lists,
     )

@@ -289,7 +289,8 @@ def curation_ingest_neardup(
     ``streaming_curation_neardup_crossengine`` query drains a
     deterministic 3-batch feed under this family and its DuckDB oracle
     re-derives the full per-batch funnel (exact dedup → hash anti-join →
-    in-batch banded LSH → persisted-index screen) value-for-value.
+    in-batch banded LSH → persisted-index screen) value-for-value. Any
+    other name raises ``ValueError`` before the stream starts.
     """
     from pyspark.sql import Window
 
@@ -301,9 +302,11 @@ def curation_ingest_neardup(
     )
     from databricks_etl_pipelines_spark.operators.dedup import (
         MinHashCorpusIndex,
-        minhash_crossengine_pairs,
-        minhash_lsh_dedup_pairs,
+        _family,
+        _minhash_pairs,
     )
+
+    _family(family)  # a misspelt family fails here, not on the first batch
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -322,16 +325,9 @@ def curation_ingest_neardup(
             seen = accepted.read(spark).select("text_hash")
             first = first.join(seen, "text_hash", "left_anti")
         # in-batch near-dups: drop the greater id of each verified pair
-        if family == "crossengine":
-            pairs = minhash_crossengine_pairs(
-                first, text_col, id_col,
-                num_perm=num_perm, bands=bands, threshold=threshold,
-            )
-        else:
-            pairs = minhash_lsh_dedup_pairs(
-                first, text_col, id_col,
-                threshold=threshold, num_perm=num_perm, bands=bands,
-            )
+        pairs = _minhash_pairs(
+            first, text_col, id_col, family, threshold, num_perm, bands
+        )
         losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
         first = first.join(losers, id_col, "left_anti")
         # cross-batch near-dups: screen against the persisted corpus index

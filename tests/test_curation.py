@@ -701,3 +701,31 @@ def test_temperature_epochs_boosts_low_resource_and_caps(spark):
         ).collect()
     )
     assert again == sorted((r.doc_id, r.epoch) for r in rows_out)
+
+
+def test_overlapped_actions_keep_callers_job_group(spark):
+    """curate_corpus and prepare_pretraining_corpus overlap two actions on
+    a thread pool; those jobs must still carry the caller's job group, so
+    cancelling the group (or tagging it) covers every job the call ran."""
+    from pyspark.sql import functions as F
+
+    from databricks_etl_pipelines_spark.operators.curation import (
+        prepare_pretraining_corpus,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "curation-overlap-test"
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "overlapped curation actions")
+    try:
+        curate_corpus(_docs(spark), min_quality=50, langs=("en",))
+        docs = _docs(spark).withColumn("source", F.lit("s1"))
+        prepare_pretraining_corpus(docs, F.lit(True), min_quality=50)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert tracker.getJobIdsForGroup(group)
+    assert not ungrouped

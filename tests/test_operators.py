@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_etl_pipelines_spark.operators.dedup import (
+    MinHashCorpusIndex,
     exact_dedup,
+    minhash_crossengine_pairs,
+    minhash_lsh_candidates,
     minhash_lsh_dedup_pairs,
     ngram_jaccard_pairs,
     simhash_dedup_pairs,
@@ -1064,24 +1068,29 @@ def test_hash_embed_integer_exact_and_retrieval_sane(spark):
     assert sorted(map(tuple, emb)) == sorted(map(tuple, again))
 
 
-def test_crossengine_corpus_index_matches_batch_pipeline(spark, sf_dir, tmp_path):
-    """The crossengine-family persisted index screening equals the batch
-    crossengine pair pipeline restricted to (corpus, batch) pairs — the
-    incremental path loses nothing vs recomputing from scratch."""
-    from pyspark.sql import functions as F
+# family -> (batch pair operator, num_perm, bands) the index is compared with
+_BATCH_PAIRS = {
+    "xxhash64": (minhash_lsh_dedup_pairs, 32, 8),
+    "crossengine": (minhash_crossengine_pairs, 16, 4),
+}
 
-    from databricks_etl_pipelines_spark.operators.dedup import (
-        MinHashCorpusIndex,
-        minhash_crossengine_pairs,
-    )
+
+@pytest.mark.parametrize("family", ["xxhash64", "crossengine"])
+def test_crossengine_corpus_index_matches_batch_pipeline(
+    spark, sf_dir, tmp_path, family
+):
+    """The persisted index's screening equals the batch pair pipeline of
+    the same family restricted to (corpus, batch) pairs — the incremental
+    path loses nothing vs recomputing from scratch."""
     from databricks_etl_pipelines_spark.sources import table
 
+    pair_fn, num_perm, bands = _BATCH_PAIRS[family]
     docs = table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     idx = MinHashCorpusIndex.build(
         corpus, "text", "doc_id", str(tmp_path / "xidx"),
-        num_perm=16, bands=4, shingle_k=3, family="crossengine",
+        num_perm=num_perm, bands=bands, shingle_k=3, family=family,
     )
     incr = {
         (r.corpus_id, r.new_id, round(r.jaccard, 9))
@@ -1091,8 +1100,9 @@ def test_crossengine_corpus_index_matches_batch_pipeline(spark, sf_dir, tmp_path
     }
     full = {
         (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in minhash_crossengine_pairs(
-            docs, "text", "doc_id", num_perm=16, bands=4, threshold=0.5
+        for r in pair_fn(
+            docs, "text", "doc_id", num_perm=num_perm, bands=bands,
+            threshold=0.5,
         ).collect()
         # (even, odd) pairs only; batch pipeline orders id_a < id_b, and
         # an even corpus id may sit on either side
@@ -1103,6 +1113,76 @@ def test_crossengine_corpus_index_matches_batch_pipeline(spark, sf_dir, tmp_path
     }
     assert incr == full_eo
     assert incr  # non-vacuous on the real corpus
+
+
+# family -> the batch operator that applies max_bucket to its candidates
+_CAPPED = {
+    "xxhash64": minhash_lsh_candidates,
+    "crossengine": minhash_crossengine_pairs,
+}
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "crossengine"])
+def test_minhash_bucket_cap_drops_hot_buckets(spark, tmp_path, family):
+    """The boilerplate guardrail: k identical docs fill every band bucket
+    with k members, so a cap below k drops all their pairs and a cap at k
+    keeps all of them. The index caps its corpus side the same way."""
+    k = 4
+    same = spark.createDataFrame(
+        [(i, BASE) for i in range(k)], "doc_id long, text string"
+    )
+    every = {(a, b) for a in range(k) for b in range(a + 1, k)}
+
+    def pairs(cap):
+        return {
+            (r.id_a, r.id_b)
+            for r in _CAPPED[family](
+                same, "text", "doc_id", max_bucket=cap
+            ).collect()
+        }
+
+    assert pairs(k - 1) == set()
+    assert pairs(k) == every
+
+    idx = MinHashCorpusIndex.build(
+        same, "text", "doc_id", str(tmp_path / "mh"), family=family
+    )
+    one = spark.createDataFrame([(100, BASE)], "doc_id long, text string")
+
+    def matches(cap):
+        return idx.match_new(
+            spark, one, "text", "doc_id", max_bucket=cap
+        ).count()
+
+    assert matches(k - 1) == 0
+    assert matches(k) == k
+
+
+def test_unknown_minhash_family_raises(spark, tmp_path):
+    """A misspelt family names both real ones instead of silently running
+    xxhash64 under the wrong name: the index writes nothing, and the near-
+    dup stream fails before it starts."""
+    from databricks_etl_pipelines_spark.sources.managed_table import ManagedTable
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        curation_ingest_neardup,
+    )
+
+    root = tmp_path / "mh"
+    with pytest.raises(ValueError, match="crossengine.*xxhash64"):
+        MinHashCorpusIndex.build(
+            _docs(spark), "text", "doc_id", str(root), family="crossEngine"
+        )
+    assert not root.exists()
+
+    src = str(tmp_path / "src")
+    _docs(spark).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    with pytest.raises(ValueError, match="crossengine.*xxhash64"):
+        curation_ingest_neardup(
+            stream, ManagedTable(str(tmp_path / "accepted")),
+            str(tmp_path / "idx"), str(tmp_path / "ckpt"),
+            family="crossEngine",
+        )
 
 
 def test_duplicated_span_report_planted(spark):
