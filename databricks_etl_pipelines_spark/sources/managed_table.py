@@ -11,6 +11,12 @@ Layout:  <root>/_v{N}/part-*.parquet  +  <root>/_log.json (version manifest)
 Every version is made by ``ManagedTable._commit``: it picks ``N``, writes
 ``_v{N}``, carries untouched buckets over and appends the manifest entry.
 
+Idempotent writes: ``append``, ``merge_upsert`` and ``create_or_overwrite``
+take ``txn=(app_id, batch_id)`` (Delta's ``txnAppId``/``txnVersion``), which
+``_commit`` stamps into the manifest entry as ``"txn"``. A keyed write whose
+batch id is at or below the newest one recorded for its app writes nothing;
+the lookup stops at the newest keyless overwrite, which resets every key.
+
 Semantics mirrored from Delta MERGE whenMatchedUpdateAll /
 whenNotMatchedInsertAll: for keys present in the source, the source row
 wins; target rows with unmatched keys carry over; source rows with new keys
@@ -354,35 +360,23 @@ class ManagedTable:
             raise FileNotFoundError(f"no versions at {self.root}")
         return log[-1]["version"]
 
-    def latest_meta(self, having: str | None = None) -> dict | None:
-        """Latest commit's manifest entry (version/operation/timestamp plus
-        any operation metadata) as a plain dict, or ``None`` for a table
-        with no commits — the driver-side hook replay-aware writers use to
-        read fold markers without a Spark scan. The entry and its metadata
-        land in ONE atomic ``_write_log`` (os.replace), so a marker is
-        never observable without the table version it stamps.
-
-        ``having`` scans the manifest BACKWARDS for the newest entry
-        carrying that metadata key (``None`` if no entry carries it).
-        Replay-aware writers use ``having="fold_checkpoint"`` so a
-        maintenance commit (vacuum flag, optimize/compact, an explicit
-        append/merge) between two folds does not shadow the fold markers —
-        the newest-entry-only read silently degraded a fold-stamped gold
-        to an unstamped bootstrap, double-folding replayed batches.
-
-        A key stamped with an explicit ``None`` is a TOMBSTONE: the
-        backward scan stops there and returns that entry (whose value
-        reads as "no marker"), so a deliberate owner-side
-        :meth:`create_or_overwrite` CLEARS earlier fold markers instead
-        of letting a restarted stream resurrect a stale high-water mark
-        (see :meth:`create_or_overwrite`)."""
-        log = _read_log(self.root)
-        if having is None:
-            return dict(log[-1]) if log else None
-        for entry in reversed(log):
-            if having in entry:
-                return dict(entry)
+    def _last_txn(self, app_id: str | None = None) -> dict | None:
+        """The newest manifest entry keyed by ``app_id`` (by any app when
+        None), or None. The scan stops at the newest keyless overwrite,
+        which resets every key."""
+        for entry in reversed(_read_log(self.root)):
+            if "txn" in entry:
+                if app_id is None or entry["txn"][0] == app_id:
+                    return entry
+            elif entry["operation"] == "overwrite":
+                return None
         return None
+
+    def _committed(self, txn: tuple[str, int] | None) -> bool:
+        """Whether a write keyed by ``txn`` already landed: its batch id is
+        at or below the newest one recorded for its app."""
+        last = self._last_txn(txn[0]) if txn else None
+        return last is not None and txn[1] <= last["txn"][1]
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.root, f"_v{v}")
@@ -509,6 +503,7 @@ class ManagedTable:
         meta: dict | None = None,
         spec: tuple[list[str], int] | None = None,
         touched: Sequence[int] | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """Write ``data`` as version N+1 and append its manifest entry — the
         one place a version is made.
@@ -528,7 +523,8 @@ class ManagedTable:
         no data IO, and a pytest can assert byte-identity across
         versions.
 
-        The entry stamps the written schema (see ``_schema_json``)."""
+        The entry stamps the written schema (see ``_schema_json``) and
+        ``txn``, which the public writers check before they call here."""
         log = _read_log(self.root)
         v = (log[-1]["version"] + 1) if log else 0
         path = self._version_dir(v)
@@ -569,6 +565,8 @@ class ManagedTable:
         }
         entry.update(stamps)
         entry.update(meta or {})
+        if txn is not None:
+            entry["txn"] = list(txn)
         log.append(entry)
         _write_log(self.root, log)
         return v
@@ -679,8 +677,7 @@ class ManagedTable:
         partition_by: Sequence[str] | None = None,
         bucket_by: Sequence[str] | None = None,
         n_buckets: int = 16,
-        meta: dict | None = None,
-        reset_fold_markers: bool = True,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """``df`` is a DataFrame, or a ``pyarrow.Table`` built on the
         driver, which is written without a Spark job; an Arrow table takes
@@ -694,43 +691,13 @@ class ManagedTable:
         ``bucket_by`` = key-hash bucket layout enabling partition-pruned
         MERGE (see module docstring). Mutually exclusive with partition_by.
 
-        ``meta`` = extra keys stamped into this commit's manifest entry
-        (atomic with the version — see :meth:`latest_meta`); replay-aware
-        writers use it as a fold marker.
-
-        An overwrite WITHOUT an explicit fold marker is a deliberate
-        state reset by the table's owner, so it stamps a
-        ``fold_checkpoint: None`` TOMBSTONE: the backward marker scan
-        stops there and any prior fold high-water mark is cleared —
-        otherwise an owner who overwrites the gold to reset state and
-        restarts the stream on a fresh checkpoint (batch ids back at 0)
-        would have those batches silently dropped as "replays" of the
-        resurrected old mark. Maintenance commits (append / merge /
-        optimize) do NOT tombstone — they must stay invisible to the
-        markers (see :meth:`latest_meta`).
-
-        Caveat: an overwrite that REBUILDS the gold from fact history
-        while a live stream keeps folding on its existing checkpoint is
-        NOT a reset — if the rebuild already includes an in-flight
-        batch's data, clearing the marker lets a crash-redelivered copy
-        of that batch fold a second time. No marker scheme can infer
-        that intent, so it must be declared, either way:
-
-        * re-stamp the live marker explicitly —
-          ``meta={"fold_checkpoint": ckpt, "fold_batch_id":
-          last_folded_id}`` (an explicit marker suppresses the
-          tombstone); or
-        * pass ``reset_fold_markers=False`` — no tombstone is stamped
-          and the backward marker scan keeps seeing the pre-rebuild
-          marker (the overwrite behaves as a maintenance commit w.r.t.
-          fold state), for rebuilders that cannot restate the exact
-          batch id.
-
-        Because the default (tombstone) silently changes replay
-        semantics for a gold that HAS a live marker, that case emits a
-        ``RuntimeWarning`` naming both escape hatches — a reset of an
-        unmarked table stays silent.
-        """
+        ``txn=(app_id, batch_id)`` keys the write (see the module
+        docstring): one already recorded returns the latest version. An
+        overwrite without ``txn`` is a state reset that ends every key's
+        history, so a stream restarted on a fresh checkpoint writes again;
+        it warns when the table has keyed commits."""
+        if self._committed(txn):
+            return self.latest_version()
         if isinstance(df, pa.Table) and (
             bucket_by or partition_by or not _flat_atomic(from_arrow_schema(df.schema))
         ):
@@ -738,33 +705,24 @@ class ManagedTable:
                 "a pyarrow.Table is written unbucketed and unpartitioned, "
                 "with flat atomic columns only"
             )
-        meta = dict(meta or {})
-        if "fold_checkpoint" not in meta and reset_fold_markers:
-            prior = self.latest_meta(having="fold_checkpoint") if self.exists() else None
-            if prior is not None and prior.get("fold_checkpoint") is not None:
-                warnings.warn(
-                    f"create_or_overwrite({self.root}) is tombstoning a live "
-                    f"fold marker (checkpoint={prior['fold_checkpoint']!r}, "
-                    f"batch_id={prior.get('fold_batch_id')!r}): a stream that "
-                    "keeps folding on that checkpoint loses crash-redelivery "
-                    "replay protection. If this overwrite REBUILDS (not "
-                    "resets) the gold, re-stamp the marker via meta="
-                    "{'fold_checkpoint': ..., 'fold_batch_id': ...} or pass "
-                    "reset_fold_markers=False to preserve it.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            meta["fold_checkpoint"] = None  # reset tombstone
         if bucket_by and partition_by:
             raise ValueError("bucket_by and partition_by are exclusive")
+        if txn is None and self._last_txn() is not None:
+            warnings.warn(
+                f"create_or_overwrite({self.root}) without txn resets its "
+                "idempotency keys: a replayed batch of their streams writes again",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         spec = (list(bucket_by), n_buckets) if bucket_by else None
-        return self._commit(df, "overwrite", partition_by, meta, spec)
+        return self._commit(df, "overwrite", partition_by, spec=spec, txn=txn)
 
     def append(
         self,
         df: DataFrame | pa.Table,
         partition_by: Sequence[str] | None = None,
         merge_schema: bool = False,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """``merge_schema`` = Delta's ``mergeSchema``: the committed
         schema becomes the union of old and new columns, absent columns
@@ -782,16 +740,22 @@ class ManagedTable:
         (``pmod(xxhash64(keys), n_buckets)`` as an int, the Column
         :meth:`merge_bucket` gives); that column is trusted, not checked.
         Any other Arrow source takes the Spark path as a local relation
-        (no scan job), without that column."""
+        (no scan job), without that column.
+
+        ``txn`` keys the write as in :meth:`create_or_overwrite`."""
+        if self._committed(txn):
+            return self.latest_version()
         if not self.exists():
-            return self._commit(_as_frame(df), "append", partition_by)
+            return self._commit(_as_frame(df), "append", partition_by, txn=txn)
         spec = self.bucket_spec()
         if not partition_by:
             local = self._touched_local(df, spec, "append")
             if local is not None:
                 incoming, touched, prior = local
                 rows = pa.concat_tables([prior, incoming])
-                return self._commit(rows, "append", spec=spec, touched=touched)
+                return self._commit(
+                    rows, "append", spec=spec, touched=touched, txn=txn
+                )
         df = _as_frame(df)
         spark = df.sparkSession
         prior = self.read(spark)
@@ -807,10 +771,11 @@ class ManagedTable:
                 "append",
                 spec=spec,
                 touched=touched,
+                txn=txn,
             )
         widened = prior.unionByName(df, allowMissingColumns=drifted)
         meta = {"schema_evolved": True} if spec else None
-        return self._commit(widened, "append", partition_by, meta, spec)
+        return self._commit(widened, "append", partition_by, meta, spec, txn=txn)
 
     def optimize(
         self,
@@ -869,13 +834,20 @@ class ManagedTable:
         source: DataFrame | pa.Table,
         keys: Sequence[str],
         merge_schema: bool = False,
-    ) -> int:
+        txn: tuple[str, int] | None = None,
+    ) -> pa.Table | DataFrame | None:
         """Keyed upsert: matched keys take the source row, unmatched target
         rows carry over, new source keys insert (Delta MERGE
         whenMatchedUpdateAll/whenNotMatchedInsertAll, 02:174-184).
 
-        Idempotent: replaying the same source is a no-op state-wise, which
-        is what makes checkpoint-replayed micro-batches safe.
+        Returns the target rows the source's keys matched, as they were
+        before the MERGE (Delta's change-feed pre-images): the Arrow table
+        the driver path read, or on the Spark path a lazy DataFrame over
+        the prior version, to be read before that version is vacuumed.
+        None when the MERGE creates the table or ``txn`` (keyed as in
+        :meth:`create_or_overwrite`) already landed.
+
+        Replaying the same source is a no-op state-wise, keyed or not.
 
         On a table created with ``bucket_by=keys``, only buckets containing
         source keys are rewritten; untouched buckets are hardlinked into
@@ -890,8 +862,11 @@ class ManagedTable:
         one layout-preserving full rewrite so version dirs stay
         single-schema, then prunes again.
         """
+        if self._committed(txn):
+            return None
         if not self.exists():
-            return self._commit(_as_frame(source, spark), "create")
+            self._commit(_as_frame(source, spark), "create", txn=txn)
+            return None
         keys = list(keys)
         spec = self.bucket_spec()
         keyed = self._merge_spec(keys)
@@ -904,11 +879,12 @@ class ManagedTable:
             if local is not None:
                 src, touched, target_touched = local
                 # an Arrow join never matches a NULL key, as Spark's
-                untouched = target_touched.join(
-                    src.select(keys), keys, join_type="left anti"
-                )
+                src_keys = src.select(keys)
+                untouched = target_touched.join(src_keys, keys, join_type="left anti")
+                matched = target_touched.join(src_keys, keys, join_type="left semi")
                 merged = pa.concat_tables([src, untouched.select(src.column_names)])
-                return self._commit(merged, "merge", spec=keyed, touched=touched)
+                self._commit(merged, "merge", spec=keyed, touched=touched, txn=txn)
+                return matched.drop_columns([BUCKET_COL])
         source = _as_frame(source, spark)
         target = self.read(spark)
         drifted = self._drift_gate(target.schema, source.schema, "merge", merge_schema)
@@ -916,19 +892,21 @@ class ManagedTable:
             src, touched, target_touched = self._touched_buckets(
                 spark, source, *keyed
             )
-            untouched = target_touched.join(
-                src.select(*keys).distinct(), keys, "left_anti"
-            )
+            src_keys = src.select(*keys).distinct()
+            untouched = target_touched.join(src_keys, keys, "left_anti")
             # the table's column order, so no version mixes two orders
             merged = src.select(*target_touched.columns).unionByName(untouched)
-            return self._commit(merged, "merge", spec=keyed, touched=touched)
+            self._commit(merged, "merge", spec=keyed, touched=touched, txn=txn)
+            return target_touched.join(src_keys, keys, "left_semi").drop(BUCKET_COL)
         # Merge keys differ from the bucket spec (or the schema widens) ⇒
         # full rewrite; a bucketed table keeps its layout so later
         # bucket-spec operations stay O(touched buckets).
-        untouched = target.join(source.select(*keys).distinct(), keys, "left_anti")
+        src_keys = source.select(*keys).distinct()
+        untouched = target.join(src_keys, keys, "left_anti")
         merged = source.unionByName(untouched, allowMissingColumns=drifted)
         meta = {"schema_evolved": True} if spec and drifted else None
-        return self._commit(merged, "merge", meta=meta, spec=spec)
+        self._commit(merged, "merge", meta=meta, spec=spec, txn=txn)
+        return target.join(src_keys, keys, "left_semi")
 
     def delete_where(self, spark: SparkSession, condition: F.Column) -> int:
         """DELETE FROM semantics (Delta's ``delete``, absent in the

@@ -598,57 +598,25 @@ def fold_partial_batch(
     checkpoint_dir: str,
     combine: dict[str, str] | None = None,
 ) -> None:
-    """One micro-batch's EXACTLY-ONCE commutative-monoid fold into the
-    gold table
-    (the per-batch body of :func:`incremental_aggregate`, module-level so
-    the replay semantics are directly testable).
+    """One micro-batch's exactly-once commutative-monoid fold into the
+    gold table (the per-batch body of :func:`incremental_aggregate`).
 
-    Exactly-once despite foreachBatch's at-least-once delivery: every
-    commit stamps ``fold_checkpoint`` + ``fold_batch_id`` into the
-    manifest entry — atomic with the table version itself (one
-    ``os.replace`` of ``_log.json``) — and a re-delivered batch whose id
-    is ≤ the stamped high-water mark is a checkpoint replay and folds
-    NOTHING. A crash between the parquet write and the manifest write
-    leaves the manifest (and therefore both the gold rows AND the marker)
-    at the pre-batch state, so the replayed batch re-folds exactly once;
-    the orphan ``_v{N}`` directory is unreferenced, not double-counted.
-
-    Ownership (the ema_stream discipline): a gold table stamped by a
-    DIFFERENT checkpoint is foreign state — batch 0 takes it over with a
-    visible warning (fresh run, stale scratch), any later batch fails
-    loudly instead of folding onto another query's aggregate. An
-    UNSTAMPED existing table is a batch-built bootstrap gold: folded
-    into, then stamped.
-
-    The markers are read via a BACKWARD manifest scan
-    (``latest_meta(having="fold_checkpoint")``), so a non-fold commit
-    between batches — a maintenance flag, compaction, or an explicit
-    append/merge by the table's owner — does not shadow the fold
-    markers: replay detection and ownership survive, and the next fold
-    simply folds onto whatever rows the latest version holds (a
-    deliberate owner-side modification is bootstrap data, not a reason
-    to lose exactly-once). The one exception is an owner-side
-    ``create_or_overwrite`` — a wholesale overwrite is a STATE RESET,
-    so it stamps a ``fold_checkpoint: None`` tombstone that clears the
-    markers: a stream restarted after the reset (fresh checkpoint,
-    batch ids back at 0) folds from the reset rows instead of having
-    its batches dropped as replays of the resurrected old high-water
-    mark. An owner REBUILDING the gold from history under a live
-    checkpoint must instead re-stamp the marker explicitly
-    (``meta={"fold_checkpoint": ..., "fold_batch_id": ...}``) — see
-    the ``create_or_overwrite`` caveat.
-    """
+    Each fold overwrites the gold keyed by ``(checkpoint_dir, batch_id)``,
+    so a re-delivered batch folds nothing. Ownership comes from the key:
+    when the newest keyed commit names another checkpoint, batch 0 takes
+    the table over with a warning and a later batch raises. A table with
+    no keyed commit (batch-built, or reset by a keyless overwrite) is
+    folded into."""
     import warnings
 
-    prior = target.latest_meta(having="fold_checkpoint")
-    owner = prior.get("fold_checkpoint") if prior else None
+    last = target._last_txn()
     takeover = False
-    if owner == checkpoint_dir:
-        last = prior.get("fold_batch_id", -1)
-        if batch_id <= last:
-            return  # checkpoint replay of an already-folded batch
-    elif owner is not None:
-        if batch_id == 0:
+    if last is not None:
+        owner, last_id = last["txn"]
+        if owner == checkpoint_dir:
+            if batch_id <= last_id:
+                return  # checkpoint replay of an already-folded batch
+        elif batch_id == 0:
             warnings.warn(
                 f"incremental_aggregate: batch 0 of checkpoint "
                 f"{checkpoint_dir!r} is taking over gold table "
@@ -698,10 +666,7 @@ def fold_partial_batch(
         )
     else:
         combined = partial
-    target.create_or_overwrite(
-        combined,
-        meta={"fold_checkpoint": checkpoint_dir, "fold_batch_id": batch_id},
-    )
+    target.create_or_overwrite(combined, txn=(checkpoint_dir, batch_id))
 
 
 def incremental_aggregate(
@@ -719,9 +684,9 @@ def incremental_aggregate(
     folds it ADDITIVELY into the gold table — union with the current gold
     rows and re-aggregate on the group keys. Gold is correct after every
     batch without ever rescanning history, and the fold is EXACTLY-ONCE
-    under checkpoint replay (see :func:`fold_partial_batch` — a
-    batch-id high-water mark stamped atomically with each gold version
-    makes re-delivered batches no-ops).
+    under checkpoint replay (see :func:`fold_partial_batch`: each gold
+    version is keyed by ``(checkpoint_dir, batch_id)``, so re-delivered
+    batches are no-ops).
 
     ``partial_agg`` must produce ``keys`` + decomposable metric columns.
     ``combine`` omitted folds every metric column with "sum"; when
@@ -790,13 +755,13 @@ class StreamingMedallion:
     whether the batch after it is collected again. A stream of large
     batches discards one capped collect, at its first large batch.
 
-    Two stages are not exact yet (ROADMAP item 1); the keyed silver MERGE
-    is replay-safe, but:
-
-    * gold counts a re-sent id twice: the fold adds every batch row, so a
-      corrected re-send adds to its cell again (2,795 extra rows on
-      perfbench's seed-1 ``txn_pipeline`` feed);
-    * a replayed batch appends its quarantine rows again.
+    Each batch is exactly-once: its quarantine append, silver MERGE (or
+    first create) and gold fold are keyed by ``(checkpoint_dir,
+    batch_id)``. A replay whose three tables hold the key returns before
+    its collect; one that failed part-way redoes only its missing commits.
+    Gold is exact: the fold adds the batch's silver rows and subtracts the
+    rows its MERGE replaced, so a re-sent id counts once, and a cell whose
+    count reaches 0 is dropped.
 
     ``bucket_silver=N`` lays silver out as N key-hash buckets on
     transaction_id: each micro-batch MERGE then rewrites only the buckets
@@ -807,6 +772,7 @@ class StreamingMedallion:
     """
 
     GOLD_KEYS = ["event_date", "event_hour", "card_network", "mcc_category"]
+    GOLD = GOLD_KEYS + ["txn_count", "total_volume"]
     KEYS = ["transaction_id"]
 
     def __init__(
@@ -822,73 +788,110 @@ class StreamingMedallion:
         # discard a capped collect every batch
         self._last_over_cap = False
 
-    def _fold_gold(self, silver: pa.Table | DataFrame) -> None:
-        """Add the batch's hourly partial into gold. An Arrow silver slice
-        is aggregated with pyarrow, which adds each cell's amounts in row
-        order as Spark's aggregate does on a single-split batch. A small
-        fold runs on the driver: the partial holds at most one row per
-        gold cell, so each cell adds exactly two values, and IEEE addition
-        of two values commutes, so it gives the Spark fold's doubles bit
-        for bit."""
-        keys = self.GOLD_KEYS
-        sums = ["txn_count", "total_volume"]
-        if isinstance(silver, pa.Table):
-            partial = (
-                silver.group_by(keys, use_threads=False)
-                .aggregate([([], "count_all"), ("amount", "sum")])
-                .select(keys + ["count_all", "amount_sum"])
-                .rename_columns(keys + sums)
+    def _cells(self, rows: pa.Table | DataFrame, sign: int) -> pa.Table | DataFrame:
+        """The hourly cells of silver ``rows``: ``sign`` times their count
+        and amount sum, each sum taken in one row order on both paths: new
+        rows (``sign`` 1) in batch order, which Spark keeps on a
+        single-split batch, prior rows by (transaction_id, amount)."""
+        keys, order = self.GOLD_KEYS, ["transaction_id", "amount"]
+        if isinstance(rows, pa.Table):
+            if sign < 0:
+                rows = rows.sort_by([(c, "ascending") for c in order])
+            cells = rows.group_by(keys, use_threads=False).aggregate(
+                [([], "count_all"), ("amount", "sum")]
             )
-        else:
-            partial = silver.groupBy(*keys).agg(
-                F.count("*").alias("txn_count"),
-                F.sum("amount").alias("total_volume"),
-            )
-        gold = self.gold_hourly
-        if not gold.exists():
-            gold.create_or_overwrite(partial)
-            return
-        local = gold._touched_local(partial, None, "fold")
-        if local is not None:
-            batch, _, current = local
-            folded = (
-                pa.concat_tables([current, batch])
+            counts = pc.multiply(cells["count_all"], sign)
+            volumes = pc.multiply(cells["amount_sum"], float(sign))
+            return pa.table([*(cells[k] for k in keys), counts, volumes], self.GOLD)
+        if sign < 0:
+            rows = rows.repartition(1).sortWithinPartitions(*order)
+        return rows.groupBy(*keys).agg(
+            (F.count("*") * sign).alias("txn_count"),
+            (F.sum("amount") * float(sign)).alias("total_volume"),
+        )
+
+    def _add_cells(self, a: pa.Table | DataFrame, b: pa.Table | DataFrame):
+        """``a + b`` per cell, on the driver when both are Arrow. Each cell
+        adds at most two values, and IEEE addition of two values commutes,
+        so both paths give the same doubles."""
+        keys, sums = self.GOLD_KEYS, self.GOLD[len(self.GOLD_KEYS):]
+        if isinstance(a, pa.Table) and isinstance(b, pa.Table):
+            return (
+                pa.concat_tables([a, b.select(a.column_names)])
                 .group_by(keys)
                 .aggregate([(c, "sum") for c in sums])
                 .select(keys + [f"{c}_sum" for c in sums])
                 .rename_columns(keys + sums)
             )
-            gold.create_or_overwrite(folded)
-            return
-        folded = (
-            gold.read(self.spark)
-            .unionByName(_frame(self.spark, partial))
+        return (
+            _frame(self.spark, a)
+            .unionByName(_frame(self.spark, b))
             .groupBy(*keys)
             .agg(*(F.sum(c).alias(c) for c in sums))
         )
-        gold.create_or_overwrite(folded)
+
+    def _fold_gold(
+        self,
+        new: pa.Table | DataFrame,
+        prior: pa.Table | DataFrame | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> None:
+        """Fold one batch into gold as ``gold + (new - prior)`` per cell:
+        ``new`` is the batch's silver slice and ``prior`` the silver rows
+        its MERGE replaced. A cell whose count reaches 0 is dropped. The
+        fold runs on the driver while gold is small, and the order of
+        IEEE operations per cell is the same on both paths, so they give
+        the same doubles bit for bit."""
+        delta = self._cells(new, 1)
+        if prior is not None:
+            delta = self._add_cells(delta, self._cells(prior, -1))
+        gold = self.gold_hourly
+        local = gold._touched_local(delta, None, "fold") if gold.exists() else None
+        if local is not None:
+            batch, _, current = local
+            folded = self._add_cells(current, batch)
+        elif gold.exists():
+            folded = self._add_cells(gold.read(self.spark), delta)
+        else:
+            folded = delta
+        count = (pc.field if isinstance(folded, pa.Table) else F.col)("txn_count")
+        gold.create_or_overwrite(folded.filter(count != 0), txn=txn)
 
     def _commit_batch(
         self,
         quarantined: pa.Table | DataFrame,
         silver: pa.Table | DataFrame,
         source: pa.Table | DataFrame,
+        txn: tuple[str, int],
     ) -> None:
         """Append the batch's quarantined rows, MERGE its silver slice and
-        fold that slice into gold. ``source`` is the MERGE's copy of
-        ``silver``: with its bucket ids when collected on the driver."""
-        self.quarantine.append(quarantined)
-        if self.bucket_silver and not self.silver.exists():
+        fold that slice into gold, each keyed by ``txn`` and skipped when
+        it already landed. ``source`` is the MERGE's copy of ``silver``:
+        with its bucket ids when collected on the driver."""
+        self.quarantine.append(quarantined, txn=txn)
+        prior = None
+        if self.silver._committed(txn):
+            # the fold failed after the MERGE: time travel to the version
+            # before the keyed one for the rows the MERGE replaced
+            version = self.silver._last_txn(txn[0])["version"]
+            if version > 0:
+                prior = self.silver.read(self.spark, version - 1).join(
+                    _frame(self.spark, silver).select(*self.KEYS).distinct(),
+                    self.KEYS,
+                    "left_semi",
+                )
+        elif self.bucket_silver and not self.silver.exists():
             # first batch creates the bucket layout; every later MERGE
             # dispatches onto the bucket-pruned path automatically
             self.silver.create_or_overwrite(
                 _frame(self.spark, silver),
                 bucket_by=self.KEYS,
                 n_buckets=self.bucket_silver,
+                txn=txn,
             )
         else:
-            self.silver.merge_upsert(self.spark, source, self.KEYS)
-        self._fold_gold(silver)
+            prior = self.silver.merge_upsert(self.spark, source, self.KEYS, txn=txn)
+        self._fold_gold(silver, prior, txn)
 
     def start(
         self, stream: DataFrame, checkpoint_dir: str,
@@ -902,6 +905,10 @@ class StreamingMedallion:
         project = silver_projector()
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
+            txn = (checkpoint_dir, batch_id)
+            tables = (self.quarantine, self.silver, self.gold_hourly)
+            if all(t._committed(txn) for t in tables):
+                return  # a replay of a batch that fully landed
             projected, quarantine_cols, silver_cols = project(batch_df)
             bucket = self.silver.merge_bucket(self.KEYS, self.bucket_silver)
             if bucket:
@@ -921,6 +928,7 @@ class StreamingMedallion:
                     silver,
                     # the MERGE's driver path takes the collected bucket ids
                     rows.select(silver_cols + [bucket[0]]) if bucket else silver,
+                    txn,
                 )
                 return
             valid = F.col(VALID_COL)
@@ -928,7 +936,10 @@ class StreamingMedallion:
             silver = projected.filter(valid).select(*silver_cols).persist()
             try:
                 self._commit_batch(
-                    projected.filter(~valid).select(*quarantine_cols), silver, silver
+                    projected.filter(~valid).select(*quarantine_cols),
+                    silver,
+                    silver,
+                    txn,
                 )
             finally:
                 silver.unpersist()

@@ -58,8 +58,11 @@ def _exact(rows):
 
 
 def _entries(mt: ManagedTable):
+    """Manifest entries without their timestamps, each idempotency key cut
+    to its batch id: runs under different roots key by different
+    checkpoint paths."""
     return [
-        {k: v for k, v in e.items() if k != "timestamp"}
+        {k: v[1] if k == "txn" else v for k, v in e.items() if k != "timestamp"}
         for e in _read_log(mt.root)
     ]
 
@@ -226,10 +229,11 @@ _DAY1 = datetime.date(2024, 1, 1)
     ]
 )
 def test_gold_fold_equal_on_both_paths(spark, tmp_path_factory, batches):
-    """``StreamingMedallion._fold_gold`` over a few batches, given each
-    silver batch as a single-partition DataFrame on the Spark path and as
-    its Arrow table on the driver path, and as Arrow with the caps at 0:
-    the pyarrow partial and fold give the Spark gold, doubles bit for bit
+    """``StreamingMedallion._fold_gold`` over a few batches, each re-sending
+    the first half of the previous one (its prior rows, subtracted), given
+    each silver slice as a single-partition DataFrame on the Spark path and
+    as its Arrow table on the driver path, and as Arrow with the caps at 0:
+    the pyarrow partials and fold give the Spark gold, doubles bit for bit
     (the amounts include 1e16 and 0.1, whose sums depend on order), and
     the same manifest entries."""
     from databricks_etl_pipelines_spark.streaming.structured import (
@@ -245,12 +249,24 @@ def test_gold_fold_equal_on_both_paths(spark, tmp_path_factory, batches):
         with pytest.MonkeyPatch.context() as mp:
             _caps(mp, caps)
             for i, rows in enumerate(batches):
-                silver = spark.createDataFrame(
-                    rows,
-                    "event_date date, event_hour bigint, card_network "
-                    "string, mcc_category string, amount double",
-                ).coalesce(1)
-                m._fold_gold(silver.toArrow() if arrow else silver)
+                # ids unique across batches; batch i re-sends the first
+                # half of batch i - 1, whose prior rows come in reverse
+                # order, so only the fold's own order can match the paths
+                slices = [[(100 * i + j,) + r for j, r in enumerate(rows)]]
+                if i > 0:
+                    prev = batches[i - 1]
+                    prev = [(100 * (i - 1) + j,) + r for j, r in enumerate(prev)]
+                    slices.append(prev[: (len(prev) + 1) // 2][::-1])
+                frames = [
+                    spark.createDataFrame(
+                        part,
+                        "transaction_id long, event_date date, event_hour "
+                        "bigint, card_network string, mcc_category string, "
+                        "amount double",
+                    ).coalesce(1)
+                    for part in slices
+                ]
+                m._fold_gold(*(f.toArrow() if arrow else f for f in frames))
                 # an Arrow partial creates gold on the driver
                 assert _spark_wrote(m.gold_hourly) == (
                     caps is _SPARK and (i > 0 or not arrow)
@@ -491,23 +507,30 @@ def _stream_batches(spark):
     return [first, second, third]
 
 
+def _drain(spark, m, root, schema):
+    """Start ``m`` on the feed and the checkpoint under ``root`` and drain
+    it; return the Spark jobs the query ran, counted through its job group
+    (its run id), and the input rows its scans read."""
+    stream = spark.readStream.schema(schema).parquet(os.path.join(root, "feed"))
+    q = m.start(stream, os.path.join(root, "ckpt"))
+    q.awaitTermination(120)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    return len(jobs), sum(p["numInputRows"] for p in q.recentProgress)
+
+
 def _drain_each(spark, m, batches, root):
     """Feed ``batches`` to ``m`` one file and one availableNow drain at a
-    time; return the Spark jobs each drain ran, counted through the
-    query's job group (its run id), and the input rows its scans read."""
+    time; return each drain's jobs and scanned rows (see ``_drain``)."""
     src = os.path.join(root, "feed")
     os.makedirs(src)
     schema = spark.createDataFrame(batches[0].slice(0, 0)).schema
-    tracker = spark.sparkContext.statusTracker()
     jobs, scanned = [], []
     for i, batch in enumerate(batches):
         # one file, one row group: each batch is a single split
         pq.write_table(batch, os.path.join(src, f"part-{i}.parquet"))
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = m.start(stream, os.path.join(root, "ckpt"))
-        q.awaitTermination(120)
-        jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))))
-        scanned.append(sum(p["numInputRows"] for p in q.recentProgress))
+        n_jobs, n_rows = _drain(spark, m, root, schema)
+        jobs.append(n_jobs)
+        scanned.append(n_rows)
     return jobs, scanned
 
 
@@ -561,3 +584,88 @@ def test_stream_equal_on_both_paths(spark, tmp_path):
         ]
     assert jobs[1] > jobs[2] == 1
     assert out["driver"] == out["spark"] == out["mixed"]
+
+    # gold is exact: each cell holds silver's grouped count, and its
+    # volume silver's grouped sum up to the order of the additions
+    keys = StreamingMedallion.GOLD_KEYS
+    want = {
+        tuple(r[k] for k in keys): (r.n, r.volume)
+        for r in m.silver.read(spark)
+        .groupBy(*keys)
+        .agg(F.count("*").alias("n"), F.sum("amount").alias("volume"))
+        .collect()
+    }
+    got = {
+        tuple(r[k] for k in keys): (r.txn_count, r.total_volume)
+        for r in m.gold_hourly.read(spark).collect()
+    }
+    assert set(got) == set(want)
+    for cell, (n, volume) in want.items():
+        assert got[cell][0] == n > 0
+        assert abs(round(got[cell][1], 2) - round(volume, 2)) < 0.05
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_stream(spark, tmp_path_factory):
+    """The ``_state`` of silver, quarantine and gold after an uninterrupted
+    drain of ``_stream_batches``."""
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        StreamingMedallion,
+    )
+
+    root = tmp_path_factory.mktemp("uninterrupted")
+    m = StreamingMedallion(spark, str(root / "t"), bucket_silver=16)
+    _drain_each(spark, m, _stream_batches(spark), str(root))
+    return [_state(spark, t) for t in (m.silver, m.quarantine, m.gold_hourly)]
+
+
+@pytest.mark.parametrize("failing", ["quarantine", "silver", "gold_hourly"])
+def test_stream_batch_replays_exactly_once(
+    spark, tmp_path, uninterrupted_stream, failing
+):
+    """One commit of batch 2 raises once and the query fails; restarted on
+    the same checkpoint, the batch redoes only its missing commits. Then
+    the checkpoint's last ``commits/N`` file is deleted, so a restart
+    replays batch N under the same id: it writes no table version, runs no
+    Spark job and scans no row. Silver, quarantine and gold end as after an
+    uninterrupted drain: no quarantine row appended twice, no batch folded
+    twice into gold."""
+    from pyspark.errors import StreamingQueryException
+
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        StreamingMedallion,
+    )
+
+    m = StreamingMedallion(spark, str(tmp_path / "t"), bucket_silver=16)
+    tables = (m.silver, m.quarantine, m.gold_hourly)
+    commit = ManagedTable._commit
+    raised = []
+
+    def fail_once(self, *args, txn=None, **kwargs):
+        batch = txn[1] if txn else None
+        if os.path.basename(self.root) == failing and batch == 2 and not raised:
+            raised.append(txn)
+            raise RuntimeError("injected commit failure")
+        return commit(self, *args, txn=txn, **kwargs)
+
+    batches = _stream_batches(spark)
+    schema = spark.createDataFrame(batches[0].slice(0, 0)).schema
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ManagedTable, "_commit", fail_once)
+        _drain_each(spark, m, batches[:2], str(tmp_path))
+        pq.write_table(batches[2], str(tmp_path / "feed" / "part-2.parquet"))
+        with pytest.raises(StreamingQueryException, match="injected"):
+            _drain(spark, m, str(tmp_path), schema)
+        assert raised
+        _drain(spark, m, str(tmp_path), schema)
+    assert [_state(spark, t) for t in tables] == uninterrupted_stream
+
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):  # the file and its checksum
+        os.remove(commits / name)
+    logs = [_read_log(t.root) for t in tables]
+    jobs, scanned = _drain(spark, m, str(tmp_path), schema)
+    assert (commits / str(last)).exists()  # the batch ran again
+    assert (jobs, scanned) == (0, 0)
+    assert [_read_log(t.root) for t in tables] == logs

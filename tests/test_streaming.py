@@ -8,7 +8,10 @@ import time
 
 from pyspark.sql import functions as F
 
-from databricks_etl_pipelines_spark.sources.managed_table import ManagedTable
+from databricks_etl_pipelines_spark.sources.managed_table import (
+    ManagedTable,
+    _read_log,
+)
 from databricks_etl_pipelines_spark.streaming.structured import (
     bronze_stream_ingest,
     drain_to_memory,
@@ -1559,10 +1562,8 @@ def test_fold_partial_batch_exactly_once_replay(spark, tmp_path):
     fold_partial_batch(b1, 1, gold, ["k"], partial, ckpt)
     got = {r.k: r.sx for r in gold.read(spark).collect()}
     assert got == {1: 17, 2: 5}  # NOT {1: 34, 2: 10}
-    # the high-water mark is stamped atomically with the latest version
-    meta = gold.latest_meta()
-    assert meta["fold_checkpoint"] == ckpt
-    assert meta["fold_batch_id"] == 1
+    # the key is stamped atomically with the latest version
+    assert _read_log(gold.root)[-1]["txn"] == [ckpt, 1]
     # a new batch id still folds
     fold_partial_batch(b1, 2, gold, ["k"], partial, ckpt)
     assert {r.k: r.sx for r in gold.read(spark).collect()} == {1: 24, 2: 5}
@@ -1607,12 +1608,10 @@ def test_fold_partial_batch_ownership(spark, tmp_path):
 
 
 def test_fold_partial_batch_survives_nonfold_commits(spark, tmp_path):
-    """A non-fold commit between batches (OPTIMIZE compaction, an explicit
-    owner-side append) must not shadow the fold markers: the newest
-    fold-stamped manifest entry — found by BACKWARD scan — still carries
-    the high-water mark, so a replayed batch folds NOTHING and ownership
-    is still detected. The newest-entry-only read silently degraded the
-    table to an unstamped bootstrap and double-folded replays."""
+    """A keyless commit between batches (OPTIMIZE compaction, an explicit
+    owner-side append) must not hide the idempotency key: the newest keyed
+    manifest entry still carries the batch id, so a replayed batch folds
+    NOTHING and ownership is still detected."""
     import pytest
 
     from databricks_etl_pipelines_spark.streaming.structured import (
@@ -1628,9 +1627,9 @@ def test_fold_partial_batch_survives_nonfold_commits(spark, tmp_path):
     b1 = spark.createDataFrame([(1, 7)], "k int, x int")
 
     fold_partial_batch(b0, 0, gold, ["k"], partial, ckpt)
-    # maintenance commit: newest manifest entry has NO fold markers
+    # maintenance commit: newest manifest entry has no key
     gold.optimize(spark, target_partitions=1)
-    assert "fold_checkpoint" not in gold.latest_meta()
+    assert "txn" not in _read_log(gold.root)[-1]
     # replay of batch 0 must STILL be a no-op
     fold_partial_batch(b0, 0, gold, ["k"], partial, ckpt)
     assert {r.k: r.sx for r in gold.read(spark).collect()} == {1: 10, 2: 5}
@@ -1928,14 +1927,15 @@ def test_drift_suite_matches_standalone_detectors(spark, sf_dir):
         assert s.psi_total == psi[g] / 1e6, g
 
 
-def test_fold_marker_cleared_by_owner_overwrite(spark, tmp_path):
-    """An owner-side create_or_overwrite is a deliberate STATE RESET:
-    it must tombstone the fold markers so a stream restarted after the
-    reset (fresh checkpoint semantics, batch ids back at 0) folds its
-    batches instead of having them dropped as 'replays' of the
-    resurrected pre-reset high-water mark — the r13 backward scan alone
-    kept the old marker alive forever. Maintenance commits (optimize/
-    append) must still NOT clear markers (the r13 guarantee)."""
+def test_keyless_overwrite_resets_the_key(spark, tmp_path):
+    """A create_or_overwrite without ``txn`` is a deliberate STATE RESET:
+    it ends the key's history, so a stream restarted after the reset
+    (fresh checkpoint semantics, batch ids back at 0) folds its batches
+    instead of having them dropped as replays of the pre-reset batch ids.
+    Keyless maintenance commits (optimize/append) do NOT reset it (see
+    test_fold_partial_batch_survives_nonfold_commits)."""
+    import warnings as _w
+
     from databricks_etl_pipelines_spark.streaming.structured import (
         fold_partial_batch,
     )
@@ -1950,14 +1950,15 @@ def test_fold_marker_cleared_by_owner_overwrite(spark, tmp_path):
 
     fold_partial_batch(b0, 0, gold, ["k"], partial, ckpt)
     fold_partial_batch(b1, 1, gold, ["k"], partial, ckpt)
-    assert gold.latest_meta(having="fold_checkpoint")["fold_batch_id"] == 1
+    assert gold._last_txn(ckpt)["txn"] == [ckpt, 1]
 
-    # owner resets the gold wholesale -> tombstone clears the markers
-    gold.create_or_overwrite(
-        spark.createDataFrame([(9, 100)], "k int, sx bigint")
-    )
-    marker = gold.latest_meta(having="fold_checkpoint")
-    assert marker is not None and marker["fold_checkpoint"] is None
+    # owner resets the gold wholesale: the key is gone
+    with _w.catch_warnings():
+        _w.simplefilter("ignore", RuntimeWarning)
+        gold.create_or_overwrite(
+            spark.createDataFrame([(9, 100)], "k int, sx bigint")
+        )
+    assert gold._last_txn() is None
 
     # restarted stream (same checkpoint path, ids back at 0): batch 0
     # must FOLD onto the reset rows, not be dropped as a replay
@@ -1965,7 +1966,7 @@ def test_fold_marker_cleared_by_owner_overwrite(spark, tmp_path):
     assert {r.k: r.sx for r in gold.read(spark).collect()} == {
         1: 10, 2: 5, 9: 100,
     }
-    # and the new high-water mark is re-established: a replay is a no-op
+    # and the key is re-established: a replay is a no-op
     fold_partial_batch(b0, 0, gold, ["k"], partial, ckpt)
     assert {r.k: r.sx for r in gold.read(spark).collect()} == {
         1: 10, 2: 5, 9: 100,
@@ -1976,15 +1977,11 @@ def test_fold_marker_cleared_by_owner_overwrite(spark, tmp_path):
     }
 
 
-def test_overwrite_fold_marker_warning_and_preserve(spark, tmp_path):
-    """The r14 tombstone regressed rebuild-under-live-stream callers
-    SILENTLY (ADVICE r14 medium): tombstoning a table whose latest
-    marker names a checkpoint now (a) emits a RuntimeWarning naming the
-    escape hatches, and (b) reset_fold_markers=False preserves the
-    marker — the overwrite behaves as a maintenance commit w.r.t. fold
-    state, so a crash-redelivered batch already baked into the rebuild
-    stays dropped as a replay. An explicit marker in meta, or a reset
-    of an unmarked table, stays warning-free."""
+def test_keyless_overwrite_warns_over_keyed_commits(spark, tmp_path):
+    """A keyless overwrite that resets a table with keyed commits changes
+    what a stream still writing on that checkpoint does with a replayed
+    batch, so it emits one RuntimeWarning; a reset of a table with no
+    keyed commit, and a keyed overwrite, stay silent."""
     import warnings as _w
 
     from databricks_etl_pipelines_spark.streaming.structured import (
@@ -1999,45 +1996,46 @@ def test_overwrite_fold_marker_warning_and_preserve(spark, tmp_path):
     b0 = spark.createDataFrame([(1, 10), (2, 5)], "k int, x int")
     b1 = spark.createDataFrame([(1, 7)], "k int, x int")
     fold_partial_batch(b0, 0, gold, ["k"], partial, ckpt)
-    fold_partial_batch(b1, 1, gold, ["k"], partial, ckpt)
 
-    # (b) rebuild preserving replay protection: no tombstone, marker
-    # survives the overwrite, replayed batch 1 is still a no-op
-    rebuilt = spark.createDataFrame([(1, 17), (2, 5)], "k int, sx bigint")
-    with _w.catch_warnings():
-        _w.simplefilter("error")  # preserve path must NOT warn
-        gold.create_or_overwrite(rebuilt, reset_fold_markers=False)
-    marker = gold.latest_meta(having="fold_checkpoint")
-    assert marker is not None and marker["fold_checkpoint"] is not None
-    assert marker["fold_batch_id"] == 1
-    fold_partial_batch(b1, 1, gold, ["k"], partial, ckpt)  # redelivery
-    assert {r.k: r.sx for r in gold.read(spark).collect()} == {1: 17, 2: 5}
-
-    # (a) default tombstone over the (still live) marker warns
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
         gold.create_or_overwrite(
             spark.createDataFrame([(9, 100)], "k int, sx bigint")
         )
     msgs = [w for w in caught if issubclass(w.category, RuntimeWarning)]
-    assert len(msgs) == 1 and "reset_fold_markers" in str(msgs[0].message)
-    assert gold.latest_meta(having="fold_checkpoint")["fold_checkpoint"] is None
+    assert len(msgs) == 1 and "without txn" in str(msgs[0].message)
 
-    # explicit marker re-stamp suppresses tombstone AND warning
+    # the keyed commits are behind the reset: a second reset is silent
     with _w.catch_warnings():
         _w.simplefilter("error")
         gold.create_or_overwrite(
-            rebuilt, meta={"fold_checkpoint": ckpt, "fold_batch_id": 1}
+            spark.createDataFrame([(9, 100)], "k int, sx bigint")
         )
-    assert gold.latest_meta(having="fold_checkpoint")["fold_batch_id"] == 1
-
-    # reset of a table with no live marker stays silent
-    fresh = ManagedTable(str(tmp_path / "fresh"))
-    with _w.catch_warnings():
-        _w.simplefilter("error")
+        fresh = ManagedTable(str(tmp_path / "fresh"))
         fresh.create_or_overwrite(b0)
         fresh.create_or_overwrite(b1)
-    assert fresh.latest_meta(having="fold_checkpoint")["fold_checkpoint"] is None
+        fresh.create_or_overwrite(b1, txn=(ckpt, 0))
+    assert fresh._last_txn()["txn"] == [ckpt, 0]
+
+
+def test_keyed_writes_land_once(spark, tmp_path):
+    """``append``, ``merge_upsert`` and ``create_or_overwrite`` keyed by
+    ``txn=(app_id, batch_id)`` write nothing when the manifest already
+    records that batch id, or a later one, for the app; another app's
+    key does not hide it."""
+    mt = ManagedTable(str(tmp_path / "t"))
+    rows = spark.createDataFrame([(1, 10), (2, 5)], "k int, x int")
+    mt.create_or_overwrite(rows, txn=("a", 1))
+    mt.append(rows, txn=("a", 2))
+    mt.merge_upsert(spark, rows, ["k"], txn=("b", 0))
+    latest = mt.latest_version()
+    assert mt.create_or_overwrite(rows, txn=("a", 0)) == latest
+    assert mt.append(rows, txn=("a", 2)) == latest
+    assert mt.merge_upsert(spark, rows, ["k"], txn=("b", 0)) is None
+    assert mt.latest_version() == latest
+    mt.append(rows, txn=("b", 1))
+    assert _read_log(mt.root)[-1]["txn"] == ["b", 1]
+    assert mt.read(spark).count() == 4
 
 
 def test_incremental_aggregate_validates_fold_names_eagerly(spark, tmp_path):
