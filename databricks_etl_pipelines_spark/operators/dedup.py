@@ -589,7 +589,12 @@ class MinHashCorpusIndex:
         an indexed corpus doc. Only the new batch is shingled/signed."""
         meta, fam, new_sh = self._shingle(new_docs, text_col, id_col)
         new_buckets = fam.band_table(new_sh, meta["num_perm"], meta["bands"])
-        corpus_buckets = spark.read.parquet(os.path.join(self.root, self.BANDS))
+        bands_dir = os.path.join(self.root, self.BANDS)
+        reader = spark.read
+        if not any(d.startswith("band_id=") for d in os.listdir(bands_dir)):
+            # built from zero docs: no band file to infer the schema from
+            reader = reader.schema(new_buckets.schema)
+        corpus_buckets = reader.parquet(bands_dir)
         cands = _band_pairs(corpus_buckets, max_bucket, probe=new_buckets)
         corpus_sh = spark.read.parquet(os.path.join(self.root, self.SHINGLES))
         return _verify_jaccard(_spread(cands), new_sh, corpus_sh, threshold).select(

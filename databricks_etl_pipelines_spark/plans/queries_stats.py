@@ -934,8 +934,9 @@ def streaming_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user one-sided CUSUM maintained over a STREAM
     (streaming/structured.py::cusum_stream on the shared
     snapshot_fold_stream skeleton — the RUNNING-VALUE replay recipe:
-    per-batch keyed state snapshots to OVERWRITE ``b=<n>`` partitions,
-    run-ownership marker, chronological-contract enforcement): the
+    one state table version per batch keyed by (checkpoint, batch id),
+    run ownership read from the key, chronological-contract
+    enforcement): the
     3-batch chronological events feed drains through a foreachBatch
     that seeds each user from the previous snapshot and folds the
     batch's (ts, event_id)-ordered cents on top. The drained state

@@ -1088,11 +1088,11 @@ def streaming_ema_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EMA (alphas 1/2, 1/4) maintained over a STREAM
     (streaming/structured.py::ema_stream): the chronological 3-batch
     events feed drains through a foreachBatch that seeds each key from
-    the previous state snapshot and folds the batch's (ts, event_id)-
-    ordered values on top, writing full per-batch state snapshots to
-    replay-idempotent ``b=<n>`` OVERWRITE partitions (a running value
-    can't use additive partials — a re-delivered batch recomputes from
-    the prior snapshot instead of double-folding). The drained state
+    the latest state version and folds the batch's (ts, event_id)-
+    ordered values on top, writing the full state as the next version of
+    one state table, keyed by (checkpoint, batch id) (a running value
+    can't use additive partials — a replayed batch whose state landed is
+    skipped instead of double-folding). The drained state
     must equal ``window_ema_smoothing``'s one-shot fold bit-for-bit —
     the oracle is that query's SQL verbatim. State is one row per key
     per snapshot; per-batch work is the batch plus a keyed join onto

@@ -36,7 +36,9 @@ take runs on the Spark path as a local relation. At this size a Spark commit's
 cost is fixed per job, not data. Both paths end in ``_commit``, which
 writes files Spark reads with the same schema (microsecond timestamps, no
 Arrow schema blob) and stamps the version's schema into the manifest, so
-the next commit needs no Spark job to learn it.
+the next commit needs no Spark job to learn it. A driver-path append of
+no row rewrites nothing: its version hardlinks the previous one's files
+(on a bucketed table, as every bucket it does not touch).
 Above the caps, or for a layout or a type the driver path does not cover,
 the Spark path runs.
 
@@ -497,7 +499,7 @@ class ManagedTable:
 
     def _commit(
         self,
-        data: DataFrame | pa.Table,
+        data: DataFrame | pa.Table | None,
         operation: str,
         partition_by: Sequence[str] | None = None,
         meta: dict | None = None,
@@ -521,7 +523,9 @@ class ManagedTable:
         it a pruned commit: ``data`` holds only those buckets, and every
         other bucket of the previous version is carried over by hardlink —
         no data IO, and a pytest can assert byte-identity across
-        versions.
+        versions. ``data=None`` carries the whole previous version of an
+        unbucketed table over by hardlink, with its schema: the commit of
+        an append that adds no row, which still records ``txn``.
 
         The entry stamps the written schema (see ``_schema_json``) and
         ``txn``, which the public writers check before they call here."""
@@ -536,7 +540,10 @@ class ManagedTable:
         # a failed attempt may have left files at N, which the Spark
         # writer's overwrite mode would clear too
         shutil.rmtree(path, ignore_errors=True)
-        if isinstance(data, pa.Table):
+        if data is None:
+            _link_tree(self._version_dir(log[-1]["version"]), path)
+            schema = StructType.fromJson(json.loads(log[-1]["schema"]))
+        elif isinstance(data, pa.Table):
             schema = from_arrow_schema(data.schema)
             _write_arrow(data, path)
         else:
@@ -600,7 +607,8 @@ class ManagedTable:
         """The driver path's twin of :meth:`_touched_buckets`: ``source``
         as Arrow in the table's column order (with its bucket column when
         ``spec`` is set), the sorted bucket ids it touches, and the latest
-        version's rows in those buckets (every row when unbucketed), cast
+        version's rows in those buckets (every row when unbucketed, none
+        when ``source`` has no row), cast
         to the source's Arrow schema. A DataFrame source is collected in
         one Spark job, the only one; an Arrow source runs none. None when
         the Spark path must run: no stored schema, a type outside
@@ -635,7 +643,8 @@ class ManagedTable:
             )
             if files is None:
                 return None
-        return src, touched, _read_arrow(files, src.schema)
+        # a source of no rows touches no prior row
+        return src, touched, _read_arrow(files if src.num_rows else [], src.schema)
 
     @staticmethod
     def _collect_local(
@@ -752,6 +761,8 @@ class ManagedTable:
             local = self._touched_local(df, spec, "append")
             if local is not None:
                 incoming, touched, prior = local
+                if not spec and not incoming.num_rows:
+                    return self._commit(None, "append", txn=txn)
                 rows = pa.concat_tables([prior, incoming])
                 return self._commit(
                     rows, "append", spec=spec, touched=touched, txn=txn

@@ -1,10 +1,18 @@
 """Structured Streaming operators (SURVEY §2.9 T1-T6 + parity-plus M7).
 
 Reference parity: availableNow trigger (01:187), checkpointed exactly-once
-(01:185), append sinks (01:184), foreachBatch with MERGE (02:97-184),
-empty-batch guard (02:106). Parity-plus (absent in the reference, demanded
-by the category): watermarks, tumbling/sliding/session event-time windows,
-and streaming dropDuplicates — all Spark built-ins.
+(01:185), append sinks (01:184), foreachBatch with MERGE (02:97-184).
+Parity-plus (absent in the reference, demanded by the category):
+watermarks, tumbling/sliding/session event-time windows, and streaming
+dropDuplicates — all Spark built-ins.
+
+Every foreachBatch operator here starts through :func:`_each_batch`, which
+keys each batch's ``ManagedTable`` writes by ``(stream id, batch_id)`` (the
+stream id is the checkpoint path with the query id Spark keeps in it) and
+skips a replayed batch whose writes all landed. No operator runs a job
+to test a batch for emptiness: each one ends a zero-row batch as if it had
+not come. The reference's empty-batch guard (T6, 02:106) is
+``StreamingMedallion``'s test of the row count of its one collect.
 
 At scale: streaming state (windows, dedup keys) lives in the state store
 keyed by the aggregation keys; watermarks bound that state. Without a
@@ -14,10 +22,12 @@ pair dropDuplicates with withWatermark on production streams.
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 import uuid
-from collections.abc import Callable
+import warnings
+from collections.abc import Callable, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -149,6 +159,77 @@ def with_trigger(writer, processing_time: str | None):
     return writer.trigger(processingTime=processing_time)
 
 
+def _each_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    body: Callable[[DataFrame, tuple[str, int]], None],
+    processing_time: str | None = None,
+    tables: Sequence[ManagedTable] = (),
+) -> StreamingQuery:
+    """Start ``stream`` with ``body`` run on each micro-batch: the one
+    foreachBatch of this module. ``body(batch_df, txn)`` gets the batch's
+    idempotency key ``txn = (_stream_id(checkpoint_dir), batch_id)`` and
+    passes it to every ``ManagedTable`` write it makes. A replayed batch
+    whose key every table in ``tables`` already holds returns before any
+    Spark job runs (Delta's ``txnAppId``/``txnVersion`` idempotent
+    foreachBatch writes). Zero-row batches reach ``body`` too."""
+    app_id = None
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal app_id
+        if app_id is None:  # Spark writes the id before the first batch
+            app_id = _stream_id(checkpoint_dir)
+        txn = (app_id, batch_id)
+        if tables and all(t._committed(txn) for t in tables):
+            return
+        body(batch_df, txn)
+
+    writer = stream.writeStream.foreachBatch(each).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    return with_trigger(writer, processing_time).start()
+
+
+def _stream_id(checkpoint_dir: str) -> str:
+    """The app id a stream keys its writes by: the checkpoint path and the
+    query id Spark keeps in its ``metadata`` file. The id survives a
+    restart and is new for a checkpoint recreated at the same path, whose
+    batch ids start again at 0: that run is a new stream, not a replay."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return f"{checkpoint_dir}@{json.loads(f.readline())['id']}"
+
+
+def _claim(table: ManagedTable, txn: tuple[str, int], op_name: str) -> str:
+    """The run-ownership rule of a table a stream folds its state into,
+    read from its newest keyed commit in one manifest lookup. Returns what
+    batch ``txn`` must do: "replay" when its app already recorded that
+    batch id (write nothing), "takeover" when batch 0 finds another app's
+    commit (warn, and seed from the batch alone), else "fold". A batch > 0
+    that finds another app's commit raises ``ValueError``. A table with no
+    keyed commit (new, batch-built, or reset by a keyless overwrite)
+    belongs to whoever folds into it."""
+    app_id, batch_id = txn
+    last = table._last_txn()
+    if last is None:
+        return "fold"
+    owner, last_batch = last["txn"]
+    if owner == app_id:
+        return "replay" if batch_id <= last_batch else "fold"
+    if batch_id == 0:
+        warnings.warn(
+            f"{op_name}: batch 0 of checkpoint {app_id!r} is taking over "
+            f"table {table.root!r} previously maintained by checkpoint "
+            f"{owner!r}; its state is being overwritten",
+            stacklevel=3,
+        )
+        return "takeover"
+    raise ValueError(
+        f"{op_name}: table {table.root!r} is maintained by checkpoint "
+        f"{owner!r}, not {app_id!r} — refusing to fold onto another "
+        "query's state; point this query at its own table or clear it"
+    )
+
+
 def _as_stream_dir(parquet_file: str) -> str:
     """Spark file streams require a directory; expose a single parquet file
     through a scratch dir containing a symlink to it."""
@@ -192,6 +273,41 @@ def streaming_documents(
     return reader.parquet(_as_stream_dir(f"{sf_dir}/documents.parquet"))
 
 
+def _exact_admit(
+    batch_df: DataFrame,
+    accepted: ManagedTable,
+    min_quality: int,
+    text_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The exact stages of both curation ingests: the quality gate, then
+    one row per md5(normalized text), the smallest id, then an anti-join
+    against the hashes already accepted (first batch wins across
+    batches)."""
+    from pyspark.sql import Window
+
+    from databricks_etl_pipelines_spark.functions.textfns import (
+        normalized_text,
+    )
+    from databricks_etl_pipelines_spark.operators.curation import (
+        quality_score,
+    )
+
+    hashed = batch_df.filter(
+        quality_score(text_col).cast("bigint") >= min_quality
+    ).withColumn("text_hash", F.md5(normalized_text(text_col)))
+    w = Window.partitionBy("text_hash").orderBy(id_col)
+    first = (
+        hashed.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+    if accepted.exists():
+        seen = accepted.read(batch_df.sparkSession).select("text_hash")
+        first = first.join(seen, "text_hash", "left_anti")
+    return first
+
+
 def curation_ingest(
     stream: DataFrame,
     accepted: "ManagedTable",
@@ -210,9 +326,9 @@ def curation_ingest(
     Per micro-batch: quality gate -> within-batch exact dedup (min id per
     md5(normalized text), deterministic) -> anti-join against the accepted
     table's hashes (first BATCH wins across batches; ties inside a batch go
-    to the smaller id) -> append survivors. Checkpoint + content-hash
-    anti-join make replays idempotent: a re-delivered batch's hashes
-    already exist, so it appends nothing.
+    to the smaller id) -> append survivors, keyed by the batch. A replayed
+    batch whose append landed is skipped; the anti-join keeps a fresh
+    checkpoint's re-delivered hashes out.
 
     At 100 TB the accepted table should be laid out bucketed by
     ``text_hash`` so the per-batch anti-join co-locates instead of
@@ -220,40 +336,14 @@ def curation_ingest(
     that layout is operators/dedup.py's incremental corpus index — this
     operator is the orchestration around it.
     """
-    from pyspark.sql import Window
 
-    from databricks_etl_pipelines_spark.functions.textfns import (
-        normalized_text,
-    )
-    from databricks_etl_pipelines_spark.operators.curation import (
-        quality_score,
-    )
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
+        first = _exact_admit(batch_df, accepted, min_quality, text_col, id_col)
+        accepted.append(first, txn=txn)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        hashed = batch_df.filter(
-            quality_score(text_col).cast("bigint") >= min_quality
-        ).withColumn("text_hash", F.md5(normalized_text(text_col)))
-        w = Window.partitionBy("text_hash").orderBy(id_col)
-        first = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if accepted.exists():
-            seen = accepted.read(spark).select("text_hash")
-            first = first.join(seen, "text_hash", "left_anti")
-        if not first.isEmpty():
-            accepted.append(first)
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(accepted,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 def curation_ingest_neardup(
@@ -282,7 +372,9 @@ def curation_ingest_neardup(
     pruned to the batch's band buckets; (3) survivors append to the
     accepted table AND ``add`` to the index, so the next batch screens
     against them. The index is the steady-state cost model a 100 TB corpus
-    needs: per-batch work tracks batch size, never corpus size.
+    needs: per-batch work tracks batch size, never corpus size. Only the
+    append is keyed: a batch that failed between the append and the index
+    write is skipped on replay, and the index misses its documents.
 
     ``family`` selects the MinHash hash family for BOTH screens:
     "xxhash64" (production default — JVM long hashing) or "crossengine"
@@ -294,14 +386,6 @@ def curation_ingest_neardup(
     in-batch banded LSH → persisted-index screen) value-for-value. Any
     other name raises ``ValueError`` before the stream starts.
     """
-    from pyspark.sql import Window
-
-    from databricks_etl_pipelines_spark.functions.textfns import (
-        normalized_text,
-    )
-    from databricks_etl_pipelines_spark.operators.curation import (
-        quality_score,
-    )
     from databricks_etl_pipelines_spark.operators.dedup import (
         MinHashCorpusIndex,
         _family,
@@ -310,22 +394,9 @@ def curation_ingest_neardup(
 
     _family(family)  # a misspelt family fails here, not on the first batch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         spark = batch_df.sparkSession
-        hashed = batch_df.filter(
-            quality_score(text_col).cast("bigint") >= min_quality
-        ).withColumn("text_hash", F.md5(normalized_text(text_col)))
-        w = Window.partitionBy("text_hash").orderBy(id_col)
-        first = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if accepted.exists():
-            seen = accepted.read(spark).select("text_hash")
-            first = first.join(seen, "text_hash", "left_anti")
+        first = _exact_admit(batch_df, accepted, min_quality, text_col, id_col)
         # in-batch near-dups: drop the greater id of each verified pair
         pairs = _minhash_pairs(
             first, text_col, id_col, family, threshold, num_perm, bands
@@ -340,26 +411,22 @@ def curation_ingest_neardup(
             )
             dupes = matches.select(F.col("new_id").alias(id_col)).distinct()
             first = first.join(dupes, id_col, "left_anti")
-        first = first.persist()  # consumed by emptiness probe + append + add
+        first = first.persist()  # consumed by the append and the index write
         try:
-            if not first.isEmpty():
-                accepted.append(first)
-                if MinHashCorpusIndex.exists(index_root):
-                    index.add(spark, first, text_col, id_col)
-                else:
-                    MinHashCorpusIndex.build(
-                        first, text_col, id_col, index_root,
-                        num_perm=num_perm, bands=bands, family=family,
-                    )
+            accepted.append(first, txn=txn)
+            if MinHashCorpusIndex.exists(index_root):
+                index.add(spark, first, text_col, id_col)
+            else:
+                MinHashCorpusIndex.build(
+                    first, text_col, id_col, index_root,
+                    num_perm=num_perm, bands=bands, family=family,
+                )
         finally:
             first.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(accepted,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 def reservoir_sample_stream(
@@ -388,9 +455,10 @@ def reservoir_sample_stream(
     Per micro-batch: batch-local ``orderBy(key, id).limit(k)`` — a
     TakeOrderedAndProject, never a global sort — unioned with the ≤k-row
     persisted sample, re-capped to k, and committed as the new sample
-    version. Per-batch cost tracks batch size + k; state is EXACTLY k
-    rows regardless of stream length, and checkpoint replays are no-ops
-    (re-delivered rows fold to the identical bottom-k). ``id_col`` must
+    version, keyed by the batch. Per-batch cost tracks batch size + k;
+    state is EXACTLY k rows regardless of stream length; a replayed batch
+    whose commit landed is skipped, and re-delivered rows fold to the
+    identical bottom-k anyway. ``id_col`` must
     be the stream's unique key; when a re-delivery carries a MUTATED
     payload for an id already in the sample, the FIRST-delivered payload
     wins deterministically — the batch's candidates are anti-joined
@@ -414,9 +482,7 @@ def reservoir_sample_stream(
 
     key = reservoir_key(id_col, seed)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         spark = batch_df.sparkSession
         cand = (
             batch_df.withColumn("sample_key", key)
@@ -435,17 +501,14 @@ def reservoir_sample_stream(
                 )
             )
         sample.create_or_overwrite(
-            cand.orderBy("sample_key", id_col).limit(k)
+            cand.orderBy("sample_key", id_col).limit(k), txn=txn
         )
         if keep_versions > 0:
             sample.vacuum(keep_last=keep_versions)
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(sample,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 # State-store partition count for LATTICE-BOUNDED streaming aggregations
@@ -550,23 +613,20 @@ def foreach_batch_merge(
     transform: Callable[[DataFrame], DataFrame] | None = None,
     processing_time: str | None = None,
 ) -> StreamingQuery:
-    """T3: per-micro-batch MERGE upsert (02:97-184 shape): empty-batch guard,
-    optional transform, keyed idempotent merge. Checkpoint + keyed MERGE
-    makes batch replays safe. ``processing_time`` switches from the
+    """T3: per-micro-batch MERGE upsert (02:97-184 shape): optional
+    transform, then a MERGE on ``keys`` keyed by the batch, so a replayed
+    batch whose MERGE landed is skipped. ``processing_time`` switches from the
     availableNow drain to the production interval trigger (01:179,196) —
     the keyed MERGE is idempotent either way, so the two modes converge
     to the same table state for the same input."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         out = transform(batch_df) if transform else batch_df
-        target.merge_upsert(batch_df.sparkSession, out, keys)
+        target.merge_upsert(batch_df.sparkSession, out, keys, txn=txn)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(target,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 _FOLD_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -575,7 +635,7 @@ _FOLD_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
 def _validate_fold_names(combine: dict[str, str] | None) -> None:
     """Reject unknown fold names. Called EAGERLY by
     :func:`incremental_aggregate` before the stream starts (a typo'd
-    fold on a stream whose first batches are empty or replayed would
+    fold on a stream whose first batches are replayed would
     otherwise surface only mid-run) and again per batch by
     :func:`fold_partial_batch` (whose column-coverage check needs the
     partial's schema, only known per batch)."""
@@ -601,43 +661,17 @@ def fold_partial_batch(
     """One micro-batch's exactly-once commutative-monoid fold into the
     gold table (the per-batch body of :func:`incremental_aggregate`).
 
-    Each fold overwrites the gold keyed by ``(checkpoint_dir, batch_id)``,
-    so a re-delivered batch folds nothing. Ownership comes from the key:
-    when the newest keyed commit names another checkpoint, batch 0 takes
-    the table over with a warning and a later batch raises. A table with
-    no keyed commit (batch-built, or reset by a keyless overwrite) is
-    folded into."""
-    import warnings
-
-    last = target._last_txn()
-    takeover = False
-    if last is not None:
-        owner, last_id = last["txn"]
-        if owner == checkpoint_dir:
-            if batch_id <= last_id:
-                return  # checkpoint replay of an already-folded batch
-        elif batch_id == 0:
-            warnings.warn(
-                f"incremental_aggregate: batch 0 of checkpoint "
-                f"{checkpoint_dir!r} is taking over gold table "
-                f"{target.root!r} previously maintained by checkpoint "
-                f"{owner!r}; its aggregate is being overwritten",
-                stacklevel=2,
-            )
-            takeover = True  # discard the foreign aggregate, seed fresh
-        else:
-            raise ValueError(
-                f"incremental_aggregate: gold table {target.root!r} is "
-                f"maintained by checkpoint {owner!r}, not "
-                f"{checkpoint_dir!r} — refusing to fold onto another "
-                "query's aggregate; point this query at its own target "
-                "or clear it"
-            )
-    if batch_df.isEmpty() and not takeover:
-        # nothing to fold and no foreign state to invalidate; an EMPTY
-        # batch-0 takeover must still fall through and overwrite (the
-        # empty partial below) so batch 1 never folds onto foreign rows
-        return
+    Each fold overwrites the gold keyed by ``(checkpoint_dir, batch_id)``
+    (:func:`incremental_aggregate` passes its stream id as
+    ``checkpoint_dir``), so a re-delivered batch folds nothing, and
+    ownership is :func:`_claim`'s rule: batch 0 of another checkpoint
+    takes the table over and seeds it from its own partial, a later one
+    raises. A zero-row batch folds an empty partial, which leaves every
+    row as it was."""
+    txn = (checkpoint_dir, batch_id)
+    claim = _claim(target, txn, "incremental_aggregate")
+    if claim == "replay":
+        return  # checkpoint replay of an already-folded batch
     spark = batch_df.sparkSession
     partial = partial_agg(batch_df)
     metric_cols = [c for c in partial.columns if c not in keys]
@@ -656,7 +690,7 @@ def fold_partial_batch(
                 f"{missing!r}, not-in-partial={stray!r} "
                 f"(metric columns: {metric_cols!r})"
             )
-    if target.exists() and not takeover:
+    if target.exists() and claim == "fold":
         current = target.read(spark)
         fns = {c: _FOLD_FNS[(combine or {}).get(c, "sum")] for c in metric_cols}
         combined = (
@@ -666,7 +700,7 @@ def fold_partial_batch(
         )
     else:
         combined = partial
-    target.create_or_overwrite(combined, txn=(checkpoint_dir, batch_id))
+    target.create_or_overwrite(combined, txn=txn)
 
 
 def incremental_aggregate(
@@ -685,7 +719,7 @@ def incremental_aggregate(
     rows and re-aggregate on the group keys. Gold is correct after every
     batch without ever rescanning history, and the fold is EXACTLY-ONCE
     under checkpoint replay (see :func:`fold_partial_batch`: each gold
-    version is keyed by ``(checkpoint_dir, batch_id)``, so re-delivered
+    version is keyed by ``(stream id, batch_id)``, so re-delivered
     batches are no-ops).
 
     ``partial_agg`` must produce ``keys`` + decomposable metric columns.
@@ -703,23 +737,14 @@ def incremental_aggregate(
     """
     _validate_fold_names(combine)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         fold_partial_batch(
-            batch_df,
-            batch_id,
-            target,
-            keys,
-            partial_agg,
-            checkpoint_dir,
-            combine,
+            batch_df, txn[1], target, keys, partial_agg, txn[0], combine
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(target,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 def _frame(spark: SparkSession, rows: pa.Table | DataFrame) -> DataFrame:
@@ -756,9 +781,9 @@ class StreamingMedallion:
     batches discards one capped collect, at its first large batch.
 
     Each batch is exactly-once: its quarantine append, silver MERGE (or
-    first create) and gold fold are keyed by ``(checkpoint_dir,
-    batch_id)``. A replay whose three tables hold the key returns before
-    its collect; one that failed part-way redoes only its missing commits.
+    first create) and gold fold are keyed by ``(stream id, batch_id)``. A
+    replay whose three tables hold the key returns before its collect;
+    one that failed part-way redoes only its missing commits.
     Gold is exact: the fold adds the batch's silver rows and subtracts the
     rows its MERGE replaced, so a re-sent id counts once, and a cell whose
     count reaches 0 is dropped.
@@ -904,11 +929,7 @@ class StreamingMedallion:
 
         project = silver_projector()
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            txn = (checkpoint_dir, batch_id)
-            tables = (self.quarantine, self.silver, self.gold_hourly)
-            if all(t._committed(txn) for t in tables):
-                return  # a replay of a batch that fully landed
+        def process(batch_df: DataFrame, txn: tuple[str, int]) -> None:
             projected, quarantine_cols, silver_cols = project(batch_df)
             bucket = self.silver.merge_bucket(self.KEYS, self.bucket_silver)
             if bucket:
@@ -917,7 +938,7 @@ class StreamingMedallion:
             local = None if self._last_over_cap else capped.toArrow()
             n_rows = capped.count() if local is None else local.num_rows
             if n_rows == 0:
-                return
+                return  # the reference's empty-batch guard (T6, 02:106)
             self._last_over_cap = n_rows > managed_table.CAP_ROWS
             if local is not None and not self._last_over_cap:
                 valid = local[VALID_COL]
@@ -944,12 +965,8 @@ class StreamingMedallion:
             finally:
                 silver.unpersist()
 
-        writer = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-        )
-        return with_trigger(writer, processing_time).start()
+        tables = (self.quarantine, self.silver, self.gold_hourly)
+        return _each_batch(stream, checkpoint_dir, process, processing_time, tables)
 
 
 def tumbling_window_counts(
@@ -1170,18 +1187,11 @@ def dsir_score_stream(
     output instead of appending duplicates."""
     from databricks_etl_pipelines_spark.operators.curation import dsir_score
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         scored = dsir_score(batch_df, ratios, text_col, id_col, n_buckets)
-        scored.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        scored.write.mode("overwrite").parquet(f"{out_dir}/batch_id={txn[1]}")
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return with_trigger(writer, processing_time).start()
+    return _each_batch(stream, checkpoint_dir, body, processing_time)
 
 
 def perplexity_gate_stream(
@@ -1214,21 +1224,14 @@ def perplexity_gate_stream(
         perplexity_score,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         per_doc = perplexity_score(
             batch_df, word_scores, text_col, id_col, group_col
         )
         labeled = perplexity_label(per_doc, cutoffs, id_col, group_col)
-        labeled.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        labeled.write.mode("overwrite").parquet(f"{out_dir}/batch_id={txn[1]}")
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return with_trigger(writer, processing_time).start()
+    return _each_batch(stream, checkpoint_dir, body, processing_time)
 
 
 def decontaminate_stream(
@@ -1262,20 +1265,13 @@ def decontaminate_stream(
         decontaminate_score,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         report = decontaminate_score(
             batch_df, bench_ngrams, text_col, id_col, ngram_n, min_hits
         )
-        report.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        report.write.mode("overwrite").parquet(f"{out_dir}/batch_id={txn[1]}")
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return with_trigger(writer, processing_time).start()
+    return _each_batch(stream, checkpoint_dir, body, processing_time)
 
 
 def countmin_stream(
@@ -1301,37 +1297,28 @@ def countmin_stream(
     and the merge happens at READ time, not in a mutable accumulator.
     State per batch is ≤ d·w cells; the drained sketch is ≤ d·w rows
     whatever the stream length."""
-    from pyspark.sql import functions as F
-
     from databricks_etl_pipelines_spark.functions.textfns import tokens
     from databricks_etl_pipelines_spark.plans.queries_aggregates import (
         countmin_cells,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         wc = (
             batch_df.select(F.explode(tokens(text_col)).alias("word"))
             .groupBy("word")
             .agg(F.count("*").alias("n"))
         )
         countmin_cells(wc).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
+            f"{out_dir}/batch_id={txn[1]}"
         )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return with_trigger(writer, processing_time).start()
+    return _each_batch(stream, checkpoint_dir, body, processing_time)
 
 
 def countmin_merge(spark: SparkSession, out_dir: str) -> DataFrame:
     """Merge the per-batch partial cells written by
     :func:`countmin_stream` into the final (r, b, c) counters — one sum
     per cell over ≤ n_batches·d·w partial rows."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(out_dir)
         .groupBy("r", "b")
@@ -1359,8 +1346,10 @@ def bloom_dedup_stream(
     store (which grows with the true distinct count — unbounded on an
     unbounded stream). Per micro-batch: batch-local exact dedup (min id
     per key), probe the persisted bit set, write per-rep admission
-    decisions to a replay-idempotent ``batch_id=<n>`` partition, then
-    fold the batch's bit positions into the state.
+    decisions to a replay-idempotent ``b=<n>`` partition, then fold the
+    batch's bit positions into the state, keyed by the batch: a replayed
+    batch whose state landed is skipped, and one that failed between the
+    two writes rewrites identical decisions.
 
     Replay safety is different from Count-Min's and worth the contrast:
     Bloom INSERTION is idempotent (set union — a re-delivered batch
@@ -1401,10 +1390,8 @@ def bloom_dedup_stream(
             ).alias("pos"),
         )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
+        spark, batch_id = batch_df.sparkSession, txn[1]
         reps = (
             batch_df.select(
                 F.md5(normalized_text(text_col)).alias("key"),
@@ -1414,14 +1401,11 @@ def bloom_dedup_stream(
             .agg(F.min("doc_id").alias("doc_id"))
         )
         pos = positions(reps)
-        if state.exists():
-            prior = state.read(spark).filter(
-                F.col("first_batch") < F.lit(batch_id)
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "pos bigint, first_batch bigint"
-            )
+        batch_bits = pos.select(
+            "pos", F.lit(batch_id).cast("bigint").alias("first_batch")
+        )
+        current = state.read(spark) if state.exists() else batch_bits.limit(0)
+        prior = current.filter(F.col("first_batch") < F.lit(batch_id))
         hits = (
             pos.join(
                 F.broadcast(prior.select("pos")), "pos", "left_semi"
@@ -1448,21 +1432,16 @@ def bloom_dedup_stream(
         decisions.write.mode("overwrite").parquet(
             f"{out_dir}/b={batch_id}"
         )
-        batch_bits = pos.select(
-            "pos", F.lit(batch_id).cast("bigint").alias("first_batch")
-        )
         merged = (
-            (state.read(spark) if state.exists() else batch_bits.limit(0))
-            .unionByName(batch_bits)
+            current.unionByName(batch_bits)
             .groupBy("pos")
             .agg(F.min("first_batch").alias("first_batch"))
         )
-        state.create_or_overwrite(merged)
+        state.create_or_overwrite(merged, txn=txn)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(state,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 def snapshot_fold_stream(
@@ -1479,13 +1458,15 @@ def snapshot_fold_stream(
 ) -> StreamingQuery:
     """The RUNNING-VALUE stateful-operator skeleton: per-key sequential
     recurrences (EMA, CUSUM, any fold where state is a value, not a
-    commutative aggregate) maintained over a stream via per-batch state
-    SNAPSHOTS. Batch N reads the latest snapshot BELOW N, folds its own
-    (order_cols)-ordered rows on top, and writes the full keyed state to
-    ``b=N`` with OVERWRITE — a re-delivered batch N recomputes from N−1's
-    snapshot and overwrites b=N with identical bytes, never double-folds.
-    This is the third replay-safety recipe next to additive partials
-    (Count-Min / incremental_aggregate) and idempotent sets (Bloom).
+    commutative aggregate) maintained over a stream as one keyed state
+    table, ``ManagedTable(state_root)``. Batch N folds its own
+    (order_cols)-ordered rows onto the latest version and writes the full
+    keyed state as the next one with ``create_or_overwrite(txn=(stream
+    id, N))``. A replayed batch whose state landed is skipped before any
+    job runs, so the latest version is always batch N−1's and nothing is
+    folded twice. Batch 0 seeds from empty state; a later batch that finds
+    no state table raises ``ValueError`` (lost state is not rebuilt from
+    the middle of the stream).
 
     ``state_fields`` = [(name, DataType), ...] — the operator's state
     columns. ``fold_expr(seeded, xs, rs, prev) -> {name: Column}``
@@ -1504,120 +1485,35 @@ def snapshot_fold_stream(
     is ASSOCIATIVELY equal to the one-shot fold (same op sequence — for
     float states the same IEEE doubles; fold values are stored raw,
     rounding happens only at read). The contract is ENFORCED, not
-    assumed: each key's snapshot carries its last folded (o1, o2), and a
+    assumed: each key's state carries its last folded (o1, o2), and a
     batch containing a row at-or-before a key's watermark raises
     ValueError instead of silently folding old values after new ones
     into plausible-wrong state (one bounded keys-in-batch count per
-    micro-batch). State per snapshot is one row per key (the floor for
-    any per-key stateful op); snapshots are pruned to the latest at read
-    and old ones are retention, not state.
+    micro-batch). State per version is one row per key (the floor for
+    any per-key stateful op); older versions are retention, not state.
 
-    Run ownership: ``state_root`` belongs to exactly one streaming
-    query. Batch 0 of a query TAKES ownership — it removes EVERY
-    ``b=*`` snapshot left by a different (possibly longer) previous run
-    (including a foreign ``b=0``, which an empty new batch 0 would
-    otherwise leave in place for batch 1 to fold on) and records its
-    checkpoint in ``_run.json`` — so :func:`snapshot_final` can never
-    return or fold stale snapshots from an earlier run; batches > 0
-    verify the marker and fail loudly if the state_root was seeded by a
-    different checkpoint (two live queries pointed at one state_root, or
-    a restarted query aimed at foreign state)."""
-    import json as _json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
+    Run ownership is :func:`_claim`'s rule, read from the key: when the
+    newest state version is keyed by another stream (a checkpoint
+    recreated at the same path is another stream), batch 0 takes
+    ``state_root`` over with a warning (it seeds from empty state anyway)
+    and a later batch raises ``ValueError`` instead of folding onto
+    another query's state."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    def _latest_snapshot(spark, below: int):
-        if not os.path.isdir(state_root):
-            return None
-        bs = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(state_root)
-            if d.startswith("b=") and int(d.split("=", 1)[1]) < below
-        ]
-        if not bs:
-            return None
-        return spark.read.parquet(f"{state_root}/b={max(bs)}")
-
-    def _read_marker(marker: str):
-        # an unreadable/truncated marker (torn write from a crashed
-        # run) is treated as owner-unknown so batches > 0 fail through
-        # the DESCRIPTIVE ownership ValueError below, not a raw
-        # JSONDecodeError
-        if not os.path.isfile(marker):
-            return None
-        try:
-            with open(marker) as fh:
-                return _json.load(fh).get("checkpoint")
-        except (ValueError, OSError):
-            return None
-
-    def _claim_or_verify_run(batch_id: int) -> None:
-        marker = os.path.join(state_root, "_run.json")
-        if batch_id == 0:
-            # a fresh checkpoint always starts at batch 0: EVERY b=*
-            # snapshot under state_root is from a DIFFERENT run and
-            # would otherwise be folded on (b>0 wins max(b) at read
-            # time; a foreign b=0 would survive an EMPTY new batch 0
-            # and contaminate batch 1's seed). Clearing them all
-            # preserves crash-replay semantics (a replayed batch 0
-            # rebuilds b=0 from its own rows byte-identical; if the
-            # checkpoint committed batch 0, replay starts later and
-            # never re-enters this branch).
-            os.makedirs(state_root, exist_ok=True)
-            # destructive takeover of another query's state_root is
-            # legal (documented) but must be VISIBLE: warn before the
-            # rmtree so the victim's operator can trace where its
-            # snapshots went instead of discovering a bare ownership
-            # ValueError at its next batch
-            prev_owner = _read_marker(marker)
-            if prev_owner is not None and prev_owner != checkpoint_dir:
-                import warnings
-
-                warnings.warn(
-                    f"{op_name}: batch 0 of checkpoint "
-                    f"{checkpoint_dir!r} is taking over state_root "
-                    f"{state_root!r} previously owned by checkpoint "
-                    f"{prev_owner!r}; its snapshots are being removed",
-                    stacklevel=2,
-                )
-            for d in os.listdir(state_root):
-                if d.startswith("b="):
-                    shutil.rmtree(os.path.join(state_root, d))
-            # atomic marker write: a crash that commits the streaming
-            # checkpoint but tears this file must leave either the old
-            # marker or the new one, never truncated JSON (os.replace
-            # is atomic on POSIX; fsync before it so the rename never
-            # lands ahead of the bytes)
-            tmp = marker + ".tmp"
-            with open(tmp, "w") as fh:
-                _json.dump({"checkpoint": checkpoint_dir}, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, marker)
-            return
-        owner = _read_marker(marker)
-        if owner != checkpoint_dir:
-            raise ValueError(
-                f"{op_name}: state_root {state_root!r} is owned by "
-                f"checkpoint {owner!r}, not {checkpoint_dir!r} — "
-                "snapshots from a different run cannot be folded on; "
-                "point the query at its own state_root or clear this "
-                "one"
-            )
-
+    state = ManagedTable(state_root)
     state_names = [n for n, _t in state_fields]
     book_names = ["n_events", "last_value", "last_ts", "last_eid"]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # ownership runs even for empty batches: an empty batch 0 must
-        # still invalidate a previous run's leftover snapshots before
-        # batch 1 folds on top of them
-        _claim_or_verify_run(batch_id)
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, txn: tuple[str, int]) -> None:
+        batch_id = txn[1]
+        _claim(state, txn, op_name)
+        if batch_id > 0 and not state.exists():
+            raise ValueError(
+                f"{op_name}: batch {batch_id} of checkpoint "
+                f"{checkpoint_dir!r} found no state at {state_root!r}: the "
+                "state was lost or the query points at the wrong state_root; "
+                "clear the checkpoint to rebuild from batch 0"
+            )
         spark = batch_df.sparkSession
         o1, o2 = order_cols
         arr = F.array_sort(
@@ -1627,8 +1523,9 @@ def snapshot_fold_stream(
             arr.alias("rs"), F.count("*").alias("bn")
         )
         xs = F.transform("rs", lambda r: r[value_col])
-        prev_snap = _latest_snapshot(spark, batch_id)
-        if prev_snap is None:
+        if batch_id > 0:
+            prev_snap = state.read(spark)
+        else:
             # first-batch empty seed: derive key/order/value types from
             # the batch itself (a hardcoded long/timestamp DDL would
             # break the full join or the watermark struct comparison
@@ -1700,12 +1597,11 @@ def snapshot_fold_stream(
             .otherwise(F.col("last_eid"))
             .alias("last_eid"),
         )
-        snap.write.mode("overwrite").parquet(f"{state_root}/b={batch_id}")
+        state.create_or_overwrite(snap, txn=txn)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, tables=(state,)
     )
-    return with_trigger(writer, processing_time).start()
 
 
 def ema_stream(
@@ -1720,12 +1616,12 @@ def ema_stream(
     """Per-key exponential moving average maintained INCREMENTALLY over
     a stream (dyadic alphas 1/2 and 1/4) — the stateful closure of the
     batch ``window_ema_smoothing`` fold, riding the shared
-    :func:`snapshot_fold_stream` skeleton (snapshot replay safety,
-    chronological-contract enforcement, run ownership — see there).
+    :func:`snapshot_fold_stream` skeleton (the keyed state table's
+    replay rule, chronological-contract enforcement, run ownership — see
+    there).
     Keys with prior state seed from it and fold the whole batch array;
     fresh keys seed from their first value and fold the tail —
     bit-identical to the one-shot fold's s0 = x0."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType
 
     def fold(seeded, xs, rs, prev):
@@ -1773,14 +1669,14 @@ def cusum_stream(
     """Per-key one-sided CUSUM change-point detection maintained over a
     stream — the stateful closure of the batch
     ``window_cusum_changepoint`` fold, riding the shared
-    :func:`snapshot_fold_stream` skeleton. State per key is 3 int64s
+    :func:`snapshot_fold_stream` skeleton (keyed state table, replay and
+    ownership rules — see there). State per key is 3 int64s
     (running excess, max excess, sticky 1-based first-alarm index; the
     step counter is the skeleton's ``n_events`` bookkeeping), all on
     the cents lattice, so batch-sequential folding over chronological
     batches is ENGINE-EXACT equal to the one-shot fold — no IEEE
     caveat at all, integer recurrences commute with any contiguous
     batch split."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     def fold(seeded, xs, rs, prev):
@@ -1852,7 +1748,8 @@ def page_hinkley_stream(
 ) -> StreamingQuery:
     """Per-key Page-Hinkley mean-drift detection maintained over a
     stream — the stateful closure of the batch ``window_page_hinkley``
-    fold, riding the shared :func:`snapshot_fold_stream` skeleton.
+    fold, riding the shared :func:`snapshot_fold_stream` skeleton
+    (keyed state table, replay and ownership rules — see there).
     State per key is the detector's 6 doubles (count, sum, PH
     cumulative, its running min, max excursion, sticky alarm step);
     the recurrence is float-valued (one division per step against the
@@ -1863,7 +1760,6 @@ def page_hinkley_stream(
     Values fold on the cents lattice cast to double (integers ≤ 2^53
     are exact in IEEE doubles, so the count/sum components stay
     exact)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType
 
     def fold(seeded, xs, rs, prev):
@@ -1936,17 +1832,9 @@ def page_hinkley_stream(
 
 
 def snapshot_final(spark: SparkSession, state_root: str) -> DataFrame:
-    """Read the latest state snapshot written by
-    :func:`snapshot_fold_stream` (raw fold values; callers round at
-    presentation)."""
-    import os
-
-    bs = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(state_root)
-        if d.startswith("b=")
-    ]
-    return spark.read.parquet(f"{state_root}/b={max(bs)}")
+    """Read the latest state written by :func:`snapshot_fold_stream` (raw
+    fold values; callers round at presentation)."""
+    return ManagedTable(state_root).read(spark)
 
 
 # backward-compatible name: the EMA family's read-side entry point

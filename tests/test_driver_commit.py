@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import glob
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -59,8 +61,7 @@ def _exact(rows):
 
 def _entries(mt: ManagedTable):
     """Manifest entries without their timestamps, each idempotency key cut
-    to its batch id: runs under different roots key by different
-    checkpoint paths."""
+    to its batch id: every run keys by its own stream id."""
     return [
         {k: v[1] if k == "txn" else v for k, v in e.items() if k != "timestamp"}
         for e in _read_log(mt.root)
@@ -403,6 +404,36 @@ def test_a_failed_commits_files_are_cleared(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("bucketed", [False, True], ids=["flat", "bucketed"])
+def test_an_append_of_no_rows_links_the_previous_version(spark, tmp_path, bucketed):
+    """A driver-path append of no rows rewrites nothing: its version holds
+    the previous version's files as the same inodes and records its key,
+    and the next append adds onto it."""
+    root = str(tmp_path / "t")
+    if bucketed:
+        mt = _bucketed(spark, root, n=40)
+    else:
+        mt = ManagedTable(root)
+        mt.create_or_overwrite(spark.createDataFrame(_UPSERT, _UPSERT_DDL))
+    before = _state(spark, mt)[1]
+    src = spark.createDataFrame(_UPSERT, _UPSERT_DDL)
+    assert mt.append(src.limit(0), txn=("app", 0)) == 1
+    assert _read_log(root)[-1]["txn"] == ["app", 0]
+    assert mt.bucket_spec() == ((["id"], 8) if bucketed else None)
+    assert _state(spark, mt)[1] == before
+    for vdir in [mt._version_dir(0)] + (
+        sorted(glob.glob(os.path.join(mt._version_dir(0), "__bucket=*")))
+    ):
+        rel = os.path.relpath(vdir, mt._version_dir(0))
+        assert managed_table._same_file_set(
+            vdir, os.path.normpath(os.path.join(mt._version_dir(1), rel))
+        )
+    mt.append(src, txn=("app", 1))
+    assert _state(spark, mt)[1] == _exact(
+        mt.read(spark, 0).collect() + src.collect()
+    )
+
+
 def test_merge_into_buckets_with_no_files_runs_on_the_driver(spark, tmp_path):
     """A bucket no row has hashed into yet has no directory; a merge whose
     keys land only there reads no prior file and still runs on the
@@ -510,12 +541,17 @@ def _stream_batches(spark):
 def _drain(spark, m, root, schema):
     """Start ``m`` on the feed and the checkpoint under ``root`` and drain
     it; return the Spark jobs the query ran, counted through its job group
-    (its run id), and the input rows its scans read."""
+    (its run id), and its progress entries."""
     stream = spark.readStream.schema(schema).parquet(os.path.join(root, "feed"))
     q = m.start(stream, os.path.join(root, "ckpt"))
     q.awaitTermination(120)
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    return len(jobs), sum(p["numInputRows"] for p in q.recentProgress)
+    return len(jobs), q.recentProgress
+
+
+def _scanned(progress):
+    """The input rows a drain's scans read."""
+    return sum(p["numInputRows"] for p in progress)
 
 
 def _drain_each(spark, m, batches, root):
@@ -528,9 +564,9 @@ def _drain_each(spark, m, batches, root):
     for i, batch in enumerate(batches):
         # one file, one row group: each batch is a single split
         pq.write_table(batch, os.path.join(src, f"part-{i}.parquet"))
-        n_jobs, n_rows = _drain(spark, m, root, schema)
+        n_jobs, progress = _drain(spark, m, root, schema)
         jobs.append(n_jobs)
-        scanned.append(n_rows)
+        scanned.append(_scanned(progress))
     return jobs, scanned
 
 
@@ -665,7 +701,362 @@ def test_stream_batch_replays_exactly_once(
     for name in (str(last), f".{last}.crc"):  # the file and its checksum
         os.remove(commits / name)
     logs = [_read_log(t.root) for t in tables]
-    jobs, scanned = _drain(spark, m, str(tmp_path), schema)
+    jobs, progress = _drain(spark, m, str(tmp_path), schema)
     assert (commits / str(last)).exists()  # the batch ran again
-    assert (jobs, scanned) == (0, 0)
+    assert (jobs, _scanned(progress)) == (0, 0)
     assert [_read_log(t.root) for t in tables] == logs
+
+
+# -- every other foreachBatch operator: zero-row batches and replays --------
+
+_WORDS = (
+    "river mountain garden window kitchen market winter summer yellow silver "
+    "teacher student doctor farmer letter paper pencil basket bottle candle "
+    "forest meadow valley harbor bridge castle tower village station engine "
+    "morning evening journey holiday weather thunder shadow silence whisper"
+).split()
+
+
+def _text(seed):
+    """A random English-looking paragraph that passes the quality gate.
+    Two seeds share almost no word 3-gram."""
+    import random
+
+    rng = random.Random(seed)
+    words = []
+    for i in range(36):
+        words.append(rng.choice(_WORDS))
+        if i % 6 == 5:
+            words.append("the")
+    return " ".join(words) + "."
+
+
+def _near(text):
+    """``text`` with its first word changed: a near-duplicate of it."""
+    return "zebra " + text.split(" ", 1)[1]
+
+
+def _docs_batches(spark):
+    """Three micro-batches of documents. The second holds an exact copy of
+    doc 1 (case changed), a near copy of doc 2 and an in-batch near pair;
+    the third re-sends id 2 with new text and a near copy of doc 8. Doc 3
+    fails the quality gate."""
+    t = {i: _text(i) for i in range(1, 13)}
+    rows = [
+        [(1, t[1], "en", "web"), (2, t[2], "en", "crawl"),
+         (3, "zzzz!!!! 9999 $$$$", "en", "web"), (4, t[4], "de", "web")],
+        [(5, t[1].upper(), "en", "crawl"), (6, _near(t[2]), "de", "web"),
+         (7, t[7], "en", "web"), (8, t[8], "en", "crawl"),
+         (9, _near(t[7]), "de", "crawl")],
+        [(2, t[10], "en", "web"), (10, t[11], "de", "crawl"),
+         (11, _near(t[8]), "en", "web"), (12, t[12], "en", "crawl")],
+    ]
+    schema = "doc_id long, text string, lang string, source string"
+    return [spark.createDataFrame(r, schema).toArrow() for r in rows]
+
+
+def _events_batches(spark):
+    """Three chronological micro-batches of events; user 9 first appears
+    in the second, user 8 skips it."""
+    def ev(eid, minute, uid, val):
+        return (eid, datetime.datetime(2024, 1, 1, 0, minute), uid, val)
+
+    rows = [
+        [ev(1, 1, 7, 1.0), ev(2, 2, 8, 10.0), ev(3, 3, 7, 2.0)],
+        [ev(4, 11, 7, 3.0), ev(5, 12, 9, 4.0)],
+        [ev(6, 21, 8, 5.0), ev(7, 22, 7, 6.0)],
+    ]
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    return [spark.createDataFrame(r, schema).toArrow() for r in rows]
+
+
+def _rows(df, remap=None, batch_cols=()):
+    """``df``'s rows as ``_exact`` tuples in column-name order, each column
+    in ``batch_cols`` (a batch id) mapped through ``remap``."""
+    cols = sorted(df.columns)
+    return _exact(
+        [remap[r[c]] if remap and c in batch_cols else r[c] for c in cols]
+        for r in df.collect()
+    )
+
+
+class _Op:
+    """A stream operator under ``root``: ``start`` runs it on a stream and
+    a checkpoint, ``outputs`` reads every output it persists, whose
+    ``batch_cols`` hold batch ids. ``keyed`` tells that a replay of a batch
+    whose writes landed runs no job."""
+
+    def __init__(self, feed, keyed, start, outputs, batch_cols=("batch_id",)):
+        self.feed, self.keyed, self.batch_cols = feed, keyed, batch_cols
+        self.start, self._outputs = start, outputs
+
+    def outputs(self, spark, remap=None):
+        return [_rows(df, remap, self.batch_cols) for df in self._outputs(spark)]
+
+
+def _op(spark, name, root):
+    """The operator ``name`` with its outputs under ``root``."""
+    from databricks_etl_pipelines_spark.operators import curation
+    from databricks_etl_pipelines_spark.streaming import structured as st
+
+    docs = spark.createDataFrame(pa.concat_tables(_docs_batches(spark)))
+    table = {t: ManagedTable(os.path.join(root, t)) for t in ("out", "state")}
+    out = os.path.join(root, "out_dir")
+
+    def read(*paths):
+        return lambda spark: [spark.read.parquet(os.path.join(root, p)) for p in paths]
+
+    def tables(*names):
+        return lambda spark: [table[t].read(spark) for t in names]
+
+    def partial(df):
+        return df.groupBy("lang").agg(
+            F.count("*").alias("n"), F.sum(F.length("text")).alias("chars")
+        )
+
+    per_doc = curation.perplexity_score(docs, curation.perplexity_word_scores(docs))
+    ops = {
+        "curation_ingest": lambda: _Op(
+            "docs", True,
+            lambda s, c: st.curation_ingest(s, table["out"], c),
+            tables("out"),
+        ),
+        "curation_ingest_neardup": lambda: _Op(
+            "docs", True,
+            lambda s, c: st.curation_ingest_neardup(
+                s, table["out"], os.path.join(root, "index"), c
+            ),
+            lambda spark: tables("out")(spark)
+            + read("index/bands", "index/shingles")(spark),
+        ),
+        "reservoir_sample_stream": lambda: _Op(
+            "docs", True,
+            lambda s, c: st.reservoir_sample_stream(s, table["out"], c, k=4),
+            tables("out"),
+        ),
+        "foreach_batch_merge": lambda: _Op(
+            "docs", True,
+            lambda s, c: st.foreach_batch_merge(s, table["out"], ["doc_id"], c),
+            tables("out"),
+        ),
+        "incremental_aggregate": lambda: _Op(
+            "docs", True,
+            lambda s, c: st.incremental_aggregate(
+                s, table["out"], ["lang"], partial, c
+            ),
+            tables("out"),
+        ),
+        "dsir_score_stream": lambda: _Op(
+            "docs", False,
+            lambda s, c: st.dsir_score_stream(
+                s,
+                curation.dsir_log_ratios(
+                    docs, "text", F.col("source") == "web", n_buckets=16
+                ),
+                out, c, n_buckets=16,
+            ),
+            read("out_dir"),
+        ),
+        "perplexity_gate_stream": lambda: _Op(
+            "docs", False,
+            lambda s, c: st.perplexity_gate_stream(
+                s,
+                curation.perplexity_word_scores(docs),
+                curation.perplexity_cutoffs(per_doc, "lang"),
+                out, c,
+            ),
+            read("out_dir"),
+        ),
+        "decontaminate_stream": lambda: _Op(
+            "docs", False,
+            lambda s, c: st.decontaminate_stream(
+                s,
+                curation.benchmark_ngrams(docs.filter("doc_id = 2"), ngram_n=8),
+                out, c, ngram_n=8,
+            ),
+            read("out_dir"),
+        ),
+        "countmin_stream": lambda: _Op(
+            "docs", False,
+            lambda s, c: st.countmin_stream(s, out, c),
+            read("out_dir"),
+        ),
+        "bloom_dedup_stream": lambda: _Op(
+            "docs", True,
+            lambda s, c: st.bloom_dedup_stream(s, table["state"], out, c),
+            lambda spark: read("out_dir")(spark) + tables("state")(spark),
+            batch_cols=("b", "batch_id", "first_batch"),
+        ),
+        "snapshot_fold_stream": lambda: _Op(
+            "events", True,
+            lambda s, c: st.ema_stream(s, table["state"].root, c),
+            tables("state"),
+        ),
+    }
+    return ops[name]()
+
+
+_OP_NAMES = [
+    "curation_ingest",
+    "curation_ingest_neardup",
+    "reservoir_sample_stream",
+    "foreach_batch_merge",
+    "incremental_aggregate",
+    "dsir_score_stream",
+    "perplexity_gate_stream",
+    "decontaminate_stream",
+    "countmin_stream",
+    "bloom_dedup_stream",
+    "snapshot_fold_stream",
+]
+_FEEDS = {"docs": _docs_batches, "events": _events_batches}
+
+
+@pytest.fixture(scope="module")
+def clean_outputs(spark, tmp_path_factory):
+    """``clean_outputs(name)``: the outputs of operator ``name`` after an
+    uninterrupted drain of its three batches, computed on first use."""
+    done = {}
+
+    def outputs(name):
+        if name not in done:
+            root = str(tmp_path_factory.mktemp(f"clean_{name}"))
+            op = _op(spark, name, root)
+            _drain_each(spark, op, _FEEDS[op.feed](spark), root)
+            done[name] = op.outputs(spark)
+        return done[name]
+
+    return outputs
+
+
+@pytest.mark.parametrize("name", _OP_NAMES)
+def test_stream_zero_row_batch_changes_nothing(spark, tmp_path, clean_outputs, name):
+    """No operator tests a batch for emptiness: a zero-row file before the
+    first batch and one between the first two each run as a batch of 0
+    input rows, and every output ends as after a drain without them (batch
+    ids mapped back to that drain's)."""
+    root = str(tmp_path)
+    op = _op(spark, name, root)
+    batches = _FEEDS[op.feed](spark)
+    empty = batches[0].slice(0, 0)
+    feed = [empty, batches[0], empty, batches[1], batches[2]]
+    schema = spark.createDataFrame(empty).schema
+    os.makedirs(os.path.join(root, "feed"))
+    for i, batch in enumerate(feed):
+        pq.write_table(batch, os.path.join(root, "feed", f"part-{i}.parquet"))
+        _, progress = _drain(spark, op, root, schema)
+        if not batch.num_rows:
+            assert [(p["batchId"], p["numInputRows"]) for p in progress] == [(i, 0)]
+    data_ids = [i for i, b in enumerate(feed) if b.num_rows]
+    remap = {i: n for n, i in enumerate(data_ids)}
+    assert op.outputs(spark, remap) == clean_outputs(name)
+
+
+@pytest.mark.parametrize("name", [
+    "curation_ingest", "curation_ingest_neardup", "reservoir_sample_stream",
+    "foreach_batch_merge", "incremental_aggregate", "bloom_dedup_stream",
+    "snapshot_fold_stream",
+])
+def test_stream_recreated_checkpoint_is_a_new_stream(spark, tmp_path, name):
+    """A checkpoint deleted and recreated at the same path starts a new
+    stream whose batch ids start again at 0, not a replay of the old one:
+    after a first feed on it, the second feed on the recreated checkpoint
+    ends as on a checkpoint at another path (run on a copy of the outputs
+    the first feed left). Checked for each operator that keys its writes."""
+    same, other = str(tmp_path / "same"), str(tmp_path / "other")
+    ops = {root: _op(spark, name, root) for root in (same, other)}
+    batches = _FEEDS[ops[same].feed](spark)
+    schema = spark.createDataFrame(batches[0].slice(0, 0)).schema
+
+    def drain(root, i, ckpt):
+        feed = os.path.join(root, f"feed{i}")
+        os.makedirs(feed)
+        pq.write_table(batches[i], os.path.join(feed, "part-0.parquet"))
+        stream = spark.readStream.schema(schema).parquet(feed)
+        q = ops[root].start(stream, os.path.join(root, ckpt))
+        q.awaitTermination(120)
+        assert [p["batchId"] for p in q.recentProgress] == [0]
+
+    drain(same, 0, "ckpt")
+    shutil.copytree(same, other)
+    shutil.rmtree(os.path.join(same, "ckpt"))
+    drain(same, 1, "ckpt")
+    drain(other, 1, "other_ckpt")
+    assert ops[same].outputs(spark) == ops[other].outputs(spark)
+
+
+def _fail_after_first_write(mp, batch):
+    """Make the first durable write of ``batch`` raise once, right after
+    it lands: a ``ManagedTable`` commit keyed by the batch, or a parquet
+    write to its ``batch_id=N``/``b=N`` directory. Returns the list that
+    records the raise."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    raised = []
+
+    def after(write, hit):
+        def wrapped(*args, **kwargs):
+            out = write(*args, **kwargs)
+            if hit(*args, **kwargs) and not raised:
+                raised.append(True)
+                raise RuntimeError("injected failure after a write")
+            return out
+
+        return wrapped
+
+    mp.setattr(ManagedTable, "_commit", after(
+        ManagedTable._commit,
+        lambda self, *a, txn=None, **k: txn is not None and txn[1] == batch,
+    ))
+    mp.setattr(DataFrameWriter, "parquet", after(
+        DataFrameWriter.parquet,
+        lambda self, path, *a, **k: path.endswith(f"={batch}"),
+    ))
+    return raised
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(
+            n,
+            marks=pytest.mark.xfail(
+                strict=True, reason="index writes are unkeyed; ROADMAP item 3"
+            ),
+        )
+        if n == "curation_ingest_neardup"
+        else n
+        for n in _OP_NAMES
+    ],
+)
+def test_stream_operator_replays_exactly_once(spark, tmp_path, clean_outputs, name):
+    """Batch 2 raises right after its first durable write and the query
+    fails; restarted on the same checkpoint, it ends as an uninterrupted
+    drain. Then the checkpoint's last ``commits/N`` file is deleted, so a
+    restart replays batch N under the same id: the outputs stay equal, and
+    an operator whose writes are all keyed runs no Spark job."""
+    from pyspark.errors import StreamingQueryException
+
+    root = str(tmp_path)
+    op = _op(spark, name, root)
+    batches = _FEEDS[op.feed](spark)
+    schema = spark.createDataFrame(batches[0].slice(0, 0)).schema
+    with pytest.MonkeyPatch.context() as mp:
+        raised = _fail_after_first_write(mp, 2)
+        _drain_each(spark, op, batches[:2], root)
+        pq.write_table(batches[2], os.path.join(root, "feed", "part-2.parquet"))
+        with pytest.raises(StreamingQueryException, match="injected"):
+            _drain(spark, op, root, schema)
+        assert raised
+        _drain(spark, op, root, schema)
+    assert op.outputs(spark) == clean_outputs(name)
+
+    commits = os.path.join(root, "ckpt", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):  # the file and its checksum
+        os.remove(os.path.join(commits, f))
+    jobs, _ = _drain(spark, op, root, schema)
+    assert os.path.exists(os.path.join(commits, str(last)))  # it ran again
+    if op.keyed:
+        assert jobs == 0
+    assert op.outputs(spark) == clean_outputs(name)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_etl_pipelines_spark.sources.managed_table import (
@@ -1071,9 +1072,9 @@ def test_ema_stream_replay_idempotent_and_carryover(spark, tmp_path):
 
     - batch-sequential folding equals the hand-computed one-shot fold;
     - a key ABSENT from a later batch carries its state over unchanged;
-    - re-delivering a batch (crash replay) recomputes from the prior
-      snapshot and leaves the final state byte-identical — the
-      running-value analog of CM's overwrite-partition idempotence."""
+    - re-delivering every batch under a fresh checkpoint (batch 0 takes
+      the state table over and seeds from empty state) leaves the final
+      state identical."""
     import datetime as dt
 
     from databricks_etl_pipelines_spark.streaming.structured import (
@@ -1121,11 +1122,8 @@ def test_ema_stream_replay_idempotent_and_carryover(spark, tmp_path):
     assert got[7].last_value == 4.0
     assert got[8].ema_half == 10.0 and got[8].n_events == 1
 
-    # crash replay of the LAST batch: re-run its fold from snapshot 0
-    # — b=1 must be rewritten with identical content
-    before = {r.k: r for r in spark.read.parquet(f"{state}/b=1").collect()}
-    # drive the handlers the way a restarted checkpoint would: same
-    # batch ids, same inputs, prior state on disk
+    before = {r.k: r for r in ema_final(spark, state).collect()}
+    # same batch ids, same inputs, prior state on disk
     q2 = ema_stream(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1134,9 +1132,8 @@ def test_ema_stream_replay_idempotent_and_carryover(spark, tmp_path):
         str(tmp_path / "ckpt2"),  # fresh checkpoint -> batches replay 0,1
     )
     await_drained(q2, 120)
-    after = {r.k: r for r in spark.read.parquet(f"{state}/b=1").collect()}
-    assert before == after
-    assert {r.k: r for r in ema_final(spark, state).collect()} == got
+    after = {r.k: r for r in ema_final(spark, state).collect()}
+    assert before == after == got
 
 
 def test_ema_stream_rejects_out_of_order_batch(spark, tmp_path):
@@ -1182,7 +1179,7 @@ def test_ema_stream_rejects_out_of_order_batch(spark, tmp_path):
 
 def test_ema_stream_empty_batch0_clears_foreign_b0_state(spark, tmp_path):
     """Run-ownership hole regression: a NEW run whose batch 0 is EMPTY
-    must still clear a previous run's b=0 snapshot — otherwise its
+    must still take over a previous run's state — otherwise its
     batch 1 would silently fold onto the foreign run's per-key EMA
     state. Run A folds two batches for user 7; run B (fresh checkpoint,
     same state_root) streams an empty batch 0 then fresh user-9 rows —
@@ -1231,7 +1228,6 @@ def test_ema_stream_empty_batch0_clears_foreign_b0_state(spark, tmp_path):
         str(tmp_path / "ckptA"),
     )
     await_drained(qa, 120)
-    assert os.path.isdir(f"{state}/b=0")  # run A's seed snapshot
 
     # run B: EMPTY batch 0 (zero-row file), then user-9 rows
     feed_b = feed_dir("feedB", [[], [ev(10, 21, 9, 5.0)]])
@@ -1247,67 +1243,6 @@ def test_ema_stream_empty_batch0_clears_foreign_b0_state(spark, tmp_path):
     # ONLY run B's key, seeded fresh — run A's user 7 must be gone
     assert set(got) == {9}
     assert got[9].ema_half == 5.0 and got[9].n_events == 1
-
-
-def test_ema_stream_torn_marker_fails_with_ownership_error(
-    spark, tmp_path
-):
-    """Crash-safety regression: a TRUNCATED ``_run.json`` (machine
-    crash between the checkpoint commit and the marker write, before
-    the atomic-replace fix; or any torn/corrupt marker) must surface
-    as the DESCRIPTIVE ownership ValueError at the next batch > 0 —
-    never as a raw JSONDecodeError from inside the handler."""
-    import datetime as dt
-    import os
-    import time
-
-    import pytest as _pytest
-
-    from databricks_etl_pipelines_spark.streaming.structured import (
-        await_drained,
-        ema_stream,
-    )
-
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    base = time.time()
-
-    def add_batch(i, rows):
-        tmp = tmp_path / f"slice{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(tmp)
-        )
-        dst = feed / f"batch-{i}.parquet"
-        next(tmp.glob("part-*.parquet")).rename(dst)
-        os.utime(dst, (base + i, base + i))
-
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    add_batch(0, [(1, dt.datetime(2024, 1, 1, 0, 1), 7, 1.0)])
-    q = ema_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(feed)),
-        state,
-        ckpt,
-    )
-    await_drained(q, 120)
-    # tear the marker: truncated JSON, as a crash mid-write would leave
-    with open(os.path.join(state, "_run.json"), "w") as fh:
-        fh.write('{"checkpo')
-    # resume the SAME checkpoint with a new file -> batch 1 verifies
-    # ownership, reads the torn marker as owner-unknown, fails loudly
-    add_batch(1, [(2, dt.datetime(2024, 1, 1, 0, 2), 7, 2.0)])
-    q2 = ema_stream(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(feed)),
-        state,
-        ckpt,
-    )
-    with _pytest.raises(Exception, match="is owned by checkpoint"):
-        await_drained(q2, 120)
 
 
 def test_streaming_ks_drift_multibatch_equals_one_shot(spark, tmp_path):
@@ -1569,42 +1504,120 @@ def test_fold_partial_batch_exactly_once_replay(spark, tmp_path):
     assert {r.k: r.sx for r in gold.read(spark).collect()} == {1: 24, 2: 5}
 
 
-def test_fold_partial_batch_ownership(spark, tmp_path):
-    """Foreign gold state: batch 0 of a new checkpoint takes the table over
-    (warning + overwrite — stale scratch semantics, even when batch 0 is
-    EMPTY); a batch > 0 pointed at another query's gold fails loudly."""
-    import warnings as _w
-
-    import pytest
-
+def _fold_by_call(spark, tmp_path):
+    """``fold(ckpt, batch_id, rows)`` calls :func:`fold_partial_batch` on
+    (k, x) rows; ``state()`` is the gold's {k: sum of x}."""
     from databricks_etl_pipelines_spark.streaming.structured import (
         fold_partial_batch,
     )
 
+    gold = ManagedTable(str(tmp_path / "gold"))
+
     def partial(df):
         return df.groupBy("k").agg(F.sum("x").alias("sx"))
 
-    gold = ManagedTable(str(tmp_path / "gold"))
-    b = spark.createDataFrame([(1, 10)], "k int, x int")
-    fold_partial_batch(b, 0, gold, ["k"], partial, str(tmp_path / "ckptA"))
+    def fold(ckpt, batch_id, rows):
+        batch = spark.createDataFrame(rows, "k long, x long")
+        fold_partial_batch(
+            batch, batch_id, gold, ["k"], partial, str(tmp_path / ckpt)
+        )
 
-    # batch > 0 of a DIFFERENT checkpoint: loud failure, gold untouched
-    with pytest.raises(ValueError, match="maintained by checkpoint"):
-        fold_partial_batch(b, 1, gold, ["k"], partial, str(tmp_path / "ckptB"))
-    assert {r.k: r.sx for r in gold.read(spark).collect()} == {1: 10}
+    def state():
+        return {r.k: r.sx for r in gold.read(spark).collect()}
 
-    # EMPTY batch 0 of a new checkpoint: takeover must still invalidate the
-    # foreign aggregate so batch 1 never folds onto it
-    empty = spark.createDataFrame([], "k int, x int")
+    return fold, state
+
+
+def _fold_by_ema_stream(spark, tmp_path):
+    """``fold(ckpt, batch_id, rows)`` drains (k, x) rows as batch
+    ``batch_id`` of the ``ema_stream`` on checkpoint ``ckpt``, one feed
+    directory per checkpoint; ``state()`` is the state's {k: last value}."""
+    import datetime as dt
+    import os
+
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        ema_final,
+        ema_stream,
+    )
+
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    state_root = str(tmp_path / "state")
+    events = []
+
+    def fold(ckpt, batch_id, rows):
+        feed = tmp_path / f"feed_{ckpt}"
+        feed.mkdir(exist_ok=True)
+        assert len(list(feed.glob("*.parquet"))) == batch_id
+        out = []
+        for k, x in rows:  # event ids and times rise across every batch
+            events.append(k)
+            t = dt.datetime(2024, 1, 1, 0, len(events))
+            out.append((len(events), t, k, float(x)))
+        tmp = tmp_path / f"slice_{ckpt}_{batch_id}"
+        spark.createDataFrame(out, schema).coalesce(1).write.parquet(str(tmp))
+        part = next(tmp.glob("part-*.parquet"))
+        os.rename(part, feed / f"batch-{batch_id}.parquet")
+        q = ema_stream(
+            spark.readStream.schema(schema).parquet(str(feed)),
+            state_root,
+            str(tmp_path / ckpt),
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+
+    def state():
+        rows = ema_final(spark, state_root).collect()
+        return {r.k: r.last_value for r in rows}
+
+    return fold, state
+
+
+@pytest.mark.parametrize(
+    "folder",
+    [_fold_by_call, _fold_by_ema_stream],
+    ids=["fold_partial_batch", "ema_stream"],
+)
+def test_fold_partial_batch_ownership(spark, tmp_path, folder):
+    """Run ownership read from the newest keyed commit, in
+    ``fold_partial_batch`` and in the ``snapshot_fold_stream`` state
+    table alike: batch 0 of a new checkpoint takes the table over
+    (warning + overwrite, even when batch 0 is EMPTY), and a batch > 0
+    pointed at another checkpoint's state fails loudly and leaves it
+    untouched."""
+    import warnings as _w
+
+    fold, state = folder(spark, tmp_path)
+    fold("ckptA", 0, [(1, 10)])
+    assert state() == {1: 10}
+
+    # EMPTY batch 0 of a new checkpoint: the takeover must still drop the
+    # foreign state so batch 1 never folds onto it
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        fold_partial_batch(
-            empty, 0, gold, ["k"], partial, str(tmp_path / "ckptB")
-        )
+        fold("ckptB", 0, [])
     assert any("taking over" in str(w.message) for w in rec)
-    assert gold.read(spark).count() == 0
-    fold_partial_batch(b, 1, gold, ["k"], partial, str(tmp_path / "ckptB"))
-    assert {r.k: r.sx for r in gold.read(spark).collect()} == {1: 10}
+    assert state() == {}
+
+    # batch > 0 of the checkpoint that lost the table: loud failure
+    with pytest.raises(Exception, match="maintained by checkpoint"):
+        fold("ckptA", 1, [(1, 10)])
+    assert state() == {}
+    fold("ckptB", 1, [(1, 10)])
+    assert state() == {1: 10}
+
+
+def test_snapshot_stream_with_lost_state_fails(spark, tmp_path):
+    """A batch > 0 that finds no state table raises instead of restarting
+    every recurrence from empty state mid-stream."""
+    import shutil
+
+    fold, _state = _fold_by_ema_stream(spark, tmp_path)
+    fold("ckptA", 0, [(1, 10)])
+    shutil.rmtree(tmp_path / "state")
+    with pytest.raises(Exception, match="found no state"):
+        fold("ckptA", 1, [(1, 11)])
 
 
 def test_fold_partial_batch_survives_nonfold_commits(spark, tmp_path):
