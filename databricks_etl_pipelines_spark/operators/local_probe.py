@@ -13,8 +13,10 @@ So when the probed directories hold less than
 :data:`LOCAL_PROBE_MAX_BYTES` of parquet, a probe lists and reads only
 those directories with pyarrow (:func:`probed_files`,
 :func:`read_files`), scores them with numpy in the Spark expressions'
-IEEE op order, and returns its ≤ k rows as a local relation built from
-an Arrow table (with or without the session's Arrow conf). No Spark job
+IEEE op order, and returns its ≤ k rows as an :class:`ArrowFrame`
+(:func:`arrow_frame`). That frame answers ``collect()``, ``count()`` and
+``schema`` from its Arrow table on the driver, with no JVM call; the JVM
+local relation is built only when another method needs it. No Spark job
 runs, neither in the probe nor in the caller's ``.collect()``. Larger
 probes take the Spark path unchanged.
 
@@ -31,9 +33,22 @@ from collections.abc import Iterable, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    Row,
+    ShortType,
+    StringType,
+    StructType,
+    _create_row,
+)
 
 # A cap on driver memory, not a measured crossover. The driver path holds
 # one probe's input in memory as an Arrow table. A 20k-doc index in 2
@@ -45,6 +60,64 @@ from pyspark.sql.types import StructType
 # 0.24 s against 1.7 s on Spark, ~13 MB of lists in 0.16 s against
 # 0.56 s). Perfbench's probes read ~11 KB (BM25) and ~37 KB (IVF).
 LOCAL_PROBE_MAX_BYTES = 16 << 20
+
+
+# Spark types whose values Arrow's ``to_pylist()`` gives exactly as
+# Spark's ``collect()`` does, NULL as None
+_PYLIST_TYPES = (
+    BooleanType, ByteType, ShortType, IntegerType, LongType, FloatType,
+    DoubleType, StringType,
+)
+
+
+class ArrowFrame(ClassicDataFrame):
+    """A driver-path probe's top-k: a DataFrame that holds its rows as an
+    Arrow table. ``collect()`` builds its Rows from the Arrow columns,
+    ``count()`` is the table's row count and ``schema`` is pre-set, so
+    none of them calls the JVM. Every other method reaches the JVM local
+    relation, which ``spark.createDataFrame(table, schema)`` builds on
+    first use. Made only by :func:`arrow_frame`."""
+
+    def __new__(cls, spark: SparkSession, table: pa.Table, schema: StructType):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table, schema: StructType):
+        # ``schema`` is a functools.cached_property on DataFrame
+        self.__dict__["schema"] = schema
+        self._table = table
+        super().__init__(None, spark)  # its ``_jdf = None`` is the setter's
+
+    @property
+    def _jdf(self):
+        if self._relation is None:
+            self._relation = self.sparkSession.createDataFrame(
+                self._table, self.schema
+            )._jdf
+        return self._relation
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self._relation = jdf
+
+    def collect(self) -> list[Row]:
+        names = self.schema.names
+        columns = [c.to_pylist() for c in self._table.columns]
+        return [_create_row(names, values) for values in zip(*columns)]
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+
+def arrow_frame(
+    spark: SparkSession, table: pa.Table, schema: StructType
+) -> DataFrame:
+    """``table`` under ``schema`` as a DataFrame: an :class:`ArrowFrame`
+    when every column's Spark type is one whose values Arrow gives as
+    Spark does, else the JVM local relation
+    ``spark.createDataFrame(table, schema)`` built now."""
+    if all(isinstance(f.dataType, _PYLIST_TYPES) for f in schema.fields):
+        return ArrowFrame(spark, table, schema)
+    return spark.createDataFrame(table, schema)
 
 
 def probed_files(

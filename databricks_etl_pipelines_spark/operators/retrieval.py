@@ -17,6 +17,7 @@ the corpus.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -42,6 +43,13 @@ def _kr_fold(s: str) -> int:
     return acc
 
 
+@functools.lru_cache(maxsize=1)
+def _strict_math_log(jvm):
+    """``java.lang.StrictMath.log`` of one JVM, resolved once: resolving
+    it takes about five Py4J round trips, calling it one."""
+    return jvm.java.lang.StrictMath.log
+
+
 def _strict_log(spark: SparkSession, x: float) -> float:
     """Driver-side twin of Spark's ``log``, which is
     ``java.lang.StrictMath.log``: called through the Py4J gateway, one
@@ -50,7 +58,7 @@ def _strict_log(spark: SparkSession, x: float) -> float:
     ``stable_round`` boundary, so the driver-path idf must use this to
     stay bit-identical to the Spark path (the same parity rule as
     :func:`_kr_fold`)."""
-    return float(spark._jvm.java.lang.StrictMath.log(float(x)))
+    return float(_strict_math_log(spark._jvm)(float(x)))
 
 
 def _underfill_error(
@@ -283,20 +291,25 @@ class InvertedTextIndex:
         callers that accept < k rows (and know they lose full-scan
         parity there).
 
-        Return contract: with ``strict=True`` the result is an EAGERLY
-        materialized ≤ k-row local relation — values are frozen at call
-        time, the pruning plan is no longer inspectable on the returned
-        DataFrame, and row order is positional only — re-sort by
-        (score_bm25 DESC, doc_id) downstream if ordering matters after
-        any shuffle. A small probe, whose ``wb=`` bucket directories
-        hold less than ``local_probe.LOCAL_PROBE_MAX_BYTES``, is read and
-        scored on the driver and runs no Spark job; its schema, rows and
-        doubles equal the Spark path's (idf via StrictMath, see
-        :func:`_strict_log`). A larger one runs the Spark path and
-        releases its posting cache after the top-k collect. Inspect the
-        pruning with ``strict=False``, or on an index above the
-        threshold: with ``strict=False`` the result stays lazy with the
-        pruned-scan plan attached."""
+        Return contract: with ``strict=True`` the result holds ≤ k rows
+        computed at call time — values are frozen then, the pruning plan
+        is no longer inspectable on the returned DataFrame, and row order
+        is positional only — re-sort by (score_bm25 DESC, doc_id)
+        downstream if ordering matters after any shuffle. A small probe,
+        whose ``wb=`` bucket directories hold less than
+        ``local_probe.LOCAL_PROBE_MAX_BYTES``, is read and scored on the
+        driver and runs no Spark job; its schema, rows and doubles equal
+        the Spark path's (idf via StrictMath, see :func:`_strict_log`).
+        It returns a ``local_probe.ArrowFrame``: ``collect()``,
+        ``count()`` and ``schema`` answer from its Arrow rows with no JVM
+        call, and its JVM local relation is built lazily, on the first
+        other method (an id type outside ``local_probe.arrow_frame``'s
+        list gets an eager local relation instead). A larger probe runs
+        the Spark path, releases its posting cache after the top-k
+        collect and returns an eager local relation of the collected
+        rows. Inspect the pruning with ``strict=False``, or on an index
+        above the threshold: with ``strict=False`` the result stays lazy
+        with the pruned-scan plan attached."""
         from databricks_etl_pipelines_spark.functions.numeric import (
             stable_round,
         )
@@ -485,4 +498,4 @@ class InvertedTextIndex:
             **{f"tf_{t}": pa.array(tf[t].to_numpy()[order]) for t in ordered},
             "score_bm25": pa.array(score[order]),
         }
-        return spark.createDataFrame(pa.table(columns), schema)
+        return local_probe.arrow_frame(spark, pa.table(columns), schema)

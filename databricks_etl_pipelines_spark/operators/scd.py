@@ -170,7 +170,8 @@ def scd2_apply(
             op_col=op_col, delete_op=delete_op,
         )
         if dim.exists():
-            dim.merge_upsert(spark, rebuilt, keys)
+            # a key's rebuilt history is many rows, all replacing its old ones
+            dim.merge_upsert(spark, rebuilt, keys, unique_keys=False)
         else:
             dim.create_or_overwrite(
                 rebuilt, bucket_by=keys, n_buckets=n_buckets

@@ -1018,7 +1018,7 @@ def _cosine_topk_local(
         # NaN here stands for NULL
         "cosine_sim": pa.array(cos[order], from_pandas=True),
     }
-    return spark.createDataFrame(pa.table(columns), schema)
+    return local_probe.arrow_frame(spark, pa.table(columns), schema)
 
 
 class IvfIndex:
@@ -1246,9 +1246,13 @@ class IvfIndex:
 
         Return contract: when the probed ``list_id=`` directories hold
         less than ``local_probe.LOCAL_PROBE_MAX_BYTES``, the probe reads
-        them on the driver and returns an EAGER ≤ k-row local relation:
-        values are frozen at call time and ``.collect()`` runs no Spark
-        job. Its schema, row order and doubles equal the Spark path's
+        them on the driver and returns a ≤ k-row
+        ``local_probe.ArrowFrame``: values are frozen at call time, and
+        ``.collect()``, ``.count()`` and ``.schema`` answer from its Arrow
+        rows with no JVM call (its JVM local relation is built on the
+        first other method; an id type outside
+        ``local_probe.arrow_frame``'s list gets an eager local relation
+        instead). Its schema, row order and doubles equal the Spark path's
         (strict-fold dot and norms, zero norms to NULL sorted last). The
         pruning plan is then not inspectable on the result; inspect it
         on an index above the threshold, where the result stays lazy

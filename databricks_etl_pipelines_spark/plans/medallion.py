@@ -21,7 +21,6 @@ differential tests can exclude nondeterminism.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -166,36 +165,33 @@ def silver_transform(bronze: DataFrame, stamps: bool = False) -> tuple[DataFrame
 VALID_COL = "__valid"
 
 
-def silver_projector() -> Callable[[DataFrame], tuple[DataFrame, list[str], list[str]]]:
-    """:func:`silver_transform` as ONE projection of the bronze batch,
-    for a stream that collects each micro-batch once and splits it on the
-    driver. The projection holds the bronze columns, ``quarantine_reason``,
-    the PII and enrichment columns and the null-safe valid flag
-    :data:`VALID_COL`; it returns with the quarantine's and the silver's
-    column names. Filtering it on the flag (or its negation) and selecting
-    those names gives the silver and quarantine of :func:`silver_transform`,
-    from the same Column builders. The Columns are built once per stream:
-    building them costs a Py4J round trip per literal and function call.
+def silver_projection(bronze: DataFrame) -> tuple[DataFrame, list[str], list[str]]:
+    """:func:`silver_transform` as ONE projection of ``bronze``, for a
+    stream that collects each micro-batch once and splits it on the
+    driver. The projection holds the bronze columns,
+    ``quarantine_reason``, the PII and enrichment columns and the
+    null-safe valid flag :data:`VALID_COL`; it returns with the
+    quarantine's and the silver's column names. Filtering it on the flag
+    (or its negation) and selecting those names gives the silver and
+    quarantine of :func:`silver_transform`, from the same Column builders.
+    A stream applies it once, to the streaming DataFrame, so its
+    ``withColumn`` calls are analysed once per query, not once per batch.
 
     The PII and enrichment columns are evaluated only where the flag is
     true, so no silver expression runs on a quarantined row (which could
     raise under ANSI mode); quarantined rows hold NULL there."""
     keep, _, reason = _split_columns()
-    valid = F.coalesce(keep, F.lit(False))
     derived = _pii_columns() + _enrich_columns(False)
-    guarded = [(name, F.when(F.col(VALID_COL), col)) for name, col in derived]
-
-    def project(bronze: DataFrame) -> tuple[DataFrame, list[str], list[str]]:
-        quarantine = bronze.columns + ["quarantine_reason"]
-        # withColumn keeps a replaced column in its place
-        silver = [c for c in bronze.columns if c not in PII_SOURCES]
-        silver += [name for name, _ in derived if name not in silver]
-        projected = _with_columns(
-            bronze, [("quarantine_reason", reason), (VALID_COL, valid)] + guarded
-        )
-        return projected, quarantine, silver
-
-    return project
+    quarantine = bronze.columns + ["quarantine_reason"]
+    # withColumn keeps a replaced column in its place
+    silver = [c for c in bronze.columns if c not in PII_SOURCES]
+    silver += [name for name, _ in derived if name not in silver]
+    projected = _with_columns(
+        bronze,
+        [("quarantine_reason", reason), (VALID_COL, F.coalesce(keep, F.lit(False)))]
+        + [(name, F.when(F.col(VALID_COL), col)) for name, col in derived],
+    )
+    return projected, quarantine, silver
 
 
 # ---------------------------------------------------------------------------

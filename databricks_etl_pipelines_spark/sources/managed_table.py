@@ -330,6 +330,28 @@ def _zorder_value(
     return z
 
 
+def _repeated_key_error(keys: Sequence[str], values: Sequence[object]) -> ValueError:
+    named = ", ".join(f"{k}={v!r}" for k, v in zip(keys, values))
+    return ValueError(
+        f"merge_upsert: key ({named}) appears more than once in the source; "
+        "a MERGE takes at most one source row per key"
+    )
+
+
+def _repeated_arrow_key(table: pa.Table, keys: Sequence[str]) -> tuple | None:
+    """The first non-NULL key of ``table`` that appears more than once, or
+    None. A key with a NULL matches no row, so it may repeat."""
+    counts = (
+        table.select(keys).drop_null()
+        .group_by(keys, use_threads=False)
+        .aggregate([([], "count_all")])
+    )
+    repeated = counts.filter(pc.field("count_all") > 1)
+    if not repeated.num_rows:
+        return None
+    return tuple(repeated.column(k)[0].as_py() for k in keys)
+
+
 def _link_tree(src_dir: str, dst_dir: str) -> None:
     """Hardlink every file under src_dir into dst_dir (copy on link failure).
     Used to carry untouched buckets across versions byte-identically."""
@@ -579,14 +601,40 @@ class ManagedTable:
         return v
 
     def _touched_buckets(
-        self, spark: SparkSession, rows: DataFrame, keys: list[str], n_buckets: int
+        self,
+        spark: SparkSession,
+        rows: DataFrame,
+        keys: list[str],
+        n_buckets: int,
+        unique_keys: bool = False,
     ) -> tuple[DataFrame, list[int], DataFrame]:
         """``rows`` with its bucket column, the sorted bucket ids it hashes
         into, and the latest version's rows in those buckets (bucket column
-        kept). The id set is at most n_buckets small ints via one distinct —
-        bounded driver traffic regardless of table or input size."""
+        kept). The id set is at most n_buckets small ints via one
+        aggregate — bounded driver traffic regardless of table or input
+        size. With ``unique_keys`` the same job counts each bucket's rows
+        of non-NULL keys and their distinct keys, and a repeated key
+        raises (:func:`_repeated_key_error`)."""
         rows = rows.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        touched = sorted(r[0] for r in rows.select(BUCKET_COL).distinct().collect())
+        if not unique_keys:
+            touched = sorted(
+                r[0] for r in rows.select(BUCKET_COL).distinct().collect()
+            )
+        else:
+            keyed = F.lit(True)
+            for k in keys:
+                keyed = keyed & F.col(k).isNotNull()
+            stats = rows.groupBy(BUCKET_COL).agg(
+                F.count(F.when(keyed, 1)).alias("n"),
+                F.count_distinct(*keys).alias("d"),
+            ).collect()
+            if any(r["n"] != r["d"] for r in stats):
+                repeated = (
+                    rows.dropna(subset=keys).groupBy(*keys).count()
+                    .filter(F.col("count") > 1).first()
+                )
+                raise _repeated_key_error(keys, repeated[: len(keys)])
+            touched = sorted(r[0] for r in stats)
         prior = self._read_internal(spark).filter(F.col(BUCKET_COL).isin(touched))
         return rows, touched, prior
 
@@ -846,6 +894,7 @@ class ManagedTable:
         keys: Sequence[str],
         merge_schema: bool = False,
         txn: tuple[str, int] | None = None,
+        unique_keys: bool = True,
     ) -> pa.Table | DataFrame | None:
         """Keyed upsert: matched keys take the source row, unmatched target
         rows carry over, new source keys insert (Delta MERGE
@@ -859,6 +908,17 @@ class ManagedTable:
         :meth:`create_or_overwrite`) already landed.
 
         Replaying the same source is a no-op state-wise, keyed or not.
+
+        A non-NULL key that appears in more than one source row raises
+        ``ValueError`` naming it, as Delta's MERGE fails on a multiple
+        match: on the driver path from the collected source, on the
+        bucket-pruned Spark path in the job that finds the touched
+        buckets. The full-rewrite path and the MERGE that creates the
+        table do not check (it would cost them a Spark job).
+        ``unique_keys=False`` drops the check for a source that carries
+        every row a key should end with (an SCD2 key's rebuilt history):
+        each source key's target rows are then replaced by all of its
+        source rows.
 
         On a table created with ``bucket_by=keys``, only buckets containing
         source keys are rewritten; untouched buckets are hardlinked into
@@ -889,6 +949,9 @@ class ManagedTable:
             local = self._touched_local(source, keyed, "merge")
             if local is not None:
                 src, touched, target_touched = local
+                repeated = unique_keys and _repeated_arrow_key(src, keys)
+                if repeated:
+                    raise _repeated_key_error(keys, repeated)
                 # an Arrow join never matches a NULL key, as Spark's
                 src_keys = src.select(keys)
                 untouched = target_touched.join(src_keys, keys, join_type="left anti")
@@ -901,7 +964,7 @@ class ManagedTable:
         drifted = self._drift_gate(target.schema, source.schema, "merge", merge_schema)
         if keyed and not drifted:
             src, touched, target_touched = self._touched_buckets(
-                spark, source, *keyed
+                spark, source, *keyed, unique_keys
             )
             src_keys = src.select(*keys).distinct()
             untouched = target_touched.join(src_keys, keys, "left_anti")

@@ -165,6 +165,7 @@ def _each_batch(
     body: Callable[[DataFrame, tuple[str, int]], None],
     processing_time: str | None = None,
     tables: Sequence[ManagedTable] = (),
+    cache_batch: bool = False,
 ) -> StreamingQuery:
     """Start ``stream`` with ``body`` run on each micro-batch: the one
     foreachBatch of this module. ``body(batch_df, txn)`` gets the batch's
@@ -172,7 +173,13 @@ def _each_batch(
     passes it to every ``ManagedTable`` write it makes. A replayed batch
     whose key every table in ``tables`` already holds returns before any
     Spark job runs (Delta's ``txnAppId``/``txnVersion`` idempotent
-    foreachBatch writes). Zero-row batches reach ``body`` too."""
+    foreachBatch writes). Zero-row batches reach ``body`` too.
+
+    Every action on ``batch_df`` runs the micro-batch's scan again, so a
+    ``body`` that reads it more than once (two writes, or a self-join or
+    union in one plan) sets ``cache_batch``: the batch is persisted for
+    the call, filled by the first action that reads it, and each batch's
+    input is scanned once."""
     app_id = None
 
     def each(batch_df: DataFrame, batch_id: int) -> None:
@@ -182,7 +189,14 @@ def _each_batch(
         txn = (app_id, batch_id)
         if tables and all(t._committed(txn) for t in tables):
             return
-        body(batch_df, txn)
+        if not cache_batch:
+            body(batch_df, txn)
+            return
+        batch_df = batch_df.persist()
+        try:
+            body(batch_df, txn)
+        finally:
+            batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(each).option(
         "checkpointLocation", checkpoint_dir
@@ -425,7 +439,8 @@ def curation_ingest_neardup(
             first.unpersist()
 
     return _each_batch(
-        stream, checkpoint_dir, body, processing_time, tables=(accepted,)
+        stream, checkpoint_dir, body, processing_time, tables=(accepted,),
+        cache_batch=True,
     )
 
 
@@ -625,7 +640,8 @@ def foreach_batch_merge(
         target.merge_upsert(batch_df.sparkSession, out, keys, txn=txn)
 
     return _each_batch(
-        stream, checkpoint_dir, body, processing_time, tables=(target,)
+        stream, checkpoint_dir, body, processing_time, tables=(target,),
+        cache_batch=True,
     )
 
 
@@ -761,8 +777,9 @@ class StreamingMedallion:
     reference's batch overwrite, 03:62-64). Per-batch cost tracks batch
     size + aggregate size, never table history.
 
-    Each batch starts with ONE collect: a projection of the batch
-    (``medallion.silver_projector`` plus the silver bucket id) is
+    Each batch starts with ONE collect: the stream is projected once, in
+    :meth:`start` (``medallion.silver_projection`` plus the silver bucket
+    id), so Spark plans that projection into each batch, which is
     collected as Arrow, up to ``managed_table.CAP_ROWS`` + 1 rows, and
     split on the driver on its valid flag; the quarantine append, the
     silver MERGE and the gold fold commit from that Arrow table. That
@@ -924,16 +941,16 @@ class StreamingMedallion:
     ) -> StreamingQuery:
         from databricks_etl_pipelines_spark.plans.medallion import (
             VALID_COL,
-            silver_projector,
+            silver_projection,
         )
 
-        project = silver_projector()
+        # projected once, on the stream: each batch arrives projected
+        stream, quarantine_cols, silver_cols = silver_projection(stream)
+        bucket = self.silver.merge_bucket(self.KEYS, self.bucket_silver)
+        if bucket:
+            stream = stream.withColumn(*bucket)
 
-        def process(batch_df: DataFrame, txn: tuple[str, int]) -> None:
-            projected, quarantine_cols, silver_cols = project(batch_df)
-            bucket = self.silver.merge_bucket(self.KEYS, self.bucket_silver)
-            if bucket:
-                projected = projected.withColumn(*bucket)
+        def process(projected: DataFrame, txn: tuple[str, int]) -> None:
             capped = projected.limit(managed_table.CAP_ROWS + 1)
             local = None if self._last_over_cap else capped.toArrow()
             n_rows = capped.count() if local is None else local.num_rows
@@ -1191,7 +1208,9 @@ def dsir_score_stream(
         scored = dsir_score(batch_df, ratios, text_col, id_col, n_buckets)
         scored.write.mode("overwrite").parquet(f"{out_dir}/batch_id={txn[1]}")
 
-    return _each_batch(stream, checkpoint_dir, body, processing_time)
+    return _each_batch(
+        stream, checkpoint_dir, body, processing_time, cache_batch=True
+    )
 
 
 def perplexity_gate_stream(
@@ -1440,7 +1459,8 @@ def bloom_dedup_stream(
         state.create_or_overwrite(merged, txn=txn)
 
     return _each_batch(
-        stream, checkpoint_dir, body, processing_time, tables=(state,)
+        stream, checkpoint_dir, body, processing_time, tables=(state,),
+        cache_batch=True,
     )
 
 
@@ -1600,7 +1620,8 @@ def snapshot_fold_stream(
         state.create_or_overwrite(snap, txn=txn)
 
     return _each_batch(
-        stream, checkpoint_dir, body, processing_time, tables=(state,)
+        stream, checkpoint_dir, body, processing_time, tables=(state,),
+        cache_batch=True,
     )
 
 

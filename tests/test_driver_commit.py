@@ -152,7 +152,12 @@ def _run_sequence(spark, root, bucketed, base, ops, caps, arrow=False):
         for op, rows, reorder in ops:
             df = _frame(spark, rows, reorder)
             if op == "merge":
-                mt.merge_upsert(spark, _source(df, bucketed, arrow), ["k"])
+                try:
+                    mt.merge_upsert(spark, _source(df, bucketed, arrow), ["k"])
+                except ValueError as e:
+                    assert "appears more than once" in str(e)
+                    paths.append((op, None))
+                    continue
             elif op == "append":
                 mt.append(_source(df, bucketed, arrow))
             else:
@@ -173,6 +178,12 @@ _NULLS = (None,) * 8
     True,
     [_NULLS] * 16,
     [("merge", [(2, _NULLS)], True), ("append", [(None, _NULLS)], False)],
+)
+# a key repeated in a pruned merge's source: both paths refuse the merge
+@example(
+    True,
+    [_NULLS] * 16,
+    [("merge", [(2, _NULLS), (2, _NULLS)], False), ("merge", [(2, _NULLS)], False)],
 )
 def test_commit_sequences_equal_on_both_paths(
     spark, tmp_path_factory, bucketed, base_vals, ops
@@ -199,12 +210,25 @@ def test_commit_sequences_equal_on_both_paths(
         assert state == driver
     assert runs["driver", True][1] == driver_paths
     assert runs["spark", True][1] == spark_paths
-    assert all(wrote for _, wrote in spark_paths)
+    # a pruned merge (bucketed) refuses a non-NULL key repeated in its
+    # source on both paths, and commits nothing
+    refused = [
+        op == "merge" and bucketed and _repeats_a_key(rows)
+        for op, rows, _ in ops
+    ]
+    assert spark_paths == [
+        (op, None if no else True) for (op, _, _), no in zip(ops, refused)
+    ]
     # a merge prunes only on a bucketed table; every append is small
     assert driver_paths == [
-        (op, op == "overwrite" or (op == "merge" and not bucketed))
-        for op, _ in spark_paths
+        (op, None if no else op == "overwrite" or (op == "merge" and not bucketed))
+        for (op, _, _), no in zip(ops, refused)
     ]
+
+
+def _repeats_a_key(rows):
+    keys = [k for k, _ in rows if k is not None]
+    return len(keys) != len(set(keys))
 
 
 _CELL = st.tuples(
@@ -456,6 +480,31 @@ def test_merge_into_buckets_with_no_files_runs_on_the_driver(spark, tmp_path):
     assert sorted(mt.read(spark).collect()) == sorted(
         spark.createDataFrame([(0, 0)], "id long, v long").union(src).collect()
     )
+
+
+@pytest.mark.parametrize("caps", [_DRIVER, _SPARK], ids=["driver", "spark"])
+def test_merge_refuses_a_key_repeated_in_the_source(spark, tmp_path, caps):
+    """A source that carries a key twice (a transaction and its
+    correction) raises ValueError naming the key, as Delta's MERGE does on
+    a multiple match, and the table keeps its version. A key with a NULL
+    matches no row, so it may repeat."""
+    mt = _bucketed(spark, str(tmp_path / "t"), n=16)
+    twice = spark.createDataFrame(
+        [(3, -1, "a", None), (1000, 0, "b", None), (3, -2, "c", None)],
+        _UPSERT_DDL,
+    )
+    nulls = spark.createDataFrame(
+        [(None, -1, "a", None), (None, -2, "b", None), (20, 0, "c", None)],
+        _UPSERT_DDL,
+    )
+    with pytest.MonkeyPatch.context() as mp:
+        _caps(mp, caps)
+        with pytest.raises(ValueError, match=r"key \(id=3\) appears more than once"):
+            mt.merge_upsert(spark, twice, ["id"])
+        assert mt.latest_version() == 0
+        mt.merge_upsert(spark, nulls, ["id"])
+        assert _spark_wrote(mt) == (caps is _SPARK)
+    assert mt.read(spark).count() == 16 + 3
 
 
 def test_small_pruned_merge_runs_one_spark_job(spark, tmp_path):
@@ -913,20 +962,36 @@ _FEEDS = {"docs": _docs_batches, "events": _events_batches}
 
 
 @pytest.fixture(scope="module")
-def clean_outputs(spark, tmp_path_factory):
-    """``clean_outputs(name)``: the outputs of operator ``name`` after an
-    uninterrupted drain of its three batches, computed on first use."""
+def clean_drain(spark, tmp_path_factory):
+    """``clean_drain(name)``: the outputs of operator ``name`` after an
+    uninterrupted drain of its three batches, the input rows each drain
+    scanned and each batch's rows, computed on first use."""
     done = {}
 
-    def outputs(name):
+    def drain(name):
         if name not in done:
             root = str(tmp_path_factory.mktemp(f"clean_{name}"))
             op = _op(spark, name, root)
-            _drain_each(spark, op, _FEEDS[op.feed](spark), root)
-            done[name] = op.outputs(spark)
+            batches = _FEEDS[op.feed](spark)
+            _, scanned = _drain_each(spark, op, batches, root)
+            done[name] = op.outputs(spark), scanned, [b.num_rows for b in batches]
         return done[name]
 
-    return outputs
+    return drain
+
+
+@pytest.fixture(scope="module")
+def clean_outputs(clean_drain):
+    """``clean_outputs(name)``: the outputs of ``clean_drain(name)``."""
+    return lambda name: clean_drain(name)[0]
+
+
+@pytest.mark.parametrize("name", _OP_NAMES)
+def test_stream_operator_scans_each_batch_once(clean_drain, name):
+    """Every operator reads each micro-batch's input once: the rows its
+    query reports scanned per batch equal the batch's rows."""
+    _, scanned, rows = clean_drain(name)
+    assert scanned == rows
 
 
 @pytest.mark.parametrize("name", _OP_NAMES)

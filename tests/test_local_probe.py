@@ -35,19 +35,24 @@ def _exact(rows):
 
 
 def _run(probe, limit):
+    """``(schema, exact rows, Row field names, count())`` of a probe, or
+    ``(error type, message)``."""
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(local_probe, "LOCAL_PROBE_MAX_BYTES", limit)
         try:
             df = probe()
-            return df.schema, _exact(df.collect())
+            rows = df.collect()
+            return df.schema, _exact(rows), [r.__fields__ for r in rows], df.count()
         except (ValueError, TornIndexError) as e:
             return type(e), str(e)
 
 
 def _same_on_both_paths(probe):
+    """The probe's ``(schema, exact rows)`` or ``(error type, message)``,
+    asserted equal on both paths, with the Row field names and count."""
     driver = _run(probe, _DRIVER)
     assert driver == _run(probe, _SPARK)
-    return driver
+    return driver[:2]
 
 
 WORDS = st.lists(
@@ -203,6 +208,81 @@ def test_driver_path_errors_and_no_jobs(spark, tmp_path):
         json.dump({"n_docs": 1, "sum_dl": 3}, f)
     err = _same_on_both_paths(lambda: idx.probe_bm25(spark, ("alpha",), k=2))
     assert err[0] is TornIndexError
+
+
+def test_driver_path_collect_calls_no_jvm(spark, tmp_path):
+    """A driver-path probe answers ``collect()``, ``count()`` and
+    ``schema`` from its Arrow rows: with ``createDataFrame`` refusing,
+    the BM25 and IVF probes still equal the Spark path's. A later
+    ``.orderBy(...).collect()`` on the same frame builds its JVM
+    relation."""
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta doc{i % 3}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    idx = InvertedTextIndex.build(docs, "text", "doc_id", str(tmp_path / "bm25"))
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), 1.0]) for i in range(8)] + [(8, [0.0, 0.0])],
+        "doc_id long, emb array<double>",
+    )
+    ivf = IvfIndex(str(tmp_path / "ivf"))
+    ivf.build(vecs, "emb", "doc_id", nlist=2, centroid_stride=3)
+    probes = (
+        lambda: idx.probe_bm25(spark, ("alpha", "doc1"), k=5),
+        lambda: ivf.probe(spark, [3.0, 1.0], "doc_id", k=9, nprobe=2),
+    )
+    want = [_run(p, _SPARK) for p in probes]
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame called")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(local_probe, "LOCAL_PROBE_MAX_BYTES", _DRIVER)
+        mp.setattr(type(spark), "createDataFrame", refuse)
+        frames = [p() for p in probes]
+        got = [
+            (df.schema, _exact(rows), [r.__fields__ for r in rows], df.count())
+            for df, rows in ((df, df.collect()) for df in frames)
+        ]
+    assert all(isinstance(df, local_probe.ArrowFrame) for df in frames)
+    assert got == want
+    top, near = frames
+    assert top.orderBy("doc_id").collect() == sorted(
+        top.collect(), key=lambda r: r.doc_id
+    )
+    assert near.orderBy(F.desc("doc_id")).collect() == sorted(
+        near.collect(), key=lambda r: -r.doc_id
+    )
+
+
+def test_ivf_string_ids_driver_path_equals_spark_path(spark, tmp_path):
+    """String ids (on a KMeans-built index: the strided build needs
+    integral ids): tied cosines order by the id's UTF-8 bytes on both
+    paths (upper case, digits and a non-ASCII letter among them), before
+    and after an append."""
+    ids = ["b", "B", "a10", "a9", "\u00e9", "z", "Z1", "", "a"]
+
+    def frame(names, offset):
+        return spark.createDataFrame(
+            [(n, [float((i + offset) % 3), 1.0]) for i, n in enumerate(names)],
+            "doc_id string, emb array<double>",
+        )
+
+    ivf = IvfIndex(str(tmp_path / "ivf"))
+    ivf.build_kmeans(frame(ids, 0), "emb", "doc_id", nlist=2, seed=7)
+    probe = lambda: ivf.probe(spark, [2.0, 1.0], "doc_id", k=7, nprobe=2)
+    schema, rows = _same_on_both_paths(probe)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(local_probe, "LOCAL_PROBE_MAX_BYTES", _DRIVER)
+        assert isinstance(probe(), local_probe.ArrowFrame)
+    assert schema["doc_id"].dataType.simpleString() == "string"
+    assert len(rows) == 7 and all(isinstance(r[0], str) for r in rows)
+    ivf.append(frame(["\u00e8", "Y", "a11"], 1), "emb", "doc_id")
+    _same_on_both_paths(
+        lambda: ivf.probe(spark, [2.0, 1.0], "doc_id", k=12, nprobe=2)
+    )
 
 
 def test_append_casts_ids_to_the_stored_type(spark, tmp_path):
