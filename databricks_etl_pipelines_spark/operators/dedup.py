@@ -568,8 +568,9 @@ class MinHashCorpusIndex:
         self, fam: _Family, sets: DataFrame, num_perm: int, bands: int, mode: str
     ) -> None:
         (
+            # hash-partitioned by band → one file per band directory
             fam.band_table(sets, num_perm, bands)
-            .repartition(bands, "band_id")
+            .repartition("band_id")
             .write.mode(mode)
             .partitionBy("band_id")
             .parquet(os.path.join(self.root, self.BANDS))

@@ -20,6 +20,18 @@ local relation is built only when another method needs it. No Spark job
 runs, neither in the probe nor in the caller's ``.collect()``. Larger
 probes take the Spark path unchanged.
 
+Repeated probes read the same part files, so :func:`read_files` keeps
+each file's decoded Arrow table in one process-wide LRU, keyed by
+``(path, columns)`` and bounded by :data:`LOCAL_PROBE_CACHE_BYTES`. This
+is safe because a part-file path names one content: Spark part names
+carry the write job's UUID, and ``managed_table._write_arrow`` names carry
+a ``uuid4``. An entry is still checked against the ``(st_ino, st_size,
+st_mtime_ns)`` of the stat :func:`capped_files` takes when it lists the
+file, so a file rewritten in place is read again. Every probe lists its
+directories, so an append's new file, or the new names a rebuild writes,
+are read fresh. Files rewritten in place by design (``bm25_meta.json``,
+``centroids.json``) are read outside this cache, every probe.
+
 Appends read the stored id type the same way, from a part file's footer
 (:func:`cast_to_stored`), so an index never holds files of two schemas.
 """
@@ -28,6 +40,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import OrderedDict
 from collections.abc import Iterable, Sequence
 
 import numpy as np
@@ -60,6 +74,14 @@ from pyspark.sql.types import (
 # 0.24 s against 1.7 s on Spark, ~13 MB of lists in 0.16 s against
 # 0.56 s). Perfbench's probes read ~11 KB (BM25) and ~37 KB (IVF).
 LOCAL_PROBE_MAX_BYTES = 16 << 20
+
+# A cap on driver memory, not a measured crossover. The most decoded Arrow
+# bytes :func:`read_files` keeps across probes; a table larger than this
+# is not kept, and the least recently read tables are dropped first. It
+# holds the decoded input of about half the largest probe the cap above
+# admits (postings decode to up to 7.0x their parquet bytes, see above),
+# and thousands of perfbench's probes, which read ~11 KB and ~37 KB.
+LOCAL_PROBE_CACHE_BYTES = 64 << 20
 
 
 # Spark types whose values Arrow's ``to_pylist()`` gives exactly as
@@ -120,6 +142,24 @@ def arrow_frame(
     return spark.createDataFrame(table, schema)
 
 
+class PartFile(str):
+    """A listed file's path, with the ``(st_ino, st_size, st_mtime_ns)``
+    of the stat taken when it was listed: :func:`read_files` checks its
+    cached table against it."""
+
+    sig: tuple[int, int, int]
+
+
+def _sig(st: os.stat_result) -> tuple[int, int, int]:
+    return st.st_ino, st.st_size, st.st_mtime_ns
+
+
+def _listed(path: str, st: os.stat_result) -> PartFile:
+    f = PartFile(path)
+    f.sig = _sig(st)
+    return f
+
+
 def probed_files(
     root: str, column: str, values: Iterable[object]
 ) -> list[str] | None:
@@ -131,11 +171,11 @@ def probed_files(
 
 
 def capped_files(dirs: Iterable[str]) -> list[str] | None:
-    """The files directly in ``dirs``, or None when they total
-    ``LOCAL_PROBE_MAX_BYTES`` or more. A missing directory holds no
-    rows. Subdirectories are skipped, and so are names starting with
-    ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files), as Spark's file index
-    skips them."""
+    """The files directly in ``dirs`` as :class:`PartFile` paths, or None
+    when they total ``LOCAL_PROBE_MAX_BYTES`` or more. A missing
+    directory holds no rows. Subdirectories are skipped, and so are names
+    starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files), as
+    Spark's file index skips them."""
     files, total = [], 0
     for d in dirs:
         try:
@@ -146,16 +186,52 @@ def capped_files(dirs: Iterable[str]) -> list[str] | None:
                 ]
         except FileNotFoundError:
             continue
-        files += [e.path for e in entries]
-        total += sum(e.stat().st_size for e in entries)
+        for e in entries:
+            st = e.stat()
+            files.append(_listed(e.path, st))
+            total += st.st_size
     return files if total < LOCAL_PROBE_MAX_BYTES else None
+
+
+# (path, columns) -> (sig, table, table.nbytes), least recently read first
+_CACHE: OrderedDict[
+    tuple[str, tuple[str, ...]], tuple[tuple[int, int, int], pa.Table, int]
+] = OrderedDict()
+_CACHE_LOCK = threading.Lock()
+_cache_bytes = 0
+
+
+def _read_part(path: str, columns: tuple[str, ...]) -> pa.Table:
+    """One file's ``columns``: the cached table when ``path`` still has
+    the stat it was cached under, else read, decoded and kept."""
+    global _cache_bytes
+    sig = getattr(path, "sig", None) or _sig(os.stat(path))
+    key = (str(path), columns)
+    with _CACHE_LOCK:
+        hit = _CACHE.get(key)
+        if hit is not None and hit[0] == sig:
+            _CACHE.move_to_end(key)
+            return hit[1]
+    table = pq.read_table(path, columns=list(columns))
+    size = table.nbytes
+    with _CACHE_LOCK:
+        old = _CACHE.pop(key, None)
+        if old is not None:
+            _cache_bytes -= old[2]
+        if size <= LOCAL_PROBE_CACHE_BYTES:
+            _CACHE[key] = (sig, table, size)
+            _cache_bytes += size
+        while _cache_bytes > LOCAL_PROBE_CACHE_BYTES:
+            _cache_bytes -= _CACHE.popitem(last=False)[1][2]
+    return table
 
 
 def read_files(files: Sequence[str], columns: list[str]) -> pa.Table | None:
     """The files' ``columns`` as one table, or None when their schemas
     differ (an append wrote another id type): Spark's reader reconciles
-    those, so the probe takes the Spark path."""
-    tables = [pq.read_table(f, columns=columns) for f in files]
+    those, so the probe takes the Spark path. Each file's table comes
+    from the process-wide cache (see the module docstring)."""
+    tables = [_read_part(f, tuple(columns)) for f in files]
     if any(not t.schema.equals(tables[0].schema) for t in tables[1:]):
         return None
     return pa.concat_tables(tables)

@@ -53,12 +53,20 @@ def _strict_math_log(jvm):
 def _strict_log(spark: SparkSession, x: float) -> float:
     """Driver-side twin of Spark's ``log``, which is
     ``java.lang.StrictMath.log``: called through the Py4J gateway, one
-    call per distinct query term. ``math.log`` and ``np.log`` differ from
-    StrictMath by 1 ulp on some (N, df) pairs, which can flip a
-    ``stable_round`` boundary, so the driver-path idf must use this to
-    stay bit-identical to the Spark path (the same parity rule as
-    :func:`_kr_fold`)."""
-    return float(_strict_math_log(spark._jvm)(float(x)))
+    call per distinct argument (see :func:`_strict_log_of`). ``math.log``
+    and ``np.log`` differ from StrictMath by 1 ulp on some (N, df) pairs,
+    which can flip a ``stable_round`` boundary, so the driver-path idf
+    must use this to stay bit-identical to the Spark path (the same
+    parity rule as :func:`_kr_fold`)."""
+    return _strict_log_of(spark._jvm, float(x))
+
+
+@functools.lru_cache(maxsize=4096)
+def _strict_log_of(jvm, x: float) -> float:
+    """``StrictMath.log(x)``, memoised: it is a pure function whose
+    result the Java spec fixes bit for bit, so a repeated (N, df) pair
+    makes no Py4J call."""
+    return float(_strict_math_log(jvm)(x))
 
 
 def _underfill_error(
@@ -177,8 +185,9 @@ class InvertedTextIndex:
         idx = cls(root)
         postings, dl = cls._postings(docs, text_col, id_col, n_buckets)
         (
-            # one task per bucket → ~one file per bucket directory
-            postings.repartition(n_buckets, "wb")
+            # hash-partitioned by bucket → one file per bucket directory;
+            # AQE sizes the task count to the data, not to n_buckets
+            postings.repartition("wb")
             .write.mode("overwrite")
             .partitionBy("wb")
             .parquet(os.path.join(root, cls.POSTINGS))
@@ -253,7 +262,7 @@ class InvertedTextIndex:
         with open(pend_path, "w") as f:
             json.dump({"n_docs": int(stats["n"]), "sum_dl": int(stats["s"])}, f)
         (
-            postings.repartition(meta["n_buckets"], "wb")
+            postings.repartition("wb")
             .write.mode("append")
             .partitionBy("wb")
             .parquet(os.path.join(self.root, self.POSTINGS))
@@ -442,45 +451,50 @@ class InvertedTextIndex:
         )
         if table is None:
             return None
-        table = table.filter(
-            pc.is_in(table["word"], value_set=pa.array(ordered))
-        )
+        words = pa.array(ordered)
+        table = table.filter(pc.is_in(table["word"], value_set=words))
         if local_probe.has_nulls(table):
             return None
-        postings = table.to_pandas()
-        # one row per (doc_id, n_tokens) group, a max(tf) column per term
-        tf = (
-            postings.groupby(["doc_id", "n_tokens", "word"])["tf"]
-            .max()
-            .unstack("word", fill_value=0)
-            .reindex(columns=list(ordered), fill_value=0)
-            .astype("int64")
+        # one row per (doc_id, n_tokens) group in sorted order, a max(tf)
+        # column per term (0 where the group lacks it)
+        term = pc.index_in(table["word"], value_set=words).to_numpy()
+        doc_keys, doc_code = np.unique(
+            table["doc_id"].to_numpy(), return_inverse=True
         )
-        if len(tf) < k:
-            raise _underfill_error(len(tf), ordered, k)
-        df = postings["word"].value_counts()
-        n_tokens = tf.index.get_level_values("n_tokens").to_numpy()
+        ntok_keys, ntok_code = np.unique(
+            table["n_tokens"].to_numpy(), return_inverse=True
+        )
+        groups, group = np.unique(
+            doc_code.astype(np.int64) * len(ntok_keys) + ntok_code,
+            return_inverse=True,
+        )
+        if len(groups) < k:
+            raise _underfill_error(len(groups), ordered, k)
+        doc_ids = doc_keys[groups // len(ntok_keys)]
+        n_tokens = ntok_keys[groups % len(ntok_keys)]
+        tf = np.zeros((len(groups), len(ordered)), dtype=np.int64)
+        np.maximum.at(tf, (group, term), table["tf"].to_numpy())
+        df = np.bincount(term, minlength=len(ordered))
         avgdl = float(sum_dl) / float(n_docs)
 
-        def term_score(t: str) -> np.ndarray:
+        def term_score(j: int) -> np.ndarray:
             # a term absent from the WHOLE corpus contributes exact +0.0
             idf = 0.0
-            if t in df.index:
-                d = float(df[t])
+            if df[j]:
+                d = float(df[j])
                 idf = _strict_log(
                     spark, 1.0 + ((float(n_docs) - d) + 0.5) / (d + 0.5)
                 )
-            tf_t = tf[t].to_numpy()
+            tf_t = tf[:, j]
             return idf * (
                 (tf_t * (k1 + 1.0))
                 / (tf_t + k1 * ((1.0 - b) + b * (n_tokens / avgdl)))
             )
 
-        score = term_score(ordered[0])
-        for t in ordered[1:]:
-            score = score + term_score(t)
+        score = term_score(0)
+        for j in range(1, len(ordered)):
+            score = score + term_score(j)
         score = np.floor(score * 10**6 + 0.5) / 10**6  # stable_round(…, 6)
-        doc_ids = tf.index.get_level_values("doc_id").to_numpy()
         order = local_probe.top_k_order(score, doc_ids, k)
         doc_type = table.schema.field("doc_id").type
         ntok_type = table.schema.field("n_tokens").type
@@ -495,7 +509,7 @@ class InvertedTextIndex:
         columns = {
             "doc_id": pa.array(doc_ids[order], doc_type),
             "n_tokens": pa.array(n_tokens[order], ntok_type),
-            **{f"tf_{t}": pa.array(tf[t].to_numpy()[order]) for t in ordered},
+            **{f"tf_{t}": pa.array(tf[order, j]) for j, t in enumerate(ordered)},
             "score_bm25": pa.array(score[order]),
         }
         return local_probe.arrow_frame(spark, pa.table(columns), schema)

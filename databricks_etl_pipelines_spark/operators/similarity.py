@@ -1113,10 +1113,10 @@ class IvfIndex:
             df, vec_col, id_col, nlist=nlist, seed=seed,
             sample_fraction=sample_fraction, max_iter=max_iter,
         )
-        # align the shuffle with the layout: one task per list → ~1 file
-        # per list directory
+        # align the shuffle with the layout: hash-partitioned by list →
+        # one file per list directory, in as many tasks as AQE sizes
         self._write(
-            assigned.repartition(nlist, "list_id"),
+            assigned.repartition("list_id"),
             list(enumerate(centroids.tolist())),
         )
 
@@ -1203,7 +1203,7 @@ class IvfIndex:
             "id bigint, v array<double>, list_id int, codes array<int>",
         )
         self._write(
-            encoded.repartition(nlist, "list_id"),
+            encoded.repartition("list_id"),
             list(enumerate(centroids.tolist())),
             pq={"m": m, "k": k, "sub": sub, "residual": residual,
                 "codebooks": cb.tolist()},

@@ -368,13 +368,20 @@ class MedallionPipeline:
         return self.bronze.append(feed)
 
     def run_silver(self) -> dict[str, int]:
+        """Silver and this run's quarantined row counts, read from the
+        tables' parquet footers (``ManagedTable.num_rows``): no count
+        job runs, unless the quarantine's previous version was vacuumed."""
         bronze = self.bronze.read(self.spark)
         silver, quarantined = silver_transform(bronze)
         self.silver.merge_upsert(self.spark, silver, ["transaction_id"])
-        self.quarantine.append(quarantined)
+        v = self.quarantine.append(quarantined)
+        before = self.quarantine.num_rows(v - 1) if v else 0
         return {
-            "silver": self.silver.read(self.spark).count(),
-            "quarantined": quarantined.count(),
+            "silver": self.silver.num_rows(),
+            "quarantined": (
+                self.quarantine.num_rows(v) - before
+                if before >= 0 else quarantined.count()
+            ),
         }
 
     def run_gold(self) -> dict[str, int]:
@@ -383,7 +390,7 @@ class MedallionPipeline:
         self.gold_features.create_or_overwrite(gold_cardholder_features(silver))
         self.gold_hourly.create_or_overwrite(gold_hourly_volume(silver))
         return {
-            "merchant": self.gold_merchant.read(self.spark).count(),
-            "features": self.gold_features.read(self.spark).count(),
-            "hourly": self.gold_hourly.read(self.spark).count(),
+            "merchant": self.gold_merchant.num_rows(),
+            "features": self.gold_features.num_rows(),
+            "hourly": self.gold_hourly.num_rows(),
         }

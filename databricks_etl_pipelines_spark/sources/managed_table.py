@@ -223,6 +223,11 @@ def _as_frame(
     return (spark or SparkSession.active()).createDataFrame(source)
 
 
+def _hidden(name: str) -> bool:
+    """Whether Spark's file index skips the file or directory ``name``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _partitioned(vdir: str) -> bool:
     with os.scandir(vdir) as it:
         return any(e.is_dir() for e in it)
@@ -281,9 +286,10 @@ def _zorder_value(
     """Interleaved-bit Z-value over quantile codes of the cluster columns.
 
     Each column is coded to ``bits`` bits by counting sampled quantile
-    boundaries ≤ value (approxQuantile on the driver — distributed sketch,
-    no full sort), then the per-column codes are bit-interleaved so files
-    sorted by the result cover a narrow hyper-rectangle in EVERY cluster
+    boundaries ≤ value (one approxQuantile job over every cluster column —
+    a distributed sketch per column, no full sort), then the per-column
+    codes are bit-interleaved so files sorted by the result cover a
+    narrow hyper-rectangle in EVERY cluster
     dimension — multi-column data skipping, where linear range clustering
     only narrows the leading key. This is the space-filling-curve layout
     Delta's OPTIMIZE ZORDER BY computes (reference claim: 03:207-216).
@@ -300,16 +306,20 @@ def _zorder_value(
 
         return merge
 
-    codes = []
+    dtypes = dict(df.dtypes)
+    xs = []
     for c in cols:
-        dtype = dict(df.dtypes)[c]
         x = F.col(c)
-        if dtype == "date":
+        if dtypes[c] == "date":
             x = x.cast("timestamp")
-        x = x.cast("double")
-        bounds = sorted(
-            set(df.select(x.alias("__zq")).approxQuantile("__zq", qs, 0.001))
-        )
+        xs.append(x.cast("double"))
+    aliases = [f"__zq{j}" for j in range(len(cols))]
+    quantiles = df.select(
+        *[x.alias(a) for x, a in zip(xs, aliases)]
+    ).approxQuantile(aliases, qs, 0.001)
+    codes = []
+    for x, qv in zip(xs, quantiles):
+        bounds = sorted(set(qv))
         arr = F.array(*[F.lit(float(b)) for b in bounds])
         raw = F.aggregate(arr, F.lit(0), _boundary_counter(x))
         # scale to the full bit range: a low-cardinality column would
@@ -439,11 +449,29 @@ class ManagedTable:
             base = self.read(spark)
         return base.join(want, keys, "left_semi")
 
+    def num_rows(self, version: int | None = None) -> int:
+        """Rows in ``version`` (the latest when None), summed from its
+        parquet footers with pyarrow: no Spark job runs. -1 when the
+        version is not on disk (vacuumed)."""
+        v = self.latest_version() if version is None else version
+        vdir = self._version_dir(v)
+        if not os.path.isdir(vdir):
+            return -1
+        rows = 0
+        for dirpath, dirnames, filenames in os.walk(vdir):
+            dirnames[:] = [d for d in dirnames if not _hidden(d)]
+            for fn in filenames:
+                if not _hidden(fn):
+                    rows += pq.read_metadata(os.path.join(dirpath, fn)).num_rows
+        return rows
+
     def history(self, spark: SparkSession) -> DataFrame:
-        """DESCRIBE HISTORY equivalent: one row per committed version."""
+        """DESCRIBE HISTORY equivalent: one row per committed version, with
+        its row count from :meth:`num_rows` (-1 once vacuumed)."""
         return spark.createDataFrame(
             [
-                (e["version"], e["operation"], e["timestamp"], e.get("rows", -1))
+                (e["version"], e["operation"], e["timestamp"],
+                 self.num_rows(e["version"]))
                 for e in _read_log(self.root)
             ],
             "version INT, operation STRING, timestamp DOUBLE, rows LONG",
@@ -539,9 +567,10 @@ class ManagedTable:
 
         ``spec=(keys, n_buckets)`` writes the bucket layout: the bucket
         column is computed if ``data`` lacks it, and the shuffle is aligned
-        with the layout (partition by bucket before the partitioned write,
-        so each bucket dir is written by its own task: ~1 file per bucket
-        instead of shuffle.partitions files per bucket). ``touched`` makes
+        with the layout (hash-partition by bucket before the partitioned
+        write, so each bucket dir is written by one task: one file per
+        bucket instead of one per shuffle partition, in as many tasks as
+        AQE sizes the data to). ``touched`` makes
         it a pruned commit: ``data`` holds only those buckets, and every
         other bucket of the previous version is carried over by hardlink —
         no data IO, and a pytest can assert byte-identity across
@@ -572,8 +601,7 @@ class ManagedTable:
             if spec:
                 if BUCKET_COL not in data.columns:
                     data = data.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-                width = n_buckets if touched is None else max(len(touched), 1)
-                data = data.repartition(width, BUCKET_COL)
+                data = data.repartition(BUCKET_COL)
             schema = data.schema
             writer = data.write.mode("overwrite")
             if partition_by:

@@ -1125,3 +1125,61 @@ def test_stream_operator_replays_exactly_once(spark, tmp_path, clean_outputs, na
     if op.keyed:
         assert jobs == 0
     assert op.outputs(spark) == clean_outputs(name)
+
+
+def _jobs_in(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spark_bucketed_writes_leave_one_file_per_bucket(spark, tmp_path, monkeypatch):
+    """The Spark path's bucketed overwrite and pruned append
+    hash-partition by bucket: every bucket directory of both versions
+    holds one part file."""
+    _caps(monkeypatch, _SPARK)
+    mt = ManagedTable(str(tmp_path / "b"))
+    mt.create_or_overwrite(
+        spark.range(0, 400).select("id", (F.col("id") % 5).alias("v")),
+        bucket_by=["id"], n_buckets=8,
+    )
+    mt.append(spark.range(1000, 1003).select("id", F.col("id").alias("v")))
+    assert _spark_wrote(mt) and _read_log(mt.root)[-1]["buckets_rewritten"] < 8
+    for v in (0, 1):
+        dirs = glob.glob(os.path.join(mt._version_dir(v), "__bucket=*"))
+        assert len(dirs) == 8
+        assert all(len(glob.glob(os.path.join(d, "part-*"))) == 1 for d in dirs)
+
+
+def test_num_rows_and_history_rows_equal_reads(spark, tmp_path):
+    """``num_rows`` sums a version's footers without a Spark job, across
+    bucketed, partitioned, driver- and Spark-written versions; history
+    shows it per version, and -1 once a version is vacuumed."""
+    mt = ManagedTable(str(tmp_path / "t"))
+    mt.create_or_overwrite(
+        spark.range(0, 300).select("id", (F.col("id") % 7).alias("v")),
+        bucket_by=["id"], n_buckets=4,
+    )
+    mt.append(spark.createDataFrame([(1000, 1), (1001, 2)], "id long, v long"))
+    mt.merge_upsert(
+        spark, spark.createDataFrame([(5, -1), (2000, 3)], "id long, v long"), ["id"]
+    )
+    mt.create_or_overwrite(
+        spark.range(0, 50).select("id", (F.col("id") % 3).alias("v")),
+        partition_by=["v"],
+    )
+    reads = [mt.read(spark, version=v).count() for v in range(4)]
+    assert reads == [300, 302, 303, 50]
+    counted, jobs = _jobs_in(
+        spark, "num-rows", lambda: [mt.num_rows(v) for v in range(4)]
+    )
+    assert counted == reads and jobs == 0
+    assert mt.num_rows() == 50
+    assert [r.rows for r in mt.history(spark).collect()] == reads
+    mt.vacuum(keep_last=2)
+    assert [r.rows for r in mt.history(spark).collect()] == [-1, -1, 303, 50]

@@ -13,6 +13,8 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -350,12 +352,210 @@ def test_read_files_leaves_differing_schemas_to_spark(tmp_path):
     """An append whose ids are int where the build's were bigint leaves
     files of two schemas in one directory: the driver path declines them
     (None) instead of failing to concatenate."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     paths = []
     for name, id_type in (("a", pa.int64()), ("b", pa.int64()), ("c", pa.int32())):
         paths.append(str(tmp_path / f"part-{name}.parquet"))
         pq.write_table(pa.table({"id": pa.array([1, 2], id_type)}), paths[-1])
     assert local_probe.read_files(paths[:2], ["id"])["id"].to_pylist() == [1, 2] * 2
     assert local_probe.read_files(paths, ["id"]) is None
+
+
+def _cached(root):
+    """The cache entries ``(path, columns) -> (sig, table, bytes)`` of
+    files under ``root``."""
+    return {
+        key: entry for key, entry in local_probe._CACHE.items()
+        if key[0].startswith(root)
+    }
+
+
+def test_cached_probes_follow_appends_rebuilds_and_evictions(
+    spark, tmp_path, monkeypatch
+):
+    """Warm BM25 and IVF probes served from the file cache equal the
+    forced Spark path after an append adds a file to a probed bucket or
+    list, after a rebuild at the same root, and after the cache evicted
+    the index's files."""
+    def docs(texts, first_id):
+        return spark.createDataFrame(
+            [(first_id + i, t) for i, t in enumerate(texts)],
+            "doc_id long, text string",
+        )
+
+    def vecs(n, first_id):
+        return spark.createDataFrame(
+            [(first_id + i, [float((i * 3) % 5), 1.0 + i % 2]) for i in range(n)],
+            "doc_id long, emb array<double>",
+        )
+
+    bm25 = InvertedTextIndex.build(
+        docs(["alpha beta", "beta alpha", "alpha gamma", "beta delta"], 0),
+        "text", "doc_id", str(tmp_path / "bm25"),
+    )
+    ivf = IvfIndex(str(tmp_path / "ivf"))
+    ivf.build(vecs(6, 0), "emb", "doc_id", nlist=2, centroid_stride=3)
+
+    def check(n_docs, n_vecs):
+        """Both probes on both paths; every doc and vector is returned."""
+        got = [
+            _same_on_both_paths(
+                lambda: bm25.probe_bm25(spark, ("alpha", "beta"), k=n_docs)
+            ),
+            _same_on_both_paths(
+                lambda: ivf.probe(spark, [2.0, 1.0], "doc_id", k=n_vecs,
+                                  nprobe=2)
+            ),
+        ]
+        return [sorted(r[0] for r in rows) for _, rows in got]
+
+    assert check(4, 6) == [[0, 1, 2, 3], list(range(6))]
+    warm = _cached(str(tmp_path))
+    assert warm
+    assert check(4, 6) == [[0, 1, 2, 3], list(range(6))]
+    assert _cached(str(tmp_path)).keys() == warm.keys()
+
+    # an append adds a file to a probed bucket and to a probed list
+    bm25.append(docs(["alpha beta beta", "beta"], 100), "text", "doc_id")
+    ivf.append(vecs(2, 100), "emb", "doc_id")
+    assert check(6, 8) == [[0, 1, 2, 3, 100, 101], [*range(6), 100, 101]]
+
+    # a rebuild at the same root writes new part names
+    bm25 = InvertedTextIndex.build(
+        docs(["beta alpha alpha", "alpha", "beta"], 200), "text", "doc_id",
+        bm25.root,
+    )
+    ivf.build(vecs(5, 200), "emb", "doc_id", nlist=2, centroid_stride=3)
+    rebuilt = check(3, 5)
+    assert rebuilt == [[200, 201, 202], list(range(200, 205))]
+
+    # a bound that holds only the table read last: that read evicts the
+    # index's files, and the probes read them again
+    assert _cached(bm25.root) and _cached(ivf.root)
+    other = str(tmp_path / "other.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3]}), other)
+    bound = pq.read_table(other).nbytes
+    monkeypatch.setattr(local_probe, "LOCAL_PROBE_CACHE_BYTES", bound)
+    local_probe.read_files([other], ["id"])
+    assert not _cached(bm25.root) and not _cached(ivf.root)
+    assert check(3, 5) == rebuilt
+    assert local_probe._cache_bytes <= bound
+
+
+def test_read_files_keeps_tables_up_to_the_cache_bound(tmp_path, monkeypatch):
+    """A table larger than ``LOCAL_PROBE_CACHE_BYTES`` is read but not
+    kept; one within it is kept, and is read again once its file is
+    rewritten in place."""
+    path = str(tmp_path / "part-0.parquet")
+    pq.write_table(pa.table({"id": list(range(100))}), path)
+    size = pq.read_table(path).nbytes
+    key = (path, ("id",))
+
+    monkeypatch.setattr(local_probe, "LOCAL_PROBE_CACHE_BYTES", size - 1)
+    assert local_probe.read_files([path], ["id"])["id"].to_pylist() == list(range(100))
+    assert key not in local_probe._CACHE
+
+    monkeypatch.setattr(local_probe, "LOCAL_PROBE_CACHE_BYTES", size)
+    local_probe.read_files([path], ["id"])
+    assert key in local_probe._CACHE
+
+    pq.write_table(pa.table({"id": [7, 8]}), path)
+    assert local_probe.read_files([path], ["id"])["id"].to_pylist() == [7, 8]
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_bm25_int_and_string_ids_driver_path_equals_spark_path(
+    spark, tmp_path, id_type
+):
+    """The numpy scoring groups and orders int and string doc ids as the
+    Spark path does: tied scores order by the id (a string's UTF-8
+    bytes), a repeated query term counts once, a term absent from the
+    corpus adds +0.0, and an under-filled probe raises alike."""
+    texts = ["ant bee", "bee ant", "ant ant cat", "cat", "bee", "ant bee cat",
+             "dog", "ant", "bee bee"]
+    ids = (["b", "B", "a10", "a9", "é", "z", "Z1", "", "a"]
+           if id_type == "string" else [3, -1, 7, 0, 12, 5, 9, 2, 4])
+    idx = InvertedTextIndex.build(
+        spark.createDataFrame(list(zip(ids, texts)),
+                              f"doc_id {id_type}, text string"),
+        "text", "doc_id", str(tmp_path / "bm25"),
+    )
+    for terms, k in ((("ant", "bee", "ant"), 6), (("bee", "yak"), 5),
+                     (("cat", "dog"), 4)):
+        schema, rows = _same_on_both_paths(
+            lambda: idx.probe_bm25(spark, terms, k=k)
+        )
+        assert schema["doc_id"].dataType.simpleString() == id_type
+        assert len(rows) == k
+    err = _same_on_both_paths(lambda: idx.probe_bm25(spark, ("cat", "yak"), k=4))
+    assert err[0] is ValueError and "only 3 documents match" in err[1]
+
+
+def test_strict_log_memo_returns_the_jvm_bits(spark):
+    """The memoised ``_strict_log`` gives ``StrictMath.log``'s bits over a
+    sweep of idf arguments, and a repeated argument makes no JVM call."""
+    from databricks_etl_pipelines_spark.operators.retrieval import (
+        _strict_log,
+        _strict_log_of,
+    )
+
+    jvm_log = spark._jvm.java.lang.StrictMath.log
+    xs = [
+        1.0 + ((float(n) - d) + 0.5) / (d + 0.5)
+        for n in (1, 2, 7, 100, 997, 20_000, 10**9)
+        for d in range(1, min(n, 40) + 1)
+    ]
+    want = [float(jvm_log(x)).hex() for x in xs]
+    assert [_strict_log(spark, x).hex() for x in xs] == want
+    misses = _strict_log_of.cache_info().misses
+    assert [_strict_log(spark, x).hex() for x in xs] == want
+    assert _strict_log_of.cache_info().misses == misses
+
+
+def _new_files_per_dir(root, prefix, before=frozenset()):
+    """For each ``prefix*`` directory under ``root``, its part files not
+    in ``before``; and the set of every part file."""
+    new, every = {}, set()
+    for d in os.listdir(root):
+        if d.startswith(prefix):
+            for f in os.listdir(os.path.join(root, d)):
+                if not f.startswith(("_", ".")):
+                    path = os.path.join(d, f)
+                    every.add(path)
+                    if path not in before:
+                        new[d] = new.get(d, 0) + 1
+    return new, every
+
+
+def test_index_writes_leave_one_file_per_bucket_directory(spark, tmp_path):
+    """The BM25 posting and MinHash band writers hash-partition by the
+    bucket column, so a build and an append each write one part file
+    into every bucket directory they touch."""
+    from databricks_etl_pipelines_spark.operators.dedup import (
+        MinHashCorpusIndex,
+    )
+
+    def docs(n, first_id):
+        return spark.createDataFrame(
+            [(first_id + i, f"w{i % 13} w{i % 7} shared words doc{i}")
+             for i in range(n)],
+            "doc_id long, text string",
+        )
+
+    bm25 = InvertedTextIndex.build(
+        docs(60, 0), "text", "doc_id", str(tmp_path / "bm25"), n_buckets=16
+    )
+    postings = os.path.join(bm25.root, bm25.POSTINGS)
+    built, files = _new_files_per_dir(postings, "wb=")
+    assert len(built) > 1 and set(built.values()) == {1}
+    bm25.append(docs(20, 100), "text", "doc_id")
+    appended, _ = _new_files_per_dir(postings, "wb=", files)
+    assert appended and set(appended.values()) == {1}
+
+    mh = MinHashCorpusIndex.build(docs(60, 0), "text", "doc_id",
+                                  str(tmp_path / "mh"), bands=8)
+    bands = os.path.join(mh.root, mh.BANDS)
+    built, files = _new_files_per_dir(bands, "band_id=")
+    assert len(built) == 8 and set(built.values()) == {1}
+    mh.add(spark, docs(20, 100), "text", "doc_id")
+    appended, _ = _new_files_per_dir(bands, "band_id=", files)
+    assert len(appended) == 8 and set(appended.values()) == {1}

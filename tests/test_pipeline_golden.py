@@ -945,3 +945,71 @@ def test_manifest_entry_per_write_path(spark, tmp_path, path):
     bucket_dirs = glob.glob(os.path.join(mt.root, f"_v{v}", "__bucket=*"))
     assert mt.bucket_spec() == ((["id"], 8) if bucketed else None)
     assert (len(bucket_dirs) == 8) if bucketed else not bucket_dirs
+
+
+def test_pipeline_counts_equal_table_reads(spark, tmp_path):
+    """``run_silver`` and ``run_gold`` count from the tables' footers:
+    their counts equal the tables' reads, and ``quarantined`` is the
+    rows this run appended, on a first run and on a replay."""
+    p = MedallionPipeline(spark, str(tmp_path / "m"))
+    p.ingest_bronze(batch_transactions(spark, 400, stamps=True))
+    for run in (0, 1):
+        counts = p.run_silver()
+        assert counts["silver"] == p.silver.read(spark).count()
+        quarantined = p.quarantine.read(spark).count()
+        if run:
+            quarantined -= p.quarantine.read(spark, version=0).count()
+        assert counts["quarantined"] == quarantined == expected_quarantine(400)
+    counts = p.run_gold()
+    assert counts == {
+        "merchant": p.gold_merchant.read(spark).count(),
+        "features": p.gold_features.read(spark).count(),
+        "hourly": p.gold_hourly.read(spark).count(),
+    }
+
+
+def test_zorder_value_runs_one_quantile_job(spark, monkeypatch):
+    """``_zorder_value`` sketches every cluster column in one
+    approxQuantile call, which runs the jobs of a one-column call, and
+    whose bounds equal one call per column."""
+    from pyspark.sql import functions as F
+
+    from databricks_etl_pipelines_spark.sources.managed_table import _zorder_value
+
+    df = spark.range(0, 3000).select(
+        (F.col("id") % 7).alias("k"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 50).cast("int")).alias("d"),
+        F.when(F.col("id") % 11 != 0, F.col("id") * 3 % 100 / 7.0).alias("x"),
+    )
+    cols = ["k", "d", "x"]
+    qs = [(i + 1) / 256 for i in range(255)]
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    calls = []
+    frame = type(df)
+    real = frame.approxQuantile
+
+    def spy(self, col, probabilities, relative_error):
+        out = real(self, col, probabilities, relative_error)
+        calls.append(out)
+        return out
+
+    monkeypatch.setattr(frame, "approxQuantile", spy)
+    _, zorder_jobs = jobs("zorder-quantiles", lambda: _zorder_value(df, cols))
+    monkeypatch.undo()
+    assert len(calls) == 1
+    for c, got in zip(cols, calls[0]):
+        x = F.col(c).cast("timestamp") if c == "d" else F.col(c)
+        one = df.select(x.cast("double").alias("__zq"))
+        want, one_jobs = jobs(
+            f"quantiles-{c}", lambda: one.approxQuantile("__zq", qs, 0.001)
+        )
+        assert want == got and zorder_jobs == one_jobs
