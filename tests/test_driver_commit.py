@@ -1127,17 +1127,6 @@ def test_stream_operator_replays_exactly_once(spark, tmp_path, clean_outputs, na
     assert op.outputs(spark) == clean_outputs(name)
 
 
-def _jobs_in(spark, group, fn):
-    """``fn()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_spark_bucketed_writes_leave_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """The Spark path's bucketed overwrite and pruned append
     hash-partition by bucket: every bucket directory of both versions
@@ -1156,7 +1145,7 @@ def test_spark_bucketed_writes_leave_one_file_per_bucket(spark, tmp_path, monkey
         assert all(len(glob.glob(os.path.join(d, "part-*"))) == 1 for d in dirs)
 
 
-def test_num_rows_and_history_rows_equal_reads(spark, tmp_path):
+def test_num_rows_and_history_rows_equal_reads(spark, tmp_path, jobs_in):
     """``num_rows`` sums a version's footers without a Spark job, across
     bucketed, partitioned, driver- and Spark-written versions; history
     shows it per version, and -1 once a version is vacuumed."""
@@ -1175,8 +1164,8 @@ def test_num_rows_and_history_rows_equal_reads(spark, tmp_path):
     )
     reads = [mt.read(spark, version=v).count() for v in range(4)]
     assert reads == [300, 302, 303, 50]
-    counted, jobs = _jobs_in(
-        spark, "num-rows", lambda: [mt.num_rows(v) for v in range(4)]
+    counted, jobs = jobs_in(
+        "num-rows", lambda: [mt.num_rows(v) for v in range(4)]
     )
     assert counted == reads and jobs == 0
     assert mt.num_rows() == 50

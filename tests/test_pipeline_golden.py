@@ -968,7 +968,7 @@ def test_pipeline_counts_equal_table_reads(spark, tmp_path):
     }
 
 
-def test_zorder_value_runs_one_quantile_job(spark, monkeypatch):
+def test_zorder_value_runs_one_quantile_job(spark, monkeypatch, jobs_in):
     """``_zorder_value`` sketches every cluster column in one
     approxQuantile call, which runs the jobs of a one-column call, and
     whose bounds equal one call per column."""
@@ -983,15 +983,6 @@ def test_zorder_value_runs_one_quantile_job(spark, monkeypatch):
     )
     cols = ["k", "d", "x"]
     qs = [(i + 1) / 256 for i in range(255)]
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     calls = []
     frame = type(df)
@@ -1003,13 +994,13 @@ def test_zorder_value_runs_one_quantile_job(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(frame, "approxQuantile", spy)
-    _, zorder_jobs = jobs("zorder-quantiles", lambda: _zorder_value(df, cols))
+    _, zorder_jobs = jobs_in("zorder-quantiles", lambda: _zorder_value(df, cols))
     monkeypatch.undo()
     assert len(calls) == 1
     for c, got in zip(cols, calls[0]):
         x = F.col(c).cast("timestamp") if c == "d" else F.col(c)
         one = df.select(x.cast("double").alias("__zq"))
-        want, one_jobs = jobs(
+        want, one_jobs = jobs_in(
             f"quantiles-{c}", lambda: one.approxQuantile("__zq", qs, 0.001)
         )
         assert want == got and zorder_jobs == one_jobs
